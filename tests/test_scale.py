@@ -1437,20 +1437,15 @@ def test_bucketed_kcore_round_no_pair_exchange_on_bucket_key(spark):
     def _indent(line: str) -> int:
         return len(line) - len(line.lstrip(" :+-*("))
 
-    def _subtree(plan: str, needle: str) -> list[str]:
-        """Lines strictly below (more indented than) the first line
-        containing ``needle``."""
-        lines = plan.splitlines()
-        for i, ln in enumerate(lines):
-            if needle in ln:
-                base = _indent(ln)
-                out = []
-                for nxt_ln in lines[i + 1:]:
-                    if nxt_ln.strip() and _indent(nxt_ln) <= base:
-                        break
-                    out.append(nxt_ln)
-                return out
-        return []
+    def _subtree(lines: list[str], i: int) -> list[str]:
+        """Lines strictly below (more indented than) line ``i``."""
+        base = _indent(lines[i])
+        out = []
+        for nxt_ln in lines[i + 1:]:
+            if nxt_ln.strip() and _indent(nxt_ln) <= base:
+                break
+            out.append(nxt_ln)
+        return out
 
     name = _bucketed_edges_table(spark, SF_DIR)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1509,11 +1504,12 @@ def test_bucketed_kcore_round_no_pair_exchange_on_bucket_key(spark):
         # the opposite parity (the s/dst side here), and the same-parity
         # (bucket-key) semi must ride the layout exchange-free.
         pair_moves = []
-        for ln in plan.splitlines():
+        lines = plan.splitlines()
+        for i, ln in enumerate(lines):
             m = re.search(r"Exchange hashpartitioning\(([^)]+)\)", ln)
             if not m:
                 continue
-            below = _subtree(plan, ln.strip())
+            below = _subtree(lines, i)
             kind = None
             for bl in below:
                 if "HashAggregate" in bl:
@@ -1632,7 +1628,12 @@ def test_bucketed_tiers_release_their_caches(spark):
         }
 
     reg = load_all()
-    for name in ("graph_lpa_bucketed", "graph_bfs_bucketed", "graph_kcore_bucketed"):
+    for name in (
+        "graph_pagerank_bucketed",
+        "graph_lpa_bucketed",
+        "graph_bfs_bucketed",
+        "graph_kcore_bucketed",
+    ):
         before = ids()
         df = reg[name].fn(spark, SF_DIR)
         leaked = ids() - before

@@ -17,6 +17,8 @@ importance-propagation sibling).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -82,19 +84,49 @@ FROM r{PR_ITERS}"""
     return "".join(parts)
 
 
-def _build_pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The weighted bidirectional purchase-graph edge list (shared by
-    PageRank, LPA and BFS via ``memo_publish("pagerank_edges_w", ...)``)."""
+def _cust_node(key: str):
+    """Node id of customer ``key``: ``2c``. Purchase-graph node ids are
+    parity-encoded (customers even, suppliers odd) so the two sides share
+    one id space without collisions; this helper, :func:`_supp_node`,
+    :func:`_is_cust`, :func:`_is_supp` and :func:`_entity_key` are the one
+    place the encoding lives (the DuckDB oracles spell it in SQL)."""
+    return F.col(key) * 2
+
+
+def _supp_node(key: str):
+    """Node id of supplier ``key``: ``2s+1``."""
+    return F.col(key) * 2 + 1
+
+
+def _is_cust(node: str):
+    return F.col(node) % 2 == 0
+
+
+def _is_supp(node: str):
+    return F.col(node) % 2 == 1
+
+
+def _entity_key(node: str):
+    """The customer/supplier key a node id encodes."""
+    return F.expr(f"{node} div 2")
+
+
+def _weighted_pairs(spark: SparkSession, sf_dir: str, c: str, s: str) -> DataFrame:
+    """``(c, s, w)``: customer node, supplier node and the number of line
+    items they traded, one row per distinct pair."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
+    return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c_node"),
-            (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-        )
+        .groupBy(_cust_node("o_custkey").alias(c), _supp_node("l_suppkey").alias(s))
         .agg(F.count("*").alias("w"))
     )
+
+
+def _build_pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted bidirectional purchase-graph edge list, published once
+    per corpus and read back through :func:`_shared_edges`."""
+    pairs = _weighted_pairs(spark, sf_dir, "c_node", "s_node")
     # Both edge directions come from ONE evaluation of pairs via
     # explode, not a self-union: a union would plan the lineitem⋈orders
     # join + aggregate twice (two concurrent orders broadcasts, double
@@ -123,92 +155,32 @@ def _build_pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.withColumn("wout", wout)
 
 
-@register(
-    "graph_pagerank_purchases",
-    _pr_oracle(),
-    doc=f"PageRank over the customer<->supplier purchase graph, "
-    f"{PR_ITERS} iterations in exact integer micro-units (order-free "
-    "inflow sums, bit-identical across engines and cluster sizes)",
-)
-def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank on the bipartite purchase graph: nodes are customers
-    (``custkey*2``) and suppliers (``suppkey*2+1``), edges both directions
-    weighted by lineitem count, damping 0.85, :data:`PR_ITERS` iterations.
-
-    Exactness: ranks are integer micro-units of probability mass
-    (:data:`PR_MASS` total). Each edge contribution is
-    ``(r_src * w) div w_out`` and damping is integer percent arithmetic,
-    so the per-node inflow is a sum of exact integers — reduction-order
-    free, hence bit-identical between Spark's parallel aggregation and
-    DuckDB's single-threaded oracle, at any partitioning. (Floor division
-    leaks < 1 micro-unit per edge per iteration of mass; PageRank only
-    needs relative ranks, and the leak is deterministic.)
-
-    Scale shape: the edge table builds with one join + one aggregate and
-    is persisted (at cluster scale it would be bucketed by ``src`` once so
-    every iteration's rank join co-locates without re-shuffling the
-    edges). Each iteration is then the canonical two-shuffle step: rank
-    vector joined to edges on ``src`` (AQE broadcasts the rank side while
-    it fits — node count ≪ edge count) and inflow aggregated on ``dst``
-    with map-side partial sums. Lineage is linear in iterations (no
-    argmax side-chains), so :data:`PR_ITERS` unrolled lazy steps need no
-    checkpoint at this depth; real 30+-iteration runs checkpoint every
-    few steps (the ``min_label_components`` discipline).
-    """
+def _shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared ``(src, dst, w, wout)`` edge table every purchase-graph
+    operator reads: a pure function of the corpus, published ONCE via the
+    staged loader (``memo_publish("pagerank_edges_w", …)``) instead of
+    re-running the lineitem⋈orders shuffle per query. At cluster scale the
+    same table is bucketed by src (:func:`_bucketed_edges_table`)."""
     from ufload_spark.sources.loader import memo_publish
 
-    # The edge table is a pure function of the corpus: published ONCE via
-    # the staged loader (r6 — previously rebuilt per run from the
-    # lineitem⋈orders shuffle), then cached in memory for the iterations.
-    # This IS the cluster-scale discipline the docstring names: at 100 TB
-    # the published table is bucketed by src so the per-iteration rank
-    # join co-locates without re-shuffling the edges.
-    edges = spark.read.parquet(
+    return spark.read.parquet(
         memo_publish(
             spark,
             "pagerank_edges_w",
             sf_dir,
             lambda: _build_pagerank_edges(spark, sf_dir),
         )
-    ).persist()
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    nn = nodes.groupBy().agg(F.count("*").alias("n"))
-    base = F.expr(f"{PR_MASS} div n")
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", base.alias("r")
     )
-    for _ in range(PR_ITERS):
-        # The rank side is EXPLICITLY broadcast: node count ≪ edge count,
-        # so edges never shuffle (they stream from the persisted table).
-        # Without the hint the planner sizes the published edge parquet
-        # (40 MB at sf1, under the 64 MB threshold thanks to delta-encoded
-        # sorted src + wout) and broadcasts the 12M-row EDGE relation in
-        # every iteration — three retained ~GB hashed relations that
-        # flakily OOM an 8 GB driver (the r6 bench crash). At cluster
-        # scale beyond broadcastable rank vectors, drop the hint and
-        # bucket the published edges by src instead.
-        inflow = (
-            edges.join(F.broadcast(ranks), edges.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(r * w) div wout").alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("fl"))
-        )
-        ranks = inflow.crossJoin(F.broadcast(nn)).select(
-            "node",
-            (
-                F.expr(f"({100 - PR_DAMP_PCT} * ({PR_MASS} div n)) div 100")
-                + F.expr(f"({PR_DAMP_PCT} * fl) div 100")
-            ).alias("r"),
-        )
+
+
+def _rank_out(ranks: DataFrame) -> DataFrame:
+    """The PageRank family's output row off a ``(node, r)`` rank vector."""
     return ranks.select(
         "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        F.when(_is_cust("node"), F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
-        F.expr("node div 2").cast("bigint").alias("entity_key"),
+        _entity_key("node").cast("bigint").alias("entity_key"),
         F.col("r").cast("bigint").alias("rank_micro"),
     )
 
@@ -238,69 +210,87 @@ def _bucketed_edges_table(spark: SparkSession, sf_dir: str) -> str:
     if name is not None and spark.catalog.tableExists(name):
         return name
     from ufload_spark.sources.layout import _unique_table
-    from ufload_spark.sources.loader import memo_publish
 
     suffix = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = _unique_table(spark, f"pr_edges_b_{suffix}")
-    edges = spark.read.parquet(
-        memo_publish(
-            spark,
-            "pagerank_edges_w",
-            sf_dir,
-            lambda: _build_pagerank_edges(spark, sf_dir),
-        )
-    )
-    edges.write.bucketBy(N_GRAPH_BUCKETS, "src").sortBy("src").mode(
-        "overwrite"
-    ).saveAsTable(name)
+    _shared_edges(spark, sf_dir).write.bucketBy(
+        N_GRAPH_BUCKETS, "src"
+    ).sortBy("src").mode("overwrite").saveAsTable(name)
     _BUCKETED_EDGES[key] = name
     return name
 
 
-@register(
-    "graph_pagerank_bucketed",
-    _pr_oracle(),
-    doc=f"PageRank over the SRC-BUCKETED edge table — the cluster-scale "
-    f"fallback join shape: per iteration the bucketed edge scan satisfies "
-    f"the join distribution with NO exchange on the edge side, only the "
-    f"node-sized rank vector shuffles; results bit-identical to "
-    f"graph_pagerank_purchases ({PR_ITERS} iterations, integer micro-units)",
-)
-def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bucketed-join tier of :func:`graph_pagerank_purchases` — same
-    integer lattice, same oracle, different physical strategy. The
-    broadcast-rank tier wins while the rank vector fits the broadcast
-    threshold (~4M nodes at 16 B/row under a 64 MB threshold); past that,
-    broadcasting O(nodes) to every executor each iteration loses to
-    shuffling O(nodes) once into the edge table's bucket layout — this
-    query IS that fallback, runnable and driver-verified at fixture scale
-    instead of living in a docstring. ``test_bucketed_pagerank_iteration_
-    join_no_edge_exchange`` pins the plan: the edge side of the iteration
-    join carries its bucket spec (SelectedBucketsCount) and NO exchange;
-    the only hash exchanges are the rank-vector side and the inflow
-    aggregate. SCALING.md records the crossover arithmetic.
+def _vector_side(
+    vec: DataFrame, key: str, *, broadcast: bool, pin_build: bool = True
+) -> DataFrame:
+    """A node-sized vector (ranks, labels, frontier, keep list) as the
+    join side against an edge- or pair-sized frame, in one of the two
+    layouts every graph round function takes:
 
-    Reference analog: none (extension surface — the layout discipline of
-    ``layout_bucketed_orderkey_join`` applied to the iterative family).
-    """
-    edges = spark.table(_bucketed_edges_table(spark, sf_dir))
+    - ``broadcast=True``: broadcast to every executor, so the big side
+      never shuffles — the tier while the vector fits the threshold;
+    - ``broadcast=False``: the bucketed fallback. The vector is
+      repartitioned by ``key`` INTO the bucket count, which is what keeps
+      the big side exchange-free whatever ``spark.sql.shuffle.partitions``
+      is (r11: the vector's own aggregate lands it at the conf count, and
+      whenever that differs from :data:`N_GRAPH_BUCKETS` — bench and
+      production run 32, the buckets are 8 — EnsureRequirements would
+      re-shuffle the big side to match). ``pin_build`` adds SHUFFLE_HASH
+      so the planner can never pick the persisted big side as a
+      broadcast build (with a persisted scan's size estimate it tried
+      exactly that at sf1 and OOMed an 8g driver, r10); SHJ also needs
+      no per-round sort."""
+    if broadcast:
+        return F.broadcast(vec)
+    vec = vec.repartition(N_GRAPH_BUCKETS, F.col(key))
+    return vec.hint("shuffle_hash") if pin_build else vec
+
+
+def _cut(df: DataFrame, track: list | None) -> DataFrame:
+    """A round's lineage barrier. Without one, round k's vector subtree
+    re-executes the whole round-1..k-1 prefix (LPA measured 26 s -> 0.3 s
+    at sf0.1). ``track=None``: a lazy ``localCheckpoint`` — nothing
+    materializes until the final action. Otherwise a PERSIST appended to
+    ``track`` for :func:`_publish_release` (same compute-once effect, and
+    InMemoryRelation keeps the outputPartitioning a checkpoint destroys)."""
+    if track is None:
+        return df.localCheckpoint(eager=False)
+    df = df.persist()
+    track.append(df)
+    return df
+
+
+def _pr_rounds(edges: DataFrame, *, broadcast: bool) -> DataFrame:
+    """The :data:`PR_ITERS` PageRank iterations over the shared
+    ``(src, dst, w, wout)`` edge frame — shared by the broadcast tier
+    (:func:`graph_pagerank_purchases`) and the bucketed tier
+    (:func:`graph_pagerank_bucketed`). Same integer lattice either way;
+    the layout only decides how the node-sized rank vector meets the
+    edges (:func:`_vector_side`).
+
+    Scale shape: each iteration is the canonical two-shuffle step — rank
+    vector joined to edges on ``src`` and inflow aggregated on ``dst``
+    with map-side partial sums. Lineage is linear in iterations (no
+    argmax side-chains), so :data:`PR_ITERS` unrolled lazy steps need no
+    checkpoint at this depth; real 30+-iteration runs checkpoint every
+    few steps (the ``min_label_components`` discipline).
+
+    Broadcast layout: the rank side is EXPLICITLY broadcast — without the
+    hint the planner sizes the published edge parquet (40 MB at sf1, under
+    the 64 MB threshold thanks to delta-encoded sorted src + wout) and
+    broadcasts the 12M-row EDGE relation every iteration: three retained
+    ~GB hashed relations that flakily OOM an 8 GB driver (the r6 bench
+    crash). Bucketed layout: no hint at all (at fixture scale the planner
+    may still broadcast the tiny rank side — results are identical; the
+    plan pin runs with broadcast disabled)."""
     nodes = edges.select(F.col("src").alias("node")).distinct()
     nn = nodes.groupBy().agg(F.count("*").alias("n"))
     base = F.expr(f"{PR_MASS} div n")
     ranks = nodes.crossJoin(F.broadcast(nn)).select("node", base.alias("r"))
     for _ in range(PR_ITERS):
-        # NO broadcast hint: the point of this tier is the bucketed join.
-        # (At fixture scale the planner may still pick broadcast for the
-        # tiny rank side — results are identical either way; the plan pin
-        # runs with broadcast disabled to verify the fallback shape.)
-        # Conf-independence repartition (r11, see _lpa_rounds): the rank
-        # vector lands at spark.sql.shuffle.partitions after its
-        # aggregate; shuffle it into the bucket count so the EDGE side
-        # stays exchange-free when conf != N_GRAPH_BUCKETS (it re-shuffled
-        # edge-sized every iteration in the 32-partition bench session).
-        rank_b = ranks.repartition(N_GRAPH_BUCKETS, F.col("node"))
+        side = _vector_side(ranks, "node", broadcast=broadcast, pin_build=False)
         inflow = (
-            edges.join(rank_b, edges.src == rank_b.node)
+            edges.join(side, edges.src == side.node)
             .select(
                 F.col("dst").alias("node"),
                 F.expr("(r * w) div wout").alias("contrib"),
@@ -315,14 +305,64 @@ def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.expr(f"({PR_DAMP_PCT} * fl) div 100")
             ).alias("r"),
         )
-    return ranks.select(
-        "node",
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").cast("bigint").alias("entity_key"),
-        F.col("r").cast("bigint").alias("rank_micro"),
-    )
+    return _rank_out(ranks)
+
+
+@register(
+    "graph_pagerank_purchases",
+    _pr_oracle(),
+    doc=f"PageRank over the customer<->supplier purchase graph, "
+    f"{PR_ITERS} iterations in exact integer micro-units (order-free "
+    "inflow sums, bit-identical across engines and cluster sizes)",
+)
+def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank on the bipartite purchase graph: nodes are customers
+    (``custkey*2``) and suppliers (``suppkey*2+1``), edges both directions
+    weighted by lineitem count, damping 0.85, :data:`PR_ITERS` iterations.
+
+    Exactness: ranks are integer micro-units of probability mass
+    (:data:`PR_MASS` total). Each edge contribution is
+    ``(r_src * w) div w_out`` and damping is integer percent arithmetic,
+    so the per-node inflow is a sum of exact integers — reduction-order
+    free, hence bit-identical between Spark's parallel aggregation and
+    DuckDB's single-threaded oracle, at any partitioning. (Floor division
+    leaks < 1 micro-unit per edge per iteration of mass; PageRank only
+    needs relative ranks, and the leak is deterministic.)
+
+    Scale shape: the shared edge table (:func:`_shared_edges`) is
+    persisted for the iterations and the rank vector broadcasts onto it —
+    see :func:`_pr_rounds`. Past broadcastable rank vectors the fallback
+    is :func:`graph_pagerank_bucketed`.
+    """
+    return _pr_rounds(_shared_edges(spark, sf_dir).persist(), broadcast=True)
+
+
+@register(
+    "graph_pagerank_bucketed",
+    _pr_oracle(),
+    doc=f"PageRank over the SRC-BUCKETED edge table — the cluster-scale "
+    f"fallback join shape: per iteration the bucketed edge scan satisfies "
+    f"the join distribution with NO exchange on the edge side, only the "
+    f"node-sized rank vector shuffles; results bit-identical to "
+    f"graph_pagerank_purchases ({PR_ITERS} iterations, integer micro-units)",
+)
+def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bucketed-join tier of :func:`graph_pagerank_purchases` — same
+    rounds (:func:`_pr_rounds` with ``broadcast=False``), same oracle. The
+    broadcast tier wins while the rank vector fits the broadcast threshold
+    (~4M nodes at 16 B/row under a 64 MB threshold); past that,
+    broadcasting O(nodes) to every executor each iteration loses to
+    shuffling O(nodes) once into the edge table's bucket layout.
+    ``test_bucketed_pagerank_iteration_join_no_edge_exchange`` pins the
+    plan: the edge side of the iteration join carries its bucket spec
+    (SelectedBucketsCount) and NO exchange. SCALING.md records the
+    crossover arithmetic.
+
+    Reference analog: none (extension surface — the layout discipline of
+    ``layout_bucketed_orderkey_join`` applied to the iterative family).
+    """
+    edges = spark.table(_bucketed_edges_table(spark, sf_dir))
+    return _pr_rounds(edges, broadcast=False)
 
 
 def _ppr_oracle() -> str:
@@ -408,21 +448,12 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of ``graph_pagerank_purchases``, sharing its published edge
     artifact and its oracle discipline).
     """
-    from ufload_spark.sources.loader import memo_publish
-
-    edges = spark.read.parquet(
-        memo_publish(
-            spark,
-            "pagerank_edges_w",
-            sf_dir,
-            lambda: _build_pagerank_edges(spark, sf_dir),
-        )
-    ).persist()
+    edges = _shared_edges(spark, sf_dir).persist()
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = (
         table(spark, sf_dir, "supplier")
         .where(F.col("s_nationkey") == PPR_SEED_NATION)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
+        .select(_supp_node("s_suppkey").alias("node"))
         .distinct()
     )
     # seeds that trade (appear in the graph) — keeps both engines on the
@@ -468,22 +499,52 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         ranks = ranks.localCheckpoint(eager=False)
-    return (
-        ranks.where(F.col("r") > 0)
-        .select(
-            "node",
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("node div 2").cast("bigint").alias("entity_key"),
-            F.col("r").cast("bigint").alias("rank_micro"),
-        )
-    )
+    return _rank_out(ranks.where(F.col("r") > 0))
 
 
 #: Triangle-count thresholds: an edge is a part pair co-purchased in at
 #: least this many distinct orders (keeps the graph sparse and meaningful).
 TRI_EDGE_MINSUP = 2
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchased-parts graph shared by triangle counting and link
+    prediction: undirected ``(u, v)`` part pairs, ``u < v``, bought together
+    in at least :data:`TRI_EDGE_MINSUP` distinct orders."""
+    # spread_scan on the self-join key (guide §2.4/§2.5): one okey
+    # exchange parallelizes the 2-split fixture scan AND satisfies the
+    # (okey, part) distinct and the okey self-join behind it — the
+    # distinct's own exchange disappears.
+    li = spread_scan(
+        table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
+    )
+    items = li.select(
+        F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
+    ).distinct()
+    a = items.alias("a")
+    b = items.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.okey") == F.col("b.okey"))
+            & (F.col("a.part") < F.col("b.part")),
+        )
+        .groupBy(F.col("a.part").alias("u"), F.col("b.part").alias("v"))
+        .agg(F.count("*").alias("sup"))
+        .where(F.col("sup") >= TRI_EDGE_MINSUP)
+        .select("u", "v")
+    )
+
+
+def _degrees(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """``(node, d)`` degree table of an undirected edge list whose
+    endpoints are columns ``a`` and ``b``."""
+    return (
+        edges.select(F.col(a).alias("node"))
+        .unionAll(edges.select(F.col(b).alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("bigint").alias("d"))
+    )
 
 
 @register(
@@ -548,41 +609,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — graph family sibling of
     ``graph_pagerank_purchases``).
     """
-    # spread_scan on the self-join key (guide §2.4/§2.5): one okey
-    # exchange parallelizes the 2-split fixture scan AND satisfies the
-    # (okey, part) distinct and the okey self-join behind it — the
-    # distinct's own exchange disappears.
-    li = spread_scan(
-        table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
-    )
-    items = li.select(
-        F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
-    ).distinct()
-    a = items.alias("a")
-    b = items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
-        .groupBy(F.col("a.part").alias("u"), F.col("b.part").alias("v"))
-        .agg(F.count("*").alias("sup"))
-        .where(F.col("sup") >= TRI_EDGE_MINSUP)
-        .select("u", "v")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     # Lineage barrier: the co-purchase self-join above is the expensive
     # subtree and feeds FIVE consumers (deg, both wedge sides, the
     # closing probe, n_edges). ReuseExchange catches some duplicates,
     # but a lazy cut guarantees one execution regardless of how AQE
     # carves the downstream stages.
     edges = edges.localCheckpoint(eager=False)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
+    deg = _degrees(edges, "u", "v")
     e = (
         edges.join(deg.withColumnsRenamed({"node": "u", "d": "du"}), "u")
         .join(deg.withColumnsRenamed({"node": "v", "d": "dv"}), "v")
@@ -733,30 +767,22 @@ def _lpa_edges_and_labels(
     bidirectional weighted edge list, wout dropped): one parquet scan
     instead of a corpus join, and at cluster scale the bucketed layout
     is shared by every graph consumer."""
-    from ufload_spark.sources.loader import memo_publish
-
-    edges = spark.read.parquet(
-        memo_publish(
-            spark,
-            "pagerank_edges_w",
-            sf_dir,
-            lambda: _build_pagerank_edges(spark, sf_dir),
-        )
-    ).select("src", "dst", "w")
+    edges = _shared_edges(spark, sf_dir).select("src", "dst", "w")
     # persist only for the multi-consumer iterative path; the one-shot
     # publish lambda (graph_modularity -> memo_publish('lpa_labels'))
     # materializes labels exactly once, so a cache would leak for the
     # process lifetime with no second reader (r8 advice)
     if persist_edges:
         edges = edges.persist()
-    labels = _lpa_rounds(edges, broadcast_labels=True)
+    labels = _lpa_rounds(edges, broadcast=True)
     return edges, labels
 
 
 def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
     """Materialize a bucketed tier's audit-sized result through the staged
-    loader, RELEASE every cache the rounds accumulated, and return the
-    published frame (r10 VERDICT ask #5 — the r8 LPA publish-path leak
+    loader, RELEASE every cache and local checkpoint the rounds
+    accumulated (``cached``), and return the published frame
+    (r10 VERDICT ask #5 — the r8 LPA publish-path leak
     class: a registered query in a long-lived session must not leave
     persistent RDDs behind after its result is consumed). The write is
     distributed — no driver materialization; the result frames are
@@ -770,30 +796,29 @@ def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
     stage_and_publish(spark, result, target)
     for df in cached:
         df.unpersist()
+        # DataFrame.unpersist does not free a localCheckpoint: its RDD
+        # stays registered until released on the RDD itself
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     return spark.read.parquet(target)
 
 
 def _lpa_rounds(
-    edges: DataFrame, *, broadcast_labels: bool, track: list | None = None
+    edges: DataFrame, *, broadcast: bool, track: list | None = None
 ) -> DataFrame:
     """The :data:`LPA_ITERS` synchronous vote rounds over an ``(src, dst,
     w)`` edge frame — shared by the broadcast tier
-    (:func:`graph_label_propagation`, ``broadcast_labels=True``) and the
+    (:func:`graph_label_propagation`, ``broadcast=True``) and the
     bucketed tier (:func:`graph_lpa_bucketed`, ``False``: the label vector
     shuffles node-sized into the edge table's bucket layout instead of
-    broadcasting to every executor). Vote weights, tie order and the
-    per-round lineage cut are identical, so both tiers walk the same
-    bit-exact trajectory."""
+    broadcasting to every executor, :func:`_vector_side`). Vote weights,
+    tie order and the per-round lineage cut (:func:`_cut`) are identical,
+    so both tiers walk the same bit-exact trajectory."""
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for _ in range(LPA_ITERS):
-        # The label vector is node-sized (<< edge-sized) and joined to the
-        # persisted edges EVERY round — the same repeated-join shape as
-        # PageRank's rank vector, so the broadcast tier pins the hint
-        # (edges never shuffle); past broadcastable label vectors the
-        # fallback is graph_lpa_bucketed — this same loop with
-        # broadcast_labels=False over the src-bucketed table.
         # The unit self-vote joins the RAW contribution stream BEFORE the
         # vote aggregate (node-sized rows unioned into an edge-sized
         # stream), so one hash aggregate sums neighbor and self votes
@@ -804,28 +829,7 @@ def _lpa_rounds(
         # keeps its `node` name, so in the bucketed tier every exchange
         # in the plan is verifiably keyed node/label, never the edge
         # table's src — the property the plan pin asserts.
-        # bucketed tier: SHUFFLE_HASH on the node-sized side — the hint
-        # pins the build side so the planner can never pick the EDGE side
-        # as a broadcast build (with the persisted scan's size estimate
-        # it tried exactly that at sf1 and OOMed an 8g driver); the edge
-        # side still satisfies the join distribution from its
-        # bucket/cache partitioning, and SHJ needs no per-round sort.
-        # The explicit repartition INTO the bucket layout's partition
-        # count is what makes "exchange-free edge side" conf-independent
-        # (r11): the vote aggregate lands the label vector at
-        # spark.sql.shuffle.partitions, and whenever that differs from
-        # N_GRAPH_BUCKETS (bench/production run 32, the buckets are 8)
-        # EnsureRequirements would re-shuffle the EDGE side to match the
-        # label side — the exact exchange this tier exists to avoid,
-        # invisible in the test session where the two numbers coincide.
-        # One node-sized exchange buys out the edge-sized one.
-        lab = (
-            F.broadcast(labels)
-            if broadcast_labels
-            else labels.repartition(
-                N_GRAPH_BUCKETS, F.col("node")
-            ).hint("shuffle_hash")
-        )
+        lab = _vector_side(labels, "node", broadcast=broadcast)
         contrib = edges.join(lab, edges.src == lab.node).select(
             F.col("dst").alias("node"), "label", "w"
         )
@@ -861,18 +865,7 @@ def _lpa_rounds(
                 "label", F.struct(F.col("wsum"), (-F.col("label")).alias("nl"))
             ).alias("label")
         )
-        # Lineage barrier: each round's label vector feeds the next round's
-        # broadcast; without a cut, round k's broadcast subtree re-executes
-        # the entire round-1..k-1 prefix (measured 26 s -> 0.3 s at sf0.1).
-        # Lazy, so nothing materializes until the final action. The
-        # bucketed tier tracks a PERSIST instead (same compute-once
-        # effect; the caller can release it — localCheckpoint leaves an
-        # unreleasable persistent RDD behind, r10 VERDICT ask #5).
-        if track is None:
-            labels = labels.localCheckpoint(eager=False)
-        else:
-            labels = labels.persist()
-            track.append(labels)
+        labels = _cut(labels, track)
     return labels
 
 
@@ -914,7 +907,7 @@ def graph_lpa_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src", "dst", "w"
     ).persist()
     cached: list[DataFrame] = [edges]
-    labels = _lpa_rounds(edges, broadcast_labels=False, track=cached)
+    labels = _lpa_rounds(edges, broadcast=False, track=cached)
     result = labels.groupBy(F.col("label").alias("community")).agg(
         F.count("*").cast("bigint").alias("n_members")
     )
@@ -999,14 +992,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ONE pass over the published edge table — no persist (the cache
     # would be materialized for a single consumer and then dropped)
-    edges = spark.read.parquet(
-        memo_publish(
-            spark,
-            "pagerank_edges_w",
-            sf_dir,
-            lambda: _build_pagerank_edges(spark, sf_dir),
-        )
-    ).select("src", "dst", "w")
+    edges = _shared_edges(spark, sf_dir).select("src", "dst", "w")
     labels = spark.read.parquet(
         memo_publish(
             spark,
@@ -1132,23 +1118,8 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — graph family; components
     answer "connected at all?", BFS answers "how far?").
     """
-    from ufload_spark.sources.loader import memo_publish
-
-    # Reuse PageRank's published edge table (same corpus function); BFS
-    # only reads (src, dst).
-    edges = (
-        spark.read.parquet(
-            memo_publish(
-                spark,
-                "pagerank_edges_w",
-                sf_dir,
-                lambda: _build_pagerank_edges(spark, sf_dir),
-            )
-        )
-        .select("src", "dst")
-        .persist()
-    )
-    return _bfs_rounds(spark, sf_dir, edges, broadcast_frontier=True)
+    edges = _shared_edges(spark, sf_dir).select("src", "dst").persist()
+    return _bfs_rounds(spark, sf_dir, edges, broadcast=True)
 
 
 def _bfs_rounds(
@@ -1156,37 +1127,25 @@ def _bfs_rounds(
     sf_dir: str,
     edges: DataFrame,
     *,
-    broadcast_frontier: bool,
+    broadcast: bool,
     track: list | None = None,
 ) -> DataFrame:
     """The :data:`BFS_ROUNDS` synchronous frontier expansions shared by
     the broadcast tier (:func:`graph_bfs_distances`) and the bucketed
-    tier (:func:`graph_bfs_bucketed`, SHUFFLE_HASH pinned on the
-    node-sized frontier so the planner can never broadcast-build the
-    persisted EDGE side — the r10 sf1 OOM lesson; the frontier shuffles
-    node-sized into the edge buckets). Same min-merge, same lineage
-    cuts: identical distances either way."""
+    tier (:func:`graph_bfs_bucketed`): the layout only decides how the
+    node-sized frontier meets the edges (:func:`_vector_side`). Same
+    min-merge, same lineage cuts (:func:`_cut`): identical distances
+    either way."""
     sup = table(spark, sf_dir, "supplier")
     dist = (
         sup.where(F.col("s_nationkey") == BFS_SEED_NATION)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
+        .select(_supp_node("s_suppkey").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("d"))
     )
     for k in range(1, BFS_ROUNDS + 1):
         frontier = dist.where(F.col("d") == k - 1)
-        # same build-side pin as _lpa_rounds: never broadcast-build edges;
-        # same conf-independence repartition (r11): the min-merge lands
-        # the frontier at spark.sql.shuffle.partitions — shuffle it into
-        # the bucket layout's count so the EDGE side never re-exchanges
-        # to match (it did, every round, whenever conf != N_GRAPH_BUCKETS)
-        f = (
-            F.broadcast(frontier)
-            if broadcast_frontier
-            else frontier.repartition(
-                N_GRAPH_BUCKETS, F.col("node")
-            ).hint("shuffle_hash")
-        )
+        f = _vector_side(frontier, "node", broadcast=broadcast)
         nbr = edges.join(f, edges.src == f.node).select(
             F.col("dst").alias("node"), F.lit(k).cast("bigint").alias("d")
         )
@@ -1195,14 +1154,7 @@ def _bfs_rounds(
             .groupBy("node")
             .agg(F.min("d").cast("bigint").alias("d"))
         )
-        # Lineage barrier per round (the LPA lesson) — lazy, nothing
-        # materializes until the final action. Bucketed tier: tracked
-        # persist instead, releasable by the caller (r10 VERDICT ask #5).
-        if track is None:
-            dist = dist.localCheckpoint(eager=False)
-        else:
-            dist = dist.persist()
-            track.append(dist)
+        dist = _cut(dist, track)
     return dist.groupBy(F.col("d").alias("distance")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -1240,9 +1192,7 @@ def graph_bfs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src", "dst"
     ).persist()
     cached: list[DataFrame] = [edges]
-    result = _bfs_rounds(
-        spark, sf_dir, edges, broadcast_frontier=False, track=cached
-    )
+    result = _bfs_rounds(spark, sf_dir, edges, broadcast=False, track=cached)
     return _publish_release(spark, result, "bfs_bucketed_out", cached)
 
 
@@ -1312,35 +1262,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictive sibling of `part_recommendations_topn`, which ranks
     pairs that DID co-occur).
     """
-    # spread_scan on the self-join key (guide §2.4/§2.5): one okey
-    # exchange parallelizes the 2-split fixture scan AND satisfies the
-    # (okey, part) distinct and the okey self-join behind it — the
-    # distinct's own exchange disappears.
-    li = spread_scan(
-        table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
-    )
-    items = li.select(
-        F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
-    ).distinct()
-    a = items.alias("a")
-    b = items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
-        .groupBy(F.col("a.part").alias("u"), F.col("b.part").alias("v"))
-        .agg(F.count("*").alias("sup"))
-        .where(F.col("sup") >= TRI_EDGE_MINSUP)
-        .select("u", "v")
-    )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
+    deg = _degrees(edges, "u", "v")
     und = edges.select(
         F.explode(
             F.array(
@@ -1399,8 +1322,7 @@ def _kcore_stats(deg_c: DataFrame, deg_s: DataFrame, rnd: int) -> DataFrame:
     the NODE-sized degree frames the peel computes anyway: distinct-c =
     deg_c rows, edges = Σdegree — no countDistinct over the pair frame
     (which Catalyst plans as an Expand that doubles the widest stream, the
-    same trap de-Expanded out of text_repetition_ratio). Shared by the
-    broadcast and bucketed peel tiers."""
+    same trap de-Expanded out of text_repetition_ratio)."""
     a = deg_c.agg(
         F.count("*").cast("bigint").alias("n_c"),
         F.sum("d").cast("bigint").alias("n_edges"),
@@ -1442,6 +1364,79 @@ FROM p{k}"""
     return "".join(parts)
 
 
+def _kcore_curve(
+    pairs: DataFrame, *, broadcast: bool, track: list | None = None
+) -> DataFrame:
+    """The synchronous k-core peel over a ``(c, s)`` pair frame and its
+    per-round ``(round, n_nodes, n_edges)`` curve — shared by the broadcast
+    tier (:func:`graph_kcore_peel`) and the bucketed tier
+    (:func:`graph_kcore_bucketed`). Both walk the identical curve.
+
+    Per round: ONE exploded node-keyed degree aggregate over the pair
+    frame (node ids are parity-disjoint, so exploding each pair into its
+    endpoints and counting by node yields BOTH degree tables in one pass:
+    one scan, one map-side partial, one node-sized exchange — r11 peel,
+    lifted into the bucketed tier in r12, where the two per-side
+    aggregates had cost ~four pair passes a round: sf1 8.14 -> 5.19 s).
+    The node-sized result is lazily checkpointed so all four consumers
+    (stats row + both keep lists) read one materialization — without the
+    cut Catalyst pushes each consumer's parity filter below the aggregate
+    and the exchange stops being shared. Then two LEFT SEMI joins restrict
+    the pairs to surviving endpoints, and the round's pair frame gets a
+    lineage barrier (:func:`_cut`): the next round reads it twice.
+
+    Layout (:func:`_vector_side`):
+
+    - broadcast: the node-sized keep lists broadcast, so the pair frame
+      never shuffles; the only exchange per round is the degree partials.
+    - bucketed: ``pairs`` arrives hash-partitioned by ``c`` from the
+      bucket layout. The semi joins take the same-parity key first
+      (exchange-free on the pair side), then the opposite key — the
+      round's single pair-frame exchange, which leaves the frame
+      partitioned for the NEXT round's first join, alternating. This
+      needs ``track``: persist keeps the outputPartitioning the
+      alternation rides, while a checkpoint rewrites the frame as an
+      opaque RDD scan (measured: every aggregate then re-exchanges). The
+      degree checkpoints are tracked too, for :func:`_publish_release`
+      (a tracked persist of them measured ~4.5x slower at sf0.1)."""
+    pairs = _cut(pairs, track)
+    out = []
+    for rnd in range(KCORE_ROUNDS + 1):
+        deg = (
+            pairs.select(
+                F.explode(F.array(F.col("c"), F.col("s"))).alias("node")
+            )
+            .groupBy("node")
+            .agg(F.count("*").cast("bigint").alias("d"))
+            .localCheckpoint(eager=False)
+        )
+        if track is not None:
+            track.append(deg)
+        deg_c = deg.where(_is_cust("node")).select(F.col("node").alias("c"), "d")
+        deg_s = deg.where(_is_supp("node")).select(F.col("node").alias("s"), "d")
+        out.append(_kcore_stats(deg_c, deg_s, rnd))
+        if rnd == KCORE_ROUNDS:
+            break
+        keep = {
+            key: _vector_side(
+                side.where(F.col("d") >= KCORE_K).select(key), key, broadcast=broadcast
+            )
+            for key, side in (("c", deg_c), ("s", deg_s))
+        }
+        for key in ("s", "c") if not broadcast and rnd % 2 else ("c", "s"):
+            pairs = pairs.join(keep[key], key, "left_semi")
+        pairs = _cut(pairs, track)
+    return reduce(DataFrame.unionByName, out)
+
+
+def _customer_pairs(edges: DataFrame) -> DataFrame:
+    """The distinct ``(c, s)`` purchase pairs: the customer-side rows of
+    the shared edge table, which holds every pair in both directions."""
+    return edges.where(_is_cust("src")).select(
+        F.col("src").alias("c"), F.col("dst").alias("s")
+    )
+
+
 @register(
     "graph_kcore_peel",
     _kcore_oracle(),
@@ -1467,95 +1462,16 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from the previous round's edge set only (no within-round
     cascade order), so both engines walk the identical curve.
 
-    Scale shape, per round: ONE exploded node-keyed degree aggregate over
-    the pair frame (node ids are parity-disjoint — c even, s odd — so
-    exploding each pair into its endpoints and counting by node yields
-    BOTH degree tables in one pass: one scan, one map-side partial, one
-    node-sized exchange) and two LEFT SEMI joins restricting the pairs to
-    surviving endpoints — keyed shuffles only, no window, no driver-side
-    state. The per-round stats rows are lazy 1-row aggregates unioned at
-    the end (one job). Each round's pair frame gets a lazy
-    ``localCheckpoint``: both the stats row and the next round consume
-    it, and without the cut round k would re-execute the whole peel
-    prefix (the LPA lineage lesson). At cluster scale, bucket the pair
-    table by customer key so the degree explode and the first semi-join
-    co-locate shuffle-free (``graph_kcore_bucketed`` is that tier).
+    Scale shape: :func:`_kcore_curve` with broadcast keep lists over the
+    shared edge table's customer half (one pruned parquet scan instead of
+    a corpus join, r9); the per-round stats rows are lazy 1-row
+    aggregates unioned at the end (one job). Past broadcastable keep
+    lists the fallback is :func:`graph_kcore_bucketed`.
 
     Reference analog: none (extension surface — graph family, beside
     ``graph_label_propagation`` / ``graph_triangle_count``).
     """
-    from ufload_spark.sources.loader import memo_publish
-
-    # The pair set IS the published shared edge table (r9 — previously
-    # this re-ran the lineitem⋈orders join + distinct per invocation):
-    # pagerank_edges_w holds every undirected pair in both directions, so
-    # the customer-side rows (src even) are exactly the distinct (c, s)
-    # pairs. One pruned parquet scan replaces the corpus join — the same
-    # shared-artifact discipline as PageRank/LPA/BFS.
-    pairs = (
-        spark.read.parquet(
-            memo_publish(
-                spark,
-                "pagerank_edges_w",
-                sf_dir,
-                lambda: _build_pagerank_edges(spark, sf_dir),
-            )
-        )
-        .where(F.col("src") % 2 == 0)
-        .select(F.col("src").alias("c"), F.col("dst").alias("s"))
-    )
-    pairs = pairs.localCheckpoint(eager=False)
-    stats_from = _kcore_stats
-
-    out = []
-    for rnd in range(KCORE_ROUNDS + 1):
-        # ONE degree aggregate for BOTH sides (r11 session 3, guide §2.4):
-        # node ids are parity-disjoint (c even, s odd), so exploding each
-        # pair into its two endpoints and counting by node computes the
-        # c-degrees AND s-degrees in one pass — one pair-frame scan, one
-        # partial aggregate, one node-sized exchange per round instead of
-        # two of each (the keys being different sides was why the two
-        # aggregates couldn't share an exchange; the explode makes them
-        # the same key). The node-sized result is lazily checkpointed so
-        # all four consumers (stats row + both keep lists) read the one
-        # materialization — without the cut, Catalyst pushes each
-        # consumer's parity filter below the aggregate and the exchange
-        # stops being shared. (The r8 recompute-vs-checkpoint note was
-        # about TWO degree frames per round; this is one, half the size.)
-        deg = (
-            pairs.select(
-                F.explode(F.array(F.col("c"), F.col("s"))).alias("node")
-            )
-            .groupBy("node")
-            .agg(F.count("*").cast("bigint").alias("d"))
-            .localCheckpoint(eager=False)
-        )
-        deg_c = deg.where(F.col("node") % 2 == 0).select(
-            F.col("node").alias("c"), "d"
-        )
-        deg_s = deg.where(F.col("node") % 2 == 1).select(
-            F.col("node").alias("s"), "d"
-        )
-        out.append(stats_from(deg_c, deg_s, rnd))
-        if rnd == KCORE_ROUNDS:
-            break
-        # The keep lists are NODE-sized (<< pair-sized) — broadcast them
-        # so the pair frame never shuffles for the semi joins; per round
-        # the only exchange is the exploded degree aggregate's partials.
-        # Past broadcastable keep lists the fallback is REAL:
-        # graph_kcore_bucketed peels the c-bucketed pair layout with one
-        # pair-frame exchange per round.
-        keep_c = deg_c.where(F.col("d") >= KCORE_K).select("c")
-        keep_s = deg_s.where(F.col("d") >= KCORE_K).select("s")
-        pairs = pairs.join(F.broadcast(keep_c), "c", "left_semi").join(
-            F.broadcast(keep_s), "s", "left_semi"
-        )
-        # Lineage barrier: stats AND the next round both read this frame.
-        pairs = pairs.localCheckpoint(eager=False)
-    res = out[0]
-    for frame in out[1:]:
-        res = res.unionByName(frame)
-    return res
+    return _kcore_curve(_customer_pairs(_shared_edges(spark, sf_dir)), broadcast=True)
 
 
 @register(
@@ -1569,130 +1485,37 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "results bit-identical to graph_kcore_peel",
 )
 def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bucketed tier of :func:`graph_kcore_peel` — same synchronous
-    peel, same audit curve, same oracle, the physical strategy for the
-    regime where the per-round keep lists outgrow the broadcast threshold
-    (the r9 `graph_pagerank_bucketed` playbook applied to the second
-    operator whose docstring carried the fallback as prose; r10).
-
-    The pair set is the customer-side half of the SRC-bucketed shared
-    edge table, so round 0's pair frame arrives hash-partitioned by ``c``
-    straight from the bucket layout: the c-keep semi join runs with NO
-    exchange on the pair side. The s-side semi costs exactly ONE
-    pair-frame exchange, after which the frame is partitioned by ``s`` —
-    so the NEXT round runs its s-side semi exchange-free and pays one
-    c-exchange, alternating. Degrees come from ONE exploded node-keyed
-    aggregate per round (r12, the peel's r11 shape): one pair pass whose
-    node-sized checkpointed result feeds the stats row and both keep
-    lists, instead of two per-side aggregates that each planned their
-    own pass over the persisted frame (the exchange-free c-aggregate had
-    no exchange for Catalyst to reuse between its two consumers). Each
-    round therefore moves the pair frame once and scans it twice
-    (degrees + semi chain); everything that shuffles besides the
-    alternating semi key is node-sized.
-
-    Rounds persist (not ``localCheckpoint``) because persistence KEEPS
-    the outputPartitioning the alternation exploits, while a checkpoint
-    rewrites the frame as an opaque RDD scan with no partitioning —
-    measured: post-checkpoint every aggregate re-exchanges. On a real
-    cluster the equivalent is writing each round's survivors back
-    bucketed (or relying on exchange reuse within the single job, as
-    here). ``test_bucketed_kcore_round_no_pair_exchange_on_bucket_key``
-    pins round 0's shape: bucket spec in the scan, no broadcast, and no
-    exchange keyed by ``c``/``src`` anywhere — the only pair-sized
-    exchange is the s-side key.
+    """The bucketed tier of :func:`graph_kcore_peel` — same peel
+    (:func:`_kcore_curve` with ``broadcast=False``), same oracle, for the
+    regime where the per-round keep lists outgrow the broadcast threshold.
+    The pair set is the customer half of the SRC-bucketed shared edge
+    table, so round 0's pair frame arrives partitioned by ``c``; each
+    round moves the pair frame once (the alternating semi key) and
+    everything else that shuffles is node-sized. The round caches and
+    degree checkpoints are released once the curve is published
+    (:func:`_publish_release`).
+    ``test_bucketed_kcore_round_no_pair_exchange_on_bucket_key`` pins
+    round 0's shape.
 
     Reference analog: none (extension surface — layout discipline of
     ``graph_pagerank_bucketed`` applied to the peeling family).
     """
-    # each round's pair frame is read by TWO consumers (the exploded
-    # degree aggregate + the semi chain); persist serves them from one
-    # scan while preserving the partitioning the semi alternation rides
-    pairs = (
-        spark.table(_bucketed_edges_table(spark, sf_dir))
-        .where(F.col("src") % 2 == 0)
-        .select(F.col("src").alias("c"), F.col("dst").alias("s"))
-        .persist()
-    )
-    cached: list[DataFrame] = [pairs]
-    out = []
-    for rnd in range(KCORE_ROUNDS + 1):
-        # ONE exploded node-keyed degree aggregate per round (r12 — the
-        # r11 peel shape lifted into this tier, the r11 VERDICT ask #4):
-        # the two per-side aggregates cost ~four pair-frame passes per
-        # round here, because the c-side aggregate has NO exchange under
-        # this layout and therefore nothing Catalyst can reuse between
-        # its two consumers (stats row + keep build) — each planned its
-        # own scan of the persisted frame. Exploding each pair into its
-        # parity-disjoint endpoints computes both degree tables in one
-        # pair pass whose node-sized result is checkpointed for all four
-        # consumers. The trade is explicit: the c-degree aggregate gives
-        # up riding the bucket layout (one new NODE-sized exchange per
-        # round, and the keep builds re-exchange node-sized rows to meet
-        # the pair layout), bought back several times over by the saved
-        # pair passes — interleaved A/B: sf1 8.14 -> 5.19 s, sf0.1
-        # 7.58 -> 5.07 s medians. The PAIR frame still never exchanges
-        # on the bucket key: its single per-round exchange remains the
-        # opposite-parity semi key (the alternation below).
-        deg = (
-            pairs.select(
-                F.explode(F.array(F.col("c"), F.col("s"))).alias("node")
-            )
-            .groupBy("node")
-            .agg(F.count("*").cast("bigint").alias("d"))
-            .localCheckpoint(eager=False)
-        )
-        deg_c = deg.where(F.col("node") % 2 == 0).select(
-            F.col("node").alias("c"), "d"
-        )
-        deg_s = deg.where(F.col("node") % 2 == 1).select(
-            F.col("node").alias("s"), "d"
-        )
-        out.append(_kcore_stats(deg_c, deg_s, rnd))
-        if rnd == KCORE_ROUNDS:
-            break
-        # NO broadcast hints (this tier IS the past-threshold fallback).
-        # Join order follows the frame's current partitioning parity:
-        # same-parity key first (exchange-free on the pair side), then
-        # the opposite key (the round's single pair-frame exchange, which
-        # also leaves the frame partitioned for the NEXT round's first
-        # join).
-        keep_c = deg_c.where(F.col("d") >= KCORE_K).select("c")
-        keep_s = deg_s.where(F.col("d") >= KCORE_K).select("s")
-        # SHUFFLE_HASH pins the keep lists as build sides (see _lpa_rounds:
-        # with persisted-scan size estimates the planner may otherwise
-        # broadcast-build the PAIR side)
-        keep_c, keep_s = keep_c.hint("shuffle_hash"), keep_s.hint("shuffle_hash")
-        # Repartition the node-sized keep builds INTO the pair layout's
-        # bucket count (r12 — the LPA/BFS/PageRank conf-independence
-        # discipline): the checkpointed degree frame has no visible
-        # partitioning, so without this the planner sizes the semi joins
-        # at spark.sql.shuffle.partitions and ENSURE_REQUIREMENTS moves
-        # the PAIR side to match — two pair-frame exchanges per round
-        # where the alternation owes one. With it, the same-parity semi
-        # rides the current layout exchange-free and the opposite-parity
-        # semi stays the round's single pair move, at the bucket count.
-        keep_c = keep_c.repartition(N_GRAPH_BUCKETS, F.col("c"))
-        keep_s = keep_s.repartition(N_GRAPH_BUCKETS, F.col("s"))
-        if rnd % 2 == 0:
-            pairs = pairs.join(keep_c, "c", "left_semi").join(
-                keep_s, "s", "left_semi"
-            )
-        else:
-            pairs = pairs.join(keep_s, "s", "left_semi").join(
-                keep_c, "c", "left_semi"
-            )
-        # persist, not localCheckpoint: both the stats row and the next
-        # round consume this frame (compute-once), and InMemoryRelation
-        # preserves the partitioning the parity alternation rides. The
-        # frames are pair-sized and KCORE_ROUNDS is small; every round's
-        # cache is tracked and released once the curve is published.
-        pairs = pairs.persist()
-        cached.append(pairs)
-    res = out[0]
-    for frame in out[1:]:
-        res = res.unionByName(frame)
+    edges = spark.table(_bucketed_edges_table(spark, sf_dir))
+    cached: list[DataFrame] = []
+    res = _kcore_curve(_customer_pairs(edges), broadcast=False, track=cached)
     return _publish_release(spark, res, "kcore_bucketed_out", cached)
+
+
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct ``(c, s)`` customer-supplier node pairs of the purchase
+    graph, for the structure audits (power-law fit, assortativity)."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    return (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .select(_cust_node("o_custkey").alias("c"), _supp_node("l_suppkey").alias("s"))
+        .distinct()
+    )
 
 
 @register(
@@ -1756,22 +1579,8 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (extension surface — graph family).
     """
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    deg = (
-        pairs.select(F.col("c").alias("node"))
-        .unionAll(pairs.select(F.col("s").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
+    pairs = _purchase_pairs(spark, sf_dir)
+    deg = _degrees(pairs, "c", "s")
     hist = deg.groupBy("d").agg(F.count("*").cast("bigint").alias("n_nodes"))
     pts = hist.select(
         F.round(F.log(F.col("d").cast("double")) * 1000000, 0)
@@ -1871,22 +1680,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (extension surface — graph family).
     """
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    deg = (
-        pairs.select(F.col("c").alias("node"))
-        .unionAll(pairs.select(F.col("s").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
+    pairs = _purchase_pairs(spark, sf_dir)
+    deg = _degrees(pairs, "c", "s")
     ends = (
         pairs.join(deg.withColumnsRenamed({"node": "c", "d": "x"}), "c")
         .join(deg.withColumnsRenamed({"node": "s", "d": "y"}), "s")
@@ -1990,25 +1785,18 @@ def graph_strong_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ufload_spark.operators.dedup import min_label_components
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     strong = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .agg(F.count("*").alias("w"))
+        _weighted_pairs(spark, sf_dir, "u", "v")
         .where(F.col("w") >= STRONG_W)
         .select("u", "v")
     )
     comp = min_label_components(strong)
     return comp.groupBy(F.col("m").alias("cluster_id")).agg(
         F.count("*").cast("bigint").alias("n_members"),
-        F.sum(F.when(F.col("n") % 2 == 0, 1).otherwise(0))
+        F.sum(F.when(_is_cust("n"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_customers"),
-        F.sum(F.when(F.col("n") % 2 == 1, 1).otherwise(0))
+        F.sum(F.when(_is_supp("n"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_suppliers"),
     )
@@ -2095,23 +1883,10 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     The totals are 1-row aggregates broadcast back — never a global
     sort. Reference analog: none (extension surface, graph family).
     """
-    from ufload_spark.sources.loader import memo_publish
-
     edges = (
-        spark.read.parquet(
-            memo_publish(
-                spark,
-                "pagerank_edges_w",
-                sf_dir,
-                lambda: _build_pagerank_edges(spark, sf_dir),
-            )
-        )
-        .where(F.col("src") % 2 == 0)  # directed half: customer -> supplier
-        .select(
-            F.expr("src div 2").alias("c"),
-            F.expr("dst div 2").alias("s"),
-            "w",
-        )
+        _shared_edges(spark, sf_dir)
+        .where(_is_cust("src"))  # directed half: customer -> supplier
+        .select(_entity_key("src").alias("c"), _entity_key("dst").alias("s"), "w")
         .persist()
     )
     custs = edges.select("c").distinct()
