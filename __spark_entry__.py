@@ -6,11 +6,15 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in the ``ufload_spark`` package; this file only adapts
-its query registry to the driver's interface.
+its query registry to the driver's interface, ordered for the driver's
+sample (:func:`queries`).
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,9 +33,54 @@ def entry(spark: SparkSession) -> DataFrame:
     return latest_backup_per_instance(spark, "/root/testdata/sf0.001")
 
 
+def _driver_history(repo_root: str | None = None) -> tuple[set[str], set[str]]:
+    """``(verified, sampled)`` name sets from the CORRECTNESS_r*.json artifacts.
+
+    The verification driver samples at most ~50 registry entries per round, in
+    iteration order. To converge on full driver-side coverage :func:`queries`
+    puts unverified queries first; this reads the accumulated round artifacts
+    to know which ones those are. "Verified" means a fully green row — rows,
+    schema, AND value hash all matching with no error; a hash-mismatched row
+    is an unverified query that must re-sort to the front of the sample.
+    "Sampled" is any appearance at all, green or not. Missing or malformed
+    artifacts degrade gracefully to plain registration order.
+    """
+    if repo_root is None:
+        repo_root = os.path.dirname(os.path.abspath(__file__))
+    verified: set[str] = set()
+    sampled: set[str] = set()
+    for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name, row in rows.items():
+            sampled.add(name)
+            if (
+                isinstance(row, dict)
+                and row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and row.get("err") is None
+            ):
+                verified.add(name)
+    return verified, sampled
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: q.fn for name, q in load_all().items()}
+    """One entry per implemented operator from SURVEY.md §2, ordered
+    never-driver-verified-first (see :func:`_driver_history`), highest
+    urgency first: (1) sampled by the driver but never fully green (known
+    fails being re-fixed), (2) never reached by the driver's sample,
+    (3) verified. Registration order within each bucket."""
+    verified, sampled = _driver_history()
+
+    def bucket(name: str) -> int:
+        return 2 if name in verified else 0 if name in sampled else 1
+
+    registry = load_all()
+    return {name: registry[name].fn for name in sorted(registry, key=bucket)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,348 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the engine's headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <float>}
-
-Queries are forced through the ``noop`` sink so every column is actually
-materialized (a bare count() would let column pruning skip most of the work).
-
-The stdout line is kept deliberately small (sf0.1 per-query map + sf1
-totals); the full detail — sf1 per-query medians, spread stats, ANN
-train-vs-probe tier annotation — is written to ``BENCH_DETAIL.json``
-next to this script.
-"""
+"""The benchmark command: ``python bench.py`` is ``python harness.py bench``
+(env vars, the stdout JSON line and ``BENCH_DETAIL.json`` are documented in
+``harness.py``). ``HEADLINE`` is re-exported for importers."""
 
 from __future__ import annotations
 
-import json
-import os
-import re
-import sys
-import time
+from harness import HEADLINE, main
 
-#: Headline queries: one per major operator family (SURVEY §2 + extensions).
-HEADLINE = [
-    "latest_backup_per_instance",  # flagship: window rank over listing
-    "group_files_per_instance",    # ordered collect aggregate
-    "tpch_q1_pricing_summary",     # wide hash aggregate
-    "tpch_q3_shipping_priority",   # broadcast join + top-k
-    "tpch_q5_local_supplier_volume",  # multi-join star query
-    "tpch_q6_forecast_revenue",    # full-pushdown filter + scalar agg
-    "tpch_q18_large_orders",       # agg-derived semi-join, double shuffle
-    "tpch_q8_market_share",        # 8-way star join, all dims broadcast
-    "tpch_q21_waiting_suppliers",  # EXISTS + NOT EXISTS double correlation
-    "orders_running_total",        # window frame
-    "events_session_windows",      # session windows
-    "events_asof_last_click",      # as-of join (union + ordered window)
-    "archive_merge",               # anti-join merge
-    "delive_password_stomp",       # sanitize projection
-    "dedup_minhash_lsh_pairs",     # MinHash LSH near-dedup
-    "dedup_simhash_pairs",         # SimHash Hamming-bucket retrieval (r2)
-    "pipeline_curate_documents",   # composed curation pipeline
-    "pipeline_training_export",    # curate → split → pack manifest (r2)
-    "similarity_topk_cosine",      # vector top-k
-    "similarity_lsh_topk",         # banded-LSH query-probe ANN (r2)
-    "text_quality_score",          # text scoring map
-    "corpus_pii_scrub",            # regex redaction map (r2)
-    "events_retention_cohorts",    # cohort rollup (r2)
-    # r4 additions — read-only queries from the newer families; appended so
-    # every pre-r4 entry stays comparable round-over-round
-    "similarity_ivf_topk",         # trained k-means quantizer + cell probe (r3)
-    "corpus_contamination_overlap",  # broadcast-hinted shingle audit (r3)
-    "events_range_join_pairs",     # banded bucket range join
-    "text_repetition_ratio",       # dup-n-gram quality signal (r3)
-    # r5 additions (appended; pre-r5 entries stay comparable round-over-round)
-    "similarity_ivf_incremental",  # persisted IVF index: publish + probe (r5)
-    "multimodal_audio_meta",       # RIFF/WAV chunk-walk decode map (r5)
-    "dedup_cluster_keep_best",     # quality-aware cluster dedup (r4)
-    "corpus_paragraph_dedup",      # sub-document boilerplate removal (r5)
-    "similarity_quantized_topk",   # int8 scalar-quantized ANN (r5)
-    "pysource_log_scan",           # Python Data Source API scan (r5)
-    "dedup_bloom_prefilter",       # runtime-Bloom prefiltered dedup (r5)
-    "corpus_dataset_card",         # release manifest aggregate (r5)
-    "text_unigram_logprob",        # unigram-LM quality scorer (r5)
-    "events_hier_rollup",          # continuous-aggregate cascade (r5)
-    "corpus_importance_weights",   # DSIR hashed-feature selection (r5)
-    "dedup_containment",           # prefix-filtered containment join (r5)
-    "similarity_pq_topk",          # product-quantization ADC ANN (r5)
-    "similarity_pq_incremental",   # persisted PQ index: codes-only probe (r5)
-    "dedup_editdist_confirm",      # LSH candidates + bounded-DP levenshtein (r5)
-    "events_concurrency_peak",     # day-partitioned interval sweep-line (r5)
-    "quality_constraint_audit",    # one-scan Deequ-style constraint suite (r5)
-    "pipeline_pit_features",       # leakage-free PIT feature join (r5)
-    "dedup_substring_spans",       # stride-1 span dedup, interval union (r5)
-    "text_bpe_learn",              # BPE tokenizer training rounds (r5)
-    "embedding_pca_power",         # integer Gramian + power iteration (r5)
-    "graph_pagerank_purchases",    # integer-exact PageRank iterations (r5)
-    # r6 additions (appended; earlier entries stay comparable round-over-round)
-    "text_bm25_search",            # BM25 ranked retrieval, decimal-exact sums (r6)
-    "graph_triangle_count",        # degree-ordered oriented wedge join (r6)
-    "events_rfm_segmentation",     # histogram-quantile RFM, no global ntile (r6)
-    "orders_cohort_ltv",           # cohort LTV triangle, bounded windows (r6)
-    "part_recommendations_topn",   # a-priori pair mining + lift-ranked top-N (r6)
-    "orders_rolling_90d_by_customer",  # RANGE-frame trailing-spend window (r6)
-    "text_chunk_documents",        # map-only sliding-window RAG chunking (r6)
-    "graph_label_propagation",     # synchronous weighted-mode LPA rounds (r6)
-    "search_fuzzy_partnames",      # rarest-trigram retrieval + levenshtein (r6)
-    "orders_acf_daily_revenue",    # lagged Pearson over the bounded day frame (r6)
-    "events_bot_detection",        # hourly-rate + CoV² regularity panel (r6)
-    "parts_abc_xyz_matrix",        # binned Pareto × demand-CoV matrix (r6)
-    "orders_bootstrap_ci",         # Poisson bootstrap, ×B row-local fan-out (r6)
-    "graph_bfs_distances",         # frontier-broadcast BFS rounds (r6)
-    "events_outlier_mad",          # two-pass median/MAD over cents histograms (r6)
-    "events_countmin_estimate",    # mergeable CM sketch + probe audit (r6)
-    "multimodal_video_scene_cuts", # per-video sequential aHash walk, map-only (r6)
-    "orders_mannwhitney_u",        # segmented-prefix-sum exact rank test (r6)
-    "graph_kcore_peel",            # synchronous degeneracy peel rounds (r6)
-    "text_rake_keywords",          # RAKE phrase mining, one vocab shuffle (r6)
-    "multimodal_image_phash",      # fixed-point DCT perceptual hash map (r6)
-    "orders_seasonal_decompose",   # integer MA/seasonal/residual split (r6)
-    "embedding_jl_projection",     # columnar zip_with sign-fold, no shuffle (r6)
-    "orders_forecast_holt_backtest",  # 28-lag broadcast-weight smoother (r6)
-    "events_emd_drift",            # Wasserstein-1 over the bounded bin frame (r6)
-    "multimodal_audio_spectrum",   # vectorized fixed-point DFT Arrow map (r6)
-    "lineitem_price_elasticity",   # grouped log-log OLS, two exchanges (r6)
-    # r7 additions
-    "graph_modularity",            # LPA partition quality, exact integer Q (r7)
-    "part_similarity_cosine",      # item-item CF, whale-capped pair join (r7)
-    "orders_changepoint_binseg",   # binseg split over the bounded day frame (r7)
-    "lineitem_mutual_information", # 36-cell contingency MI, one scan (r7)
-    "corpus_negative_sampling",    # ring-bucket as-of negatives, one window (r7)
-    "text_nb_lang_classifier",     # NB train+score, broadcast model (r7)
-    "orders_forecast_hw_backtest", # Holt-Winters over the bounded day frame (r7)
-    "events_markov_absorption",    # K-step conversion probability, micro-exact (r7)
-    # r8 additions
-    "part_similarity_incremental", # persisted CF co-occurrence: delta-merge probe (r8)
-    "restore_end_to_end",          # composed SURVEY §3.1 restore lifecycle (r8)
-    "pipeline_incremental_ingest", # composed nightly ingest funnel, persisted gates (r8)
-    "text_perplexity_buckets",     # CCNet tertiles via histogram quantiles (r8)
-    "dedup_winnowing_pairs",       # MOSS window-min fingerprints + fp equi-join (r8)
-    "graph_hits_scores",           # HITS coupled iterations, integer mass (r8)
-    "events_hmm_viterbi",          # grouped Arrow DP kernel, per-user lattice (r8)
-    "customers_record_linkage",    # blocked FS linkage + confusion fold (r8)
-    # r9 additions
-    "graph_pagerank_bucketed",     # src-bucketed edge table, exchange-free edge side (r9)
-    "dedup_semantic_pairs",        # SemDeDup: corpus-derived k-means cells gate cosine pairs (r9)
-    "dedup_winnowing_incremental", # persisted fingerprint table, batch fp-probe (r9)
-    "graph_ppr_seeded",            # personalized PageRank, sparse seeded frontier (r9)
-    "streaming_neardup_gate",      # SimHash admission gate, replay-idempotent publish (r9)
-    "dedup_semantic_pairs_hier",   # two-level quantizer probe, O(sqrt k) assignment (r9)
-    # r10 additions
-    "graph_lpa_bucketed",          # LPA over the src-bucketed edge table, no label broadcast (r10)
-    "graph_kcore_bucketed",        # k-core peel, one pair exchange/round via parity alternation (r10)
-    "dedup_semantic_pairs_overlap",# epsilon-overlap boundary pass, 2nd membership in-band (r10)
-    "dedup_semantic_incremental",  # published-model batch admit gate, BxN pair kernel (r10)
-    "graph_bfs_bucketed",          # frontier BFS over the bucketed edge table (r10)
-    "multimodal_audio_vad_segments",  # PCM energy islands, rank-difference runs (r10)
-    "customers_linkage_sorted_neighborhood",  # merge/purge SN candidate tier (r10)
-    "dedup_minhash_estimate_error_eval",  # MinHash estimator audit, integer micro Jaccard (r10)
-    # r11 additions
-    "text_quality_logreg",         # learned quality filter, integer-exact GD steps (r11)
-    "text_quality_logreg_eval",    # confusion + exact tie-aware AUC audit (r11)
-    "text_quality_logreg_apply",   # published-model ingest scoring, aggregate-free (r11)
-    "multimodal_video_neardup",    # frame-shingle group pairs, df-capped buckets (r11)
-    "multimodal_video_neardup_incremental",  # published-shingle ingest gate (r11)
-    "multimodal_video_keep_best_cut",  # footage-cluster CC, keep longest cut (r11)
-]
-
-
-def record_isolated(name: str, sf_key: str, triple: list[float]) -> None:
-    """Close-ritual adjudication hook (r10 VERDICT ask #6): merge an
-    isolated fresh-process re-measurement of a flagged entry into
-    ``BENCH_DETAIL.json`` under the ``isolated`` side-map, so the next
-    round's comparison base is the committed artifact itself (median of
-    the triple) instead of a footnote in SCALING.md. Call after the main
-    bench wrote the sidecar::
-
-        python -c "import bench; bench.record_isolated('q', 'sf1', [a,b,c])"
-    """
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(sidecar) as f:
-        detail = json.load(f)
-    iso = detail.setdefault("isolated", {})
-    iso.setdefault(sf_key, {})[name] = {
-        "median": round(sorted(triple)[len(triple) // 2], 3),
-        "runs": [round(t, 3) for t in triple],
-    }
-    with open(sidecar, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # measured passes per SF section (median-of-N); the bench-contract
-    # smoke test sets 1 to keep the end-to-end gate fast
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    from ufload_spark.plans.registry import load_all
-    from ufload_spark.session import get_spark
-
-    spark = get_spark(app_name="ufload_spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = load_all()
-
-    # Warm outside the measured region: one pass on the tiny sf0.001
-    # fixtures compiles every plan's generated code so the measured runs
-    # aren't timing first-call compilation. The noop sink materializes
-    # every column but caches nothing — each measured run scans parquet
-    # end-to-end.
-    # Inter-query hygiene (r6): several queries persist frames and rely on
-    # the ContextCleaner's GC-driven unpersist; across ~300 invocations in
-    # one bench process that cache accumulates, and the resulting executor
-    # memory / GC pressure uniformly inflates LATER queries (measured: the
-    # 50-query suite read 1.27× of r4's 27-query suite on common entries,
-    # while the same queries re-measured in isolation matched r4 exactly).
-    # Clearing the cache after every measured run and forcing a full GC
-    # once per pass keeps each query's number independent of suite size —
-    # persisted INDEXES are parquet on disk (memo_publish), unaffected.
-    import gc as _gc
-
-    def _drain_cache() -> None:
-        spark.catalog.clearCache()
-
-    def _drain_full() -> None:
-        # the expensive half (full JVM GC): once per PASS, not per query —
-        # a per-query System.gc() taxed every sub-second entry ~50 ms
-        _drain_cache()
-        _gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
-
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
-            registry[name].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        _drain_full()
-
-    # Three measured passes, per-query MEDIAN: the first pass doubles as
-    # the JIT warm-up at the real plan shapes (AQE picks different physical
-    # plans per data size); the median filters host-load interference in
-    # both directions — a single lucky run can't mask a regression the way
-    # best-of-N could, and a single stall can't fake one (r2 advice:
-    # ±25% single-run swings at sub-second scale read as regressions).
-    runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _ in range(passes):
-        for name in HEADLINE:
-            fn = registry[name].fn
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs[name].append(time.perf_counter() - t0)
-            _drain_cache()
-        _drain_full()
-    timings = {name: round(sorted(ts)[len(ts) // 2], 3) for name, ts in runs.items()}
-    total = round(sum(timings.values()), 3)
-
-    result = {
-        "metric": "headline_suite_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-
-    # Additional passes at sf1 (10× the sf0.1 fixtures, synthesized once
-    # into .scratch/sf1 by sources/scaleup.py with workload-preserving key
-    # shifts): sub-second sf0.1 queries can't expose driver-side
-    # bottlenecks; this datapoint can. The scale-up SOURCE is the same
-    # resolved sf-dir the headline passes ran against, gated on it actually
-    # being sf0.1 (ADVICE r4: a hardcoded source would silently bench
-    # sf0.1×10 even when the suite ran at a different SF). Three passes,
-    # per-query MEDIAN — the same statistic as the sf0.1 section, so sf1
-    # numbers are comparable round-over-round (r4 reported min-of-2, which
-    # wasn't). The first pass is largely Janino compilation of the new AQE
-    # plan shapes (measured: SimHash 12.2 s cold vs 2.9 s steady); with
-    # three passes the median lands on steady state without hand-excluding
-    # the cold run. Per-query spread (max-min)/median across the passes is
-    # reported as sf1_spread so round-over-round readers can see how much
-    # in-suite noise the medians absorbed. Disable with SPARK_GRAFT_SF1=0.
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9:
-        from ufload_spark.sources.scaleup import ensure_scaled_fixture
-
-        sf1_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch", "sf1"
-        )
-        t0 = time.perf_counter()
-        ensure_scaled_fixture(spark, sf_dir, sf1_dir, factor=10)
-        gen_sec = round(time.perf_counter() - t0, 3)
-        sf1_runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-        for _ in range(passes):
-            for name in HEADLINE:
-                t0 = time.perf_counter()
-                registry[name].fn(spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sf1_runs[name].append(time.perf_counter() - t0)
-                _drain_cache()
-            _drain_full()
-        sf1_timings = {
-            name: round(sorted(ts)[len(ts) // 2], 3) for name, ts in sf1_runs.items()
-        }
-        spreads = sorted(
-            (max(ts) - min(ts)) / max(sorted(ts)[len(ts) // 2], 1e-9)
-            for ts in sf1_runs.values()
-        )
-        result["sf1_queries"] = sf1_timings
-        result["sf1_wall_sec"] = round(sum(sf1_timings.values()), 3)
-        result["sf1_gen_sec"] = gen_sec
-        result["sf1_spread"] = {
-            "p50": round(spreads[len(spreads) // 2], 3),
-            "p90": round(spreads[int(len(spreads) * 0.9)], 3),
-        }
-
-    # Emission contract (r5/r6 lesson: the driver's captured stdout tail
-    # is ~2,048 bytes — BENCH_r05/r06.json both recorded "parsed": null
-    # because even the sf0.1-only per-query map of 76 entries outgrew it).
-    # The FULL result — both per-query maps, spreads, tier annotation —
-    # goes to a committed sidecar, BENCH_DETAIL.json; stdout gets ONE
-    # SMALL line (< 1,500 bytes, pinned by test_bench_contract.py): the
-    # headline metric, the 10 SLOWEST sf0.1 queries (the contract's
-    # "queries" key, truncated to what a reader triages first), counts,
-    # and sf1 totals. Printed last so nothing can scroll it out.
-    detail = dict(result)
-    detail["ann_tiers"] = {
-        # train-included entries charge k-means training to every run;
-        # the probe entries are the production query path (persisted index,
-        # plan-pinned k-means-free). Track round-over-round accordingly.
-        "train_included": ["similarity_ivf_topk", "similarity_pq_topk"],
-        "persisted_probe": ["similarity_ivf_incremental", "similarity_pq_incremental"],
-    }
-    detail["cf_tiers"] = {
-        # same split for item-item CF (r8): the _cosine entry re-pairs every
-        # basket per run (the train tier, the family's headline cost); the
-        # _incremental entry persists train co-occurrence and charges only
-        # the batch delta + touched-part rescoring per run.
-        "train_included": ["part_similarity_cosine"],
-        "persisted_probe": ["part_similarity_incremental"],
-    }
-    try:
-        override = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
-        sidecar = override or os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
-        with open(sidecar, "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-        result["detail_file"] = override or "BENCH_DETAIL.json"
-    except OSError:
-        pass  # read-only checkout: the stdout line still stands alone
-    result.pop("sf1_queries", None)
-    result["n_queries"] = len(timings)
-    result["queries"] = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
-    spark.stop()
-    print(json.dumps(result), flush=True)
-
+__all__ = ["HEADLINE"]
 
 if __name__ == "__main__":
-    sys.exit(main())
+    raise SystemExit(main(["bench"]))

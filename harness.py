@@ -1,0 +1,695 @@
+#!/usr/bin/env python
+"""One run harness for the registered queries, as subcommands:
+
+  python harness.py bench                      # headline bench (bench.py is a shim)
+  python harness.py iso q1,q2 [sf_dir]         # fresh-process timing triples
+  python harness.py spot [--factor N] [--only a,b]
+  python harness.py sweep [sf_dir] [--only a,b] [--family F]
+  python harness.py plans [sf_dir] [--only a,b] [--tag T]
+  python harness.py gate                       # the close gate
+
+Run from the repo root: Spark's Python workers import ufload_spark from the
+working directory. Every subcommand rejects unknown query names (prints
+``UNKNOWN [...]``, exits 2) before the JVM starts.
+
+``bench`` runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
+line::
+
+  {"metric": "...", "value": <total sec>, "unit": "sec",
+   "queries": {...10 slowest, sec...}, "sf": <float>, ...}
+
+Queries go through the ``noop`` sink so every column is actually
+materialized (a bare count() would let column pruning skip most of the
+work). The full detail — sf1 per-query medians, spread stats, ANN
+train-vs-probe tier annotation — is written to ``BENCH_DETAIL.json`` next
+to this script.
+"""
+
+from __future__ import annotations
+
+import argparse
+import gc
+import json
+import os
+import re
+import subprocess
+import sys
+import time
+from collections import Counter
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+
+#: Headline queries: one per major operator family (SURVEY §2 + extensions).
+HEADLINE = [
+    "latest_backup_per_instance",  # flagship: window rank over listing
+    "group_files_per_instance",    # ordered collect aggregate
+    "tpch_q1_pricing_summary",     # wide hash aggregate
+    "tpch_q3_shipping_priority",   # broadcast join + top-k
+    "tpch_q5_local_supplier_volume",  # multi-join star query
+    "tpch_q6_forecast_revenue",    # full-pushdown filter + scalar agg
+    "tpch_q18_large_orders",       # agg-derived semi-join, double shuffle
+    "tpch_q8_market_share",        # 8-way star join, all dims broadcast
+    "tpch_q21_waiting_suppliers",  # EXISTS + NOT EXISTS double correlation
+    "orders_running_total",        # window frame
+    "events_session_windows",      # session windows
+    "events_asof_last_click",      # as-of join (union + ordered window)
+    "archive_merge",               # anti-join merge
+    "delive_password_stomp",       # sanitize projection
+    "dedup_minhash_lsh_pairs",     # MinHash LSH near-dedup
+    "dedup_simhash_pairs",         # SimHash Hamming-bucket retrieval (r2)
+    "pipeline_curate_documents",   # composed curation pipeline
+    "pipeline_training_export",    # curate → split → pack manifest (r2)
+    "similarity_topk_cosine",      # vector top-k
+    "similarity_lsh_topk",         # banded-LSH query-probe ANN (r2)
+    "text_quality_score",          # text scoring map
+    "corpus_pii_scrub",            # regex redaction map (r2)
+    "events_retention_cohorts",    # cohort rollup (r2)
+    # r4 additions — read-only queries from the newer families; appended so
+    # every pre-r4 entry stays comparable round-over-round
+    "similarity_ivf_topk",         # trained k-means quantizer + cell probe (r3)
+    "corpus_contamination_overlap",  # broadcast-hinted shingle audit (r3)
+    "events_range_join_pairs",     # banded bucket range join
+    "text_repetition_ratio",       # dup-n-gram quality signal (r3)
+    # r5 additions (appended; pre-r5 entries stay comparable round-over-round)
+    "similarity_ivf_incremental",  # persisted IVF index: publish + probe (r5)
+    "multimodal_audio_meta",       # RIFF/WAV chunk-walk decode map (r5)
+    "dedup_cluster_keep_best",     # quality-aware cluster dedup (r4)
+    "corpus_paragraph_dedup",      # sub-document boilerplate removal (r5)
+    "similarity_quantized_topk",   # int8 scalar-quantized ANN (r5)
+    "pysource_log_scan",           # Python Data Source API scan (r5)
+    "dedup_bloom_prefilter",       # runtime-Bloom prefiltered dedup (r5)
+    "corpus_dataset_card",         # release manifest aggregate (r5)
+    "text_unigram_logprob",        # unigram-LM quality scorer (r5)
+    "events_hier_rollup",          # continuous-aggregate cascade (r5)
+    "corpus_importance_weights",   # DSIR hashed-feature selection (r5)
+    "dedup_containment",           # prefix-filtered containment join (r5)
+    "similarity_pq_topk",          # product-quantization ADC ANN (r5)
+    "similarity_pq_incremental",   # persisted PQ index: codes-only probe (r5)
+    "dedup_editdist_confirm",      # LSH candidates + bounded-DP levenshtein (r5)
+    "events_concurrency_peak",     # day-partitioned interval sweep-line (r5)
+    "quality_constraint_audit",    # one-scan Deequ-style constraint suite (r5)
+    "pipeline_pit_features",       # leakage-free PIT feature join (r5)
+    "dedup_substring_spans",       # stride-1 span dedup, interval union (r5)
+    "text_bpe_learn",              # BPE tokenizer training rounds (r5)
+    "embedding_pca_power",         # integer Gramian + power iteration (r5)
+    "graph_pagerank_purchases",    # integer-exact PageRank iterations (r5)
+    # r6 additions (appended; earlier entries stay comparable round-over-round)
+    "text_bm25_search",            # BM25 ranked retrieval, decimal-exact sums (r6)
+    "graph_triangle_count",        # degree-ordered oriented wedge join (r6)
+    "events_rfm_segmentation",     # histogram-quantile RFM, no global ntile (r6)
+    "orders_cohort_ltv",           # cohort LTV triangle, bounded windows (r6)
+    "part_recommendations_topn",   # a-priori pair mining + lift-ranked top-N (r6)
+    "orders_rolling_90d_by_customer",  # RANGE-frame trailing-spend window (r6)
+    "text_chunk_documents",        # map-only sliding-window RAG chunking (r6)
+    "graph_label_propagation",     # synchronous weighted-mode LPA rounds (r6)
+    "search_fuzzy_partnames",      # rarest-trigram retrieval + levenshtein (r6)
+    "orders_acf_daily_revenue",    # lagged Pearson over the bounded day frame (r6)
+    "events_bot_detection",        # hourly-rate + CoV² regularity panel (r6)
+    "parts_abc_xyz_matrix",        # binned Pareto × demand-CoV matrix (r6)
+    "orders_bootstrap_ci",         # Poisson bootstrap, ×B row-local fan-out (r6)
+    "graph_bfs_distances",         # frontier-broadcast BFS rounds (r6)
+    "events_outlier_mad",          # two-pass median/MAD over cents histograms (r6)
+    "events_countmin_estimate",    # mergeable CM sketch + probe audit (r6)
+    "multimodal_video_scene_cuts", # per-video sequential aHash walk, map-only (r6)
+    "orders_mannwhitney_u",        # segmented-prefix-sum exact rank test (r6)
+    "graph_kcore_peel",            # synchronous degeneracy peel rounds (r6)
+    "text_rake_keywords",          # RAKE phrase mining, one vocab shuffle (r6)
+    "multimodal_image_phash",      # fixed-point DCT perceptual hash map (r6)
+    "orders_seasonal_decompose",   # integer MA/seasonal/residual split (r6)
+    "embedding_jl_projection",     # columnar zip_with sign-fold, no shuffle (r6)
+    "orders_forecast_holt_backtest",  # 28-lag broadcast-weight smoother (r6)
+    "events_emd_drift",            # Wasserstein-1 over the bounded bin frame (r6)
+    "multimodal_audio_spectrum",   # vectorized fixed-point DFT Arrow map (r6)
+    "lineitem_price_elasticity",   # grouped log-log OLS, two exchanges (r6)
+    # r7 additions
+    "graph_modularity",            # LPA partition quality, exact integer Q (r7)
+    "part_similarity_cosine",      # item-item CF, whale-capped pair join (r7)
+    "orders_changepoint_binseg",   # binseg split over the bounded day frame (r7)
+    "lineitem_mutual_information", # 36-cell contingency MI, one scan (r7)
+    "corpus_negative_sampling",    # ring-bucket as-of negatives, one window (r7)
+    "text_nb_lang_classifier",     # NB train+score, broadcast model (r7)
+    "orders_forecast_hw_backtest", # Holt-Winters over the bounded day frame (r7)
+    "events_markov_absorption",    # K-step conversion probability, micro-exact (r7)
+    # r8 additions
+    "part_similarity_incremental", # persisted CF co-occurrence: delta-merge probe (r8)
+    "restore_end_to_end",          # composed SURVEY §3.1 restore lifecycle (r8)
+    "pipeline_incremental_ingest", # composed nightly ingest funnel, persisted gates (r8)
+    "text_perplexity_buckets",     # CCNet tertiles via histogram quantiles (r8)
+    "dedup_winnowing_pairs",       # MOSS window-min fingerprints + fp equi-join (r8)
+    "graph_hits_scores",           # HITS coupled iterations, integer mass (r8)
+    "events_hmm_viterbi",          # grouped Arrow DP kernel, per-user lattice (r8)
+    "customers_record_linkage",    # blocked FS linkage + confusion fold (r8)
+    # r9 additions
+    "graph_pagerank_bucketed",     # src-bucketed edge table, exchange-free edge side (r9)
+    "dedup_semantic_pairs",        # SemDeDup: corpus-derived k-means cells gate cosine pairs (r9)
+    "dedup_winnowing_incremental", # persisted fingerprint table, batch fp-probe (r9)
+    "graph_ppr_seeded",            # personalized PageRank, sparse seeded frontier (r9)
+    "streaming_neardup_gate",      # SimHash admission gate, replay-idempotent publish (r9)
+    "dedup_semantic_pairs_hier",   # two-level quantizer probe, O(sqrt k) assignment (r9)
+    # r10 additions
+    "graph_lpa_bucketed",          # LPA over the src-bucketed edge table, no label broadcast (r10)
+    "graph_kcore_bucketed",        # k-core peel, one pair exchange/round via parity alternation (r10)
+    "dedup_semantic_pairs_overlap",# epsilon-overlap boundary pass, 2nd membership in-band (r10)
+    "dedup_semantic_incremental",  # published-model batch admit gate, BxN pair kernel (r10)
+    "graph_bfs_bucketed",          # frontier BFS over the bucketed edge table (r10)
+    "multimodal_audio_vad_segments",  # PCM energy islands, rank-difference runs (r10)
+    "customers_linkage_sorted_neighborhood",  # merge/purge SN candidate tier (r10)
+    "dedup_minhash_estimate_error_eval",  # MinHash estimator audit, integer micro Jaccard (r10)
+    # r11 additions
+    "text_quality_logreg",         # learned quality filter, integer-exact GD steps (r11)
+    "text_quality_logreg_eval",    # confusion + exact tie-aware AUC audit (r11)
+    "text_quality_logreg_apply",   # published-model ingest scoring, aggregate-free (r11)
+    "multimodal_video_neardup",    # frame-shingle group pairs, df-capped buckets (r11)
+    "multimodal_video_neardup_incremental",  # published-shingle ingest gate (r11)
+    "multimodal_video_keep_best_cut",  # footage-cluster CC, keep longest cut (r11)
+]
+
+#: spot tier: the heavy families — graph bucketed tiers, SemDeDup tiers, CF,
+#: ANN incremental, streaming gates, LSH, and the composed flagship — the
+#: ops whose scale behavior has historically broken first
+SPOT = [
+    "graph_pagerank_bucketed",
+    "graph_lpa_bucketed",
+    "graph_kcore_bucketed",
+    "graph_bfs_bucketed",
+    "dedup_semantic_pairs",
+    "dedup_semantic_pairs_hier",
+    "dedup_semantic_incremental",
+    "part_similarity_cosine",
+    "part_similarity_incremental",
+    "similarity_ivf_incremental",
+    "similarity_pq_incremental",
+    "dedup_minhash_lsh_pairs",
+    "streaming_ingest_gate",
+    "streaming_neardup_gate",
+    "restore_end_to_end",
+    "text_quality_logreg",
+    # r11: the decode-bound Arrow-map class (every frame of every video
+    # synthesized, sliced and IHDR-decoded in Python) — a fragility mode
+    # none of the shuffle-shaped entries above exercise
+    "multimodal_video_neardup",
+    "multimodal_video_neardup_incremental",
+    "multimodal_video_keep_best_cut",
+]
+
+#: exact-integer / fixed-point statistics whose oracle parity depends on
+#: floor-division and rounding edges that shift with data volume
+FIXEDPOINT = [
+    "events_ab_test_ztest",
+    "events_burstiness_fano",
+    "events_chi2_independence",
+    "events_cuped_adjustment",
+    "events_cusum_drift",
+    "events_diff_in_diff",
+    # not fixed-point, but the same invisible-until-scale class: the HLL
+    # HIP-vs-composite estimator split only appears past coupon mode
+    "events_distinct_rollup_sketch",
+    "events_emd_drift",
+    "events_retention_decay_fit",
+    "events_entropy_rate",
+    "events_ks_drift_binned",
+    "events_markov_stationary",
+    "events_outlier_mad",
+    "events_power_analysis",
+    "events_survival_km",
+    "customer_spend_gini",
+    "graph_assortativity",
+    "lineitem_anova_linenumber",
+    "lineitem_correlation_matrix",
+    "lineitem_ols_price_model",
+    "lineitem_price_elasticity",
+    "orders_acf_daily_revenue",
+    "orders_benford_digits",
+    "orders_bootstrap_ci",
+    "orders_changepoint_binseg",
+    "orders_forecast_holt_backtest",
+    "orders_forecast_hw_backtest",
+    "orders_forecast_naive_backtest",
+    "orders_mannwhitney_u",
+    "orders_seasonal_decompose",
+    "orders_theilsen_trend",
+    "orders_mann_kendall_trend",
+    "events_sprt_monitor",
+    "events_hmm_viterbi",
+    "graph_hits_scores",
+    "parts_croston_intermittent",
+    "streaming_changepoint_monitor",
+    "streaming_emd_monitor",
+    "supplier_concentration_hhi",
+    "text_zipf_fit",
+]
+
+#: probabilistic sketches / estimators / samplers whose contracts (error
+#: envelopes, estimator mode switches, sampling thresholds) only stress at
+#: volume — the HLL HIP-vs-composite split was invisible at sf0.01 and red
+#: at sf0.1 (r7, commit 3cf751b); this tier makes that class systematic
+SKETCH = [
+    "events_distinct_rollup_sketch",  # HLL union vs direct, envelope contract
+    "events_cumulative_distinct_users",
+    "events_countmin_estimate",  # CMS merge + probe audit
+    "streaming_countmin_sketch",  # CMS live vs batch parity
+    "events_survival_km",  # KM product-limit fixed-point ladder
+    "approx_distinct_parts",  # HLL vs exact, rsd contract
+    "distinct_parts_per_flag",
+    "orders_approx_quantiles",  # KLL-style quantile contract
+    "features_quantile_binning",  # content-addressed sample thresholds
+    "corpus_stratified_sample",  # deterministic hash-bucket sampling
+    "corpus_reservoir_per_lang",
+    "corpus_priority_sample",
+    "dedup_bloom_prefilter",  # runtime Bloom FPP behavior
+    "multimodal_frame_sample",
+]
+
+FAMILIES = {"fixedpoint": FIXEDPOINT, "sketch": SKETCH}
+
+#: ``plans`` TSV columns after ``query``: each a count of regex hits in the
+#: ``explain("formatted")`` text (``scans`` / ``dup_scan_tables`` are derived)
+PLAN_COUNTS = {
+    "exchanges": r"\bExchange\b",
+    "reused_exch": r"ReusedExchange",
+    "bhj": r"BroadcastHashJoin",
+    "smj": r"SortMergeJoin",
+    "shj": r"ShuffledHashJoin",
+    "bnlj": r"BroadcastNestedLoopJoin|CartesianProduct",
+    "py_nodes": r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas"
+    r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|PythonMapInArrow",
+    "windows": r"\bWindow\b",
+    "subqueries": r"Subquery",
+}
+
+
+def start(cmd: str, names, plain: bool = False, mem: str | None = None):
+    """Load the registry, reject unknown ``names`` (exit 2, no JVM yet),
+    then build the session: ``get_spark`` for every subcommand except
+    ``sweep`` (``plain``), which models the verification driver with a
+    plain session carrying none of the engine's build confs."""
+    from ufload_spark.plans.registry import load_all
+
+    registry = load_all()
+    unknown = sorted(set(names) - set(registry))
+    if unknown:
+        print(f"UNKNOWN {unknown}", flush=True)
+        raise SystemExit(2)
+    if plain:
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master("local[32]")
+            .config("spark.driver.memory", "8g")
+            .config("spark.ui.showConsoleProgress", "false")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+    else:
+        from ufload_spark.session import get_spark
+
+        spark = get_spark(app_name=f"ufload_spark-{cmd}", driver_memory=mem)
+        spark.sparkContext.setLogLevel("ERROR")
+    return spark, registry
+
+
+def run(spark, registry, name: str, sf_dir: str) -> float:
+    """Push one registered query through the noop sink; seconds taken."""
+    t0 = time.perf_counter()
+    registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def median(ts: list[float]) -> float:
+    return sorted(ts)[len(ts) // 2]
+
+
+def triple(ts: list[float]) -> dict:
+    return {"median": round(median(ts), 3), "runs": [round(t, 3) for t in ts]}
+
+
+def drain(spark, full: bool = False) -> None:
+    """Inter-query hygiene (r6): several queries persist frames and rely on
+    the ContextCleaner's GC-driven unpersist; across ~300 invocations in
+    one bench process that cache accumulates, and the resulting executor
+    memory / GC pressure uniformly inflates LATER queries (measured: the
+    50-query suite read 1.27× of r4's 27-query suite on common entries,
+    while the same queries re-measured in isolation matched r4 exactly).
+    Clearing the cache after every measured run and forcing a full GC
+    once per pass keeps each query's number independent of suite size —
+    persisted INDEXES are parquet on disk (memo_publish), unaffected.
+    ``full`` is the expensive half (full JVM GC): once per PASS, not per
+    query — a per-query System.gc() taxed every sub-second entry ~50 ms."""
+    spark.catalog.clearCache()
+    if full:
+        gc.collect()
+        try:
+            spark._jvm.System.gc()
+        except Exception:
+            pass
+
+
+def timed_passes(spark, registry, names, sf_dir: str, passes: int) -> dict:
+    """``passes`` rounds over ``names``: one run each, drained per query,
+    full drain per pass. Returns every run's seconds per name."""
+    runs: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(passes):
+        for name in names:
+            runs[name].append(run(spark, registry, name, sf_dir))
+            drain(spark)
+        drain(spark, full=True)
+    return runs
+
+
+def bench_passes() -> int:
+    # measured passes per timed section (median-of-N); the bench-contract
+    # smoke test sets 1 to keep the end-to-end gate fast
+    return int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
+
+
+def record_isolated(name: str, sf_key: str, runs: list[float]) -> None:
+    """Close-ritual adjudication hook (r10 VERDICT ask #6): merge an
+    isolated fresh-process re-measurement of a flagged entry (e.g. an
+    ``iso`` triple) into ``BENCH_DETAIL.json`` under the ``isolated``
+    side-map, so the next round's comparison base is the committed artifact
+    itself (median of the triple) instead of a footnote in SCALING.md. Call
+    after the main bench wrote the sidecar::
+
+        python -c "import harness; harness.record_isolated('q', 'sf1', [a,b,c])"
+    """
+    sidecar = os.path.join(ROOT, "BENCH_DETAIL.json")
+    with open(sidecar) as f:
+        detail = json.load(f)
+    detail.setdefault("isolated", {}).setdefault(sf_key, {})[name] = triple(runs)
+    with open(sidecar, "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
+
+
+def bench(args) -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    passes = bench_passes()
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark, registry = start("bench", HEADLINE)
+
+    # Warm outside the measured region: one pass on the tiny sf0.001
+    # fixtures compiles every plan's generated code so the measured runs
+    # aren't timing first-call compilation. The noop sink caches nothing —
+    # each measured run scans parquet end-to-end.
+    warm_dir = "/root/testdata/sf0.001"
+    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
+        timed_passes(spark, registry, HEADLINE, warm_dir, 1)
+
+    # Measured passes, per-query MEDIAN: the first pass doubles as the JIT
+    # warm-up at the real plan shapes (AQE picks different physical plans
+    # per data size); the median filters host-load interference in both
+    # directions — a single lucky run can't mask a regression the way
+    # best-of-N could, and a single stall can't fake one (r2 advice:
+    # ±25% single-run swings at sub-second scale read as regressions).
+    runs = timed_passes(spark, registry, HEADLINE, sf_dir, passes)
+    timings = {name: round(median(ts), 3) for name, ts in runs.items()}
+    total = round(sum(timings.values()), 3)
+    result = {
+        "metric": "headline_suite_wall_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+    }
+
+    # Additional passes at sf1 (10× the sf0.1 fixtures, synthesized once
+    # into .scratch/sf1 by sources/scaleup.py with workload-preserving key
+    # shifts): sub-second sf0.1 queries can't expose driver-side
+    # bottlenecks; this datapoint can. The scale-up SOURCE is the resolved
+    # sf-dir the headline passes ran against, gated on it actually being
+    # sf0.1 (ADVICE r4: a hardcoded source would silently bench sf0.1×10
+    # even when the suite ran at a different SF). Same statistic as the
+    # sf0.1 section (per-query median), so sf1 numbers are comparable
+    # round-over-round; the first pass is largely Janino compilation of
+    # the new AQE plan shapes (SimHash 12.2 s cold vs 2.9 s steady).
+    # Per-query spread (max-min)/median is reported as sf1_spread so
+    # readers can see how much in-suite noise the medians absorbed.
+    # Disable with SPARK_GRAFT_SF1=0.
+    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs(sf - 0.1) < 1e-9:
+        from ufload_spark.sources.scaleup import ensure_scaled_fixture
+
+        sf1_dir = os.path.join(ROOT, ".scratch", "sf1")
+        t0 = time.perf_counter()
+        ensure_scaled_fixture(spark, sf_dir, sf1_dir, factor=10)
+        gen_sec = round(time.perf_counter() - t0, 3)
+        sf1_runs = timed_passes(spark, registry, HEADLINE, sf1_dir, passes)
+        sf1_timings = {name: round(median(ts), 3) for name, ts in sf1_runs.items()}
+        spreads = sorted(
+            (max(ts) - min(ts)) / max(median(ts), 1e-9) for ts in sf1_runs.values()
+        )
+        result["sf1_queries"] = sf1_timings
+        result["sf1_wall_sec"] = round(sum(sf1_timings.values()), 3)
+        result["sf1_gen_sec"] = gen_sec
+        result["sf1_spread"] = {
+            "p50": round(spreads[len(spreads) // 2], 3),
+            "p90": round(spreads[int(len(spreads) * 0.9)], 3),
+        }
+
+    # Emission contract (r5/r6 lesson: the driver's captured stdout tail
+    # is ~2,048 bytes — BENCH_r05/r06.json both recorded "parsed": null
+    # because even the sf0.1-only per-query map outgrew it). The FULL
+    # result goes to the committed sidecar BENCH_DETAIL.json; stdout gets
+    # ONE SMALL line (< 1,500 bytes, pinned by test_bench_contract.py):
+    # the headline metric, the 10 SLOWEST sf0.1 queries, counts and sf1
+    # totals. Printed last so nothing can scroll it out.
+    detail = dict(result)
+    detail["ann_tiers"] = {
+        # train-included entries charge k-means training to every run;
+        # the probe entries are the production query path (persisted index,
+        # plan-pinned k-means-free). Track round-over-round accordingly.
+        "train_included": ["similarity_ivf_topk", "similarity_pq_topk"],
+        "persisted_probe": ["similarity_ivf_incremental", "similarity_pq_incremental"],
+    }
+    detail["cf_tiers"] = {
+        # same split for item-item CF (r8): the _cosine entry re-pairs every
+        # basket per run (the train tier, the family's headline cost); the
+        # _incremental entry persists train co-occurrence and charges only
+        # the batch delta + touched-part rescoring per run.
+        "train_included": ["part_similarity_cosine"],
+        "persisted_probe": ["part_similarity_incremental"],
+    }
+    try:
+        override = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+        with open(override or os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
+            json.dump(detail, f, indent=1, sort_keys=True)
+        result["detail_file"] = override or "BENCH_DETAIL.json"
+    except OSError:
+        pass  # read-only checkout: the stdout line still stands alone
+    result.pop("sf1_queries", None)
+    result["n_queries"] = len(timings)
+    result["queries"] = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    spark.stop()
+    print(json.dumps(result), flush=True)
+    return 0
+
+
+def iso(args) -> int:
+    """Isolated fresh-process timing triples for named queries — the r10
+    close-ritual adjudication measurement: ONE fresh JVM runs the named
+    queries ``$SPARK_GRAFT_BENCH_PASSES`` times each through the noop sink
+    (median = the comparable statistic; the first run doubles as the
+    JIT/plan warm-up)."""
+    spark, registry = start("iso", args.names)
+    runs = timed_passes(spark, registry, args.names, args.sf_dir, bench_passes())
+    spark.stop()
+    out = {name: triple(ts) for name, ts in runs.items()}
+    print(json.dumps({"sf_dir": args.sf_dir, "queries": out}))
+    return 0
+
+
+def spot(args) -> int:
+    """Next-scale spot tier of the close ritual (r10 VERDICT ask #4): the
+    r10 close found a planner defect (broadcast-building the persisted
+    bucketed edge side) invisible at sf0.1 and fatal at sf1; the next
+    defect class — skewed-key shuffle spill, AQE plan flips, state-store
+    growth — may be invisible at sf1. Synthesizes a factor-N fixture
+    (factor 30 ≈ sf3: ~18M lineitem) from ``$SPARK_GRAFT_SF_DIR`` via
+    ``sources/scaleup.py`` and runs the SPOT families (or ``--only``, for
+    the deeper factor-100 tier where only the historically heaviest few
+    are worth the wall time) through it once. One warm pass, no medians:
+    the point is does-it-still-run / does-the-plan-flip, not a
+    statistics-grade number. Record the output in SCALING.md at close."""
+    from ufload_spark.sources.scaleup import ensure_scaled_fixture
+
+    names = args.only or SPOT
+    # Size the single local JVM like the deployment the factor models: at
+    # factor >= 100 (~sf10 on 32 threads) 8g is ~250m per task, an eighth
+    # of production per-core guidance — the r11 first run OOMed the pair
+    # aggregate on sizing alone after the broadcast-threshold fix. 24g is
+    # 750m per task, still lean for a real cluster.
+    mem = os.environ.get("SPARK_GRAFT_SPOT_MEM", "24g" if args.factor >= 100 else "8g")
+    spark, registry = start("spot", names, mem=mem)
+    dest = os.path.join(ROOT, ".scratch", f"sfx{args.factor}")
+    t0 = time.perf_counter()
+    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ensure_scaled_fixture(spark, src, dest, factor=args.factor)
+    gen_s = round(time.perf_counter() - t0, 1)
+    timings: dict[str, float] = {}
+    failures: dict[str, str] = {}
+    for name in names:
+        try:
+            timings[name] = round(run(spark, registry, name, dest), 2)
+        except Exception as ex:  # a spot failure IS the finding
+            failures[name] = f"{type(ex).__name__}: {ex}"[:300]
+        drain(spark)
+    spark.stop()
+    print(
+        json.dumps(
+            {
+                "metric": "spotbench_wall_sec",
+                "value": round(sum(timings.values()), 2),
+                "unit": "sec",
+                "factor": args.factor,
+                "gen_sec": gen_s,
+                "queries": timings,
+                "failures": failures,
+            }
+        )
+    )
+    return 0
+
+
+def sweep(args) -> int:
+    """Full-registry strict sweep: every registered query (or ``--only`` /
+    ``--family`` subset) vs its DuckDB oracle under the repo's TYPE-STRICT
+    comparator, at sf0.01 (the verification driver's comparison scale) by
+    default.
+
+    The ``fixedpoint`` family is the round-close sf0.1 tier (r6 VERDICT
+    ask #8): exact-integer statistics whose rounding/floor-division edges
+    only appear at scale — the EMD defect was invisible at sf0.001 and
+    fatal at sf0.01. The ``sketch`` family (r7 VERDICT ask #8) is the same
+    discipline for estimators: error envelopes, mode switches (the HLL
+    HIP-vs-composite split caught at sf0.1 in r7), sampling thresholds.
+    Close ritual: ``harness.py sweep /root/testdata/sf0.1 --family
+    fixedpoint --family sketch`` after the full sf0.01 sweep."""
+    from tests.oracle import compare
+
+    only = set(args.only or [])
+    for fam in args.family or []:
+        only |= set(FAMILIES[fam])
+    spark, registry = start("sweep", only, plain=True)
+    names = sorted(only or registry)
+    t0 = time.time()
+    fails = []
+    for name in names:
+        try:
+            q = registry[name]
+            compare(q.fn(spark, args.sf_dir), q.oracle, args.sf_dir)
+        except Exception as ex:  # noqa: BLE001 — report and continue
+            fails.append(name)
+            print(f"FAIL {name} {str(ex)[:200]}", flush=True)
+    spark.stop()
+    took = time.time() - t0
+    print(f"DONE {len(names)} queries, {len(fails)} fails, {took:.0f}s", flush=True)
+    return 1 if fails else 0
+
+
+def plans(args) -> int:
+    """Registry-wide physical-plan audit (guide §1/§7.2): one TSV line per
+    query counting the plan features that matter for the optimization
+    checklist — parquet scans per relation (duplicated-subtree smell),
+    Exchange / ReusedExchange nodes, join strategies, Python-boundary
+    nodes, windows, subqueries.
+
+    The raw ``explain("formatted")`` goes to ``.scratch/plan_audit/<q>.txt``
+    (not committed), or with ``--tag T`` to the committed evidence file
+    ``plans/$SPARK_GRAFT_PLAN_DIR/<q>_<T>.txt`` (round dir default r12).
+    With ``SPARK_GRAFT_EXECUTED=1`` each query is first RUN (``collect()``
+    on its own QueryExecution; outputs are bounded at the fixture scales)
+    and the dump is the EXECUTED (AQE-final) plan, the evidence format for
+    claims that depend on runtime exchange reuse or AQE re-optimization."""
+    executed = os.environ.get("SPARK_GRAFT_EXECUTED", "0") == "1"
+    if args.tag:
+        rnd = os.environ.get("SPARK_GRAFT_PLAN_DIR", "r12")
+        out_dir = os.path.join(ROOT, "plans", rnd)
+    else:
+        out_dir = os.path.join(ROOT, ".scratch", "plan_audit")
+    os.makedirs(out_dir, exist_ok=True)
+    spark, registry = start("plans", args.only or [])
+    print("query\tscans\tdup_scan_tables\t" + "\t".join(PLAN_COUNTS), flush=True)
+    for name in sorted(args.only or registry):
+        try:
+            df = registry[name].fn(spark, args.sf_dir)
+            if executed:
+                df.collect()
+            txt = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as ex:  # noqa: BLE001
+            print(f"{name}\tERROR\t{str(ex)[:120]}", flush=True)
+            continue
+        suffix = f"_{args.tag}" if args.tag else ""
+        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as f:
+            f.write(txt)
+        scans = re.findall(r"Scan parquet\s*(\S*)", txt)
+        scans += re.findall(r"Scan In-memory table\s*(\S*)", txt)
+        # location lines identify the relation for path-based scans
+        locs = re.findall(r"Location:.*?\[(.*?)\]", txt)
+        base = Counter(os.path.basename(loc.rstrip("/")) for loc in locs)
+        dup = sorted(t for t, c in base.items() if c > 1)
+        cells = [name, str(len(scans)), ",".join(dup) or "-"]
+        cells += [str(len(re.findall(p, txt))) for p in PLAN_COUNTS.values()]
+        print("\t".join(cells), flush=True)
+    spark.stop()
+    return 0
+
+
+def gate(args) -> int:
+    """Close gate: the default suite, then the ``slow``-marked tests that
+    ``pytest.ini`` deselects by default, then the full sf0.01 sweep; echoes
+    each run and ends with the three summary lines for CHANGES.md."""
+    steps = [
+        ("pytest", ["-m", "pytest", "tests/", "-q"]),
+        ("pytest -m slow", ["-m", "pytest", "tests/", "-m", "slow", "-q"]),
+        ("sweep sf0.01", [os.path.join(ROOT, "harness.py"), "sweep"]),
+    ]
+    summary, rc = [], 0
+    for label, argv in steps:
+        last = ""
+        with subprocess.Popen(
+            [sys.executable, *argv], cwd=ROOT, stdout=subprocess.PIPE, text=True
+        ) as proc:
+            for line in proc.stdout:
+                print(line, end="", flush=True)
+                last = line.strip() or last
+        rc = rc or proc.returncode
+        summary.append(f"{label}: {last}")
+    print("\n".join(summary), flush=True)
+    return rc
+
+
+def main(argv: list[str] | None = None) -> int:
+    def names(s: str) -> list[str]:
+        return [n for n in s.split(",") if n]
+
+    sf_env = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    p = argparse.ArgumentParser(prog="harness.py", description=__doc__.split("\n\n")[0])
+    sub = p.add_subparsers(dest="cmd", required=True)
+    sub.add_parser("bench").set_defaults(func=bench)
+    s = sub.add_parser("iso")
+    s.add_argument("names", type=names)
+    s.add_argument("sf_dir", nargs="?", default=sf_env)
+    s.set_defaults(func=iso)
+    s = sub.add_parser("spot")
+    s.add_argument("--factor", type=int, default=30)
+    s.add_argument("--only", type=names)
+    s.set_defaults(func=spot)
+    s = sub.add_parser("sweep")
+    s.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    s.add_argument("--only", type=names)
+    s.add_argument("--family", action="append", choices=sorted(FAMILIES))
+    s.set_defaults(func=sweep)
+    s = sub.add_parser("plans")
+    s.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    s.add_argument("--only", type=names)
+    s.add_argument("--tag")
+    s.set_defaults(func=plans)
+    sub.add_parser("gate").set_defaults(func=gate)
+    args = p.parse_args(argv)
+    return args.func(args)
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

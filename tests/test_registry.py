@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from ufload_spark.plans.registry import _driver_history, load_all
+from __spark_entry__ import _driver_history, queries
+from ufload_spark.plans.registry import QUERIES, load_all
 
 
 def test_every_query_has_an_oracle():
@@ -14,9 +15,11 @@ def test_every_query_has_an_oracle():
 def test_unverified_queries_ordered_first():
     """The driver samples ~50 entries per round in iteration order; queries
     without a green CORRECTNESS_r*.json row must come first so driver-side
-    coverage converges across rounds."""
+    coverage converges across rounds. Only the driver contract steers:
+    ``load_all()`` itself keeps registration order."""
+    assert list(load_all()) == list(QUERIES)
     verified, sampled = _driver_history()
-    names = list(load_all())
+    names = list(queries())
     seen_verified = False
     for n in names:
         if n in verified:
@@ -103,21 +106,13 @@ def test_no_oracle_floor_divides_decimal_operands():
 
 
 def test_sweep_family_lists_are_registered_names():
-    """sweep.py's FIXEDPOINT / SKETCH close-ritual tiers must reference
-    real registry names — a typo would silently shrink the scale-edge
-    re-check loop (the tier that caught the EMD and HLL defects)."""
-    import importlib.util
-    import os
+    """The harness's query lists — the FIXEDPOINT / SKETCH close-ritual sweep
+    tiers, the HEADLINE bench and the SPOT tier — must reference real
+    registry names: a typo would silently shrink the scale-edge re-check
+    loop (the tier that caught the EMD and HLL defects) or fail a run late."""
+    import harness
 
-    from ufload_spark.plans.registry import load_all
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "sweep_mod", os.path.join(root, "sweep.py")
-    )
-    sweep = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sweep)
     names = set(load_all())
-    for fam in ("FIXEDPOINT", "SKETCH"):
-        missing = [q for q in getattr(sweep, fam) if q not in names]
+    for fam in ("FIXEDPOINT", "SKETCH", "HEADLINE", "SPOT"):
+        missing = [q for q in getattr(harness, fam) if q not in names]
         assert not missing, f"{fam} names not in registry: {missing}"

@@ -44,49 +44,9 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[SparkQue
     return wrap
 
 
-def _driver_history(repo_root: str | None = None) -> tuple[set[str], set[str]]:
-    """``(verified, sampled)`` name sets from the CORRECTNESS_r*.json artifacts.
-
-    The verification driver samples at most ~50 registry entries per round, in
-    iteration order. To converge on full driver-side coverage we order the
-    registry so unverified queries come first; this reads the accumulated
-    round artifacts to know which ones those are. "Verified" means a fully
-    green row — rows, schema, AND value hash all matching with no error; a
-    hash-mismatched row is an unverified query that must re-sort to the front
-    of the sample. "Sampled" is any appearance at all, green or not. Missing
-    or malformed artifacts degrade gracefully to plain registration order.
-    """
-    import glob
-    import json
-    import os
-
-    if repo_root is None:
-        repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    verified: set[str] = set()
-    sampled: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            sampled.add(name)
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and row.get("err") is None
-            ):
-                verified.add(name)
-    return verified, sampled
-
-
 def load_all() -> dict[str, Query]:
     """Import every operator module so its registrations run, then return
-    the populated registry, ordered never-driver-verified-first (see
-    :func:`_driver_history`)."""
+    the populated registry in registration order."""
     # Imports are side-effectful (decorators populate QUERIES).
     from ufload_spark.operators import (  # noqa: F401
         analytics,
@@ -120,52 +80,4 @@ def load_all() -> dict[str, Query]:
     )
     from ufload_spark.streaming import jobs  # noqa: F401
 
-    verified, sampled = _driver_history()
-    # Unverified bucket, highest-urgency first: (1) sampled by the driver but
-    # never fully green (known fails being re-fixed), (2) registered in a
-    # prior round but never reached by the driver's ~50-query sample,
-    # (3) everything newly registered this round. Verified queries last.
-    ordered = {n: q for n, q in QUERIES.items() if n in sampled and n not in verified}
-    ordered.update(
-        {n: q for n, q in QUERIES.items() if n in _PENDING_BACKLOG and n not in sampled}
-    )
-    ordered.update({n: q for n, q in QUERIES.items() if n not in sampled})
-    ordered.update({n: q for n, q in QUERIES.items() if n in verified})
-    return ordered
-
-
-#: Registered in a prior round but never reached by the driver's sample —
-#: pinned ahead of this round's new registrations so the backlog drains first.
-#: (r8: the 26 names VERDICT r7 "What's missing" #2 lists as locally green
-#: but driver-unexposed; all pass the judge's independent sf0.01 sweep, so
-#: the only missing evidence is a driver-green row.)
-_PENDING_BACKLOG = frozenset(
-    {
-        "privacy_k_anonymity",
-        "privacy_dp_noisy_counts",
-        "quality_reconciliation",
-        "similarity_knn_label_vote",
-        "similarity_ncm_classify",
-        "similarity_quantized_recall_eval",
-        "similarity_mmr_rerank",
-        "embedding_jl_projection",
-        "sql_recursive_bom",
-        "diagnostics_key_skew",
-        "events_attribution_last_touch",
-        "orders_acf_daily_revenue",
-        "events_cumulative_distinct_users",
-        "orders_rolling_90d_by_customer",
-        "events_churn_hazard",
-        "events_survival_km",
-        "orders_theilsen_trend",
-        "orders_revenue_growth",
-        "orders_forecast_naive_backtest",
-        "orders_seasonal_decompose",
-        "orders_forecast_holt_backtest",
-        "orders_changepoint_binseg",
-        "orders_forecast_hw_backtest",
-        "streaming_countmin_sketch",
-        "streaming_emd_monitor",
-        "streaming_changepoint_monitor",
-    }
-)
+    return dict(QUERIES)
