@@ -486,3 +486,27 @@ def test_gate_readers_skip_staging_debris(spark, tmp_path):
         r["fp"] for r in read_ingest_admitted(spark, target).collect()
     } == {"fpA", "fpB"}
     assert {r["doc_id"] for r in read_admitted(spark, target).collect()} == {4, 8}
+
+
+@pytest.mark.parametrize("gate", ["ingest", "neardup"])
+def test_all_duplicate_batch_reads_back_empty(spark, tmp_path, gate):
+    """A micro-batch whose every document is already in the corpus index
+    publishes no segment; the admitted table must then read back empty,
+    with the gate's segment columns (it used to raise PATH_NOT_FOUND)."""
+    from ufload_spark.operators.dedup import simhash_frame
+    from ufload_spark.streaming import jobs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    batch = docs.where((F.col("doc_id") % 4 == 0) & (F.col("doc_id") < 200))
+    target = str(tmp_path / "admitted")
+    if gate == "ingest":
+        norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+        index = batch.select(F.md5(norm).alias("fp")).distinct()
+        jobs.ingest_gate_batch(batch, target, index, 0)
+        got = jobs.read_ingest_admitted(spark, target)
+        assert got.columns == ["fp", "doc_id", "source"]
+    else:
+        jobs.neardup_gate_batch(batch, target, simhash_frame(batch), 0)
+        got = jobs.read_admitted(spark, target)
+        assert got.columns == ["doc_id", "source", "simhash"]
+    assert got.count() == 0

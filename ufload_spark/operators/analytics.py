@@ -1557,7 +1557,7 @@ def _cf_pairs_bucketed_table(spark: SparkSession, sf_dir: str) -> tuple[str, int
     import os
 
     from ufload_spark.sources.layout import _unique_table
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_publish, sf_tag
 
     key = os.path.abspath(sf_dir)
     memo = _CF_PAIRS_BUCKETED.get(key)
@@ -1577,8 +1577,7 @@ def _cf_pairs_bucketed_table(spark: SparkSession, sf_dir: str) -> tuple[str, int
     n_buckets = int(
         min(CF_BUCKETS_MAX, max(CF_BUCKETS_MIN, co_bytes // CF_BUCKET_TARGET_BYTES))
     )
-    suffix = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = _unique_table(spark, f"cf_co_pairs_b_{suffix}")
+    name = _unique_table(spark, f"cf_co_pairs_b_{sf_tag(sf_dir)}")
     (
         spark.read.parquet(co_path)
         # one task per bucket → one file per bucket → the scan exposes the

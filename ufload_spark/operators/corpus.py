@@ -642,7 +642,7 @@ def corpus_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (extension surface — corpus-prep family).
     """
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     d = table(spark, sf_dir, "documents")
     feats = d.select(
@@ -669,9 +669,7 @@ def corpus_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_if("is_target").alias("c_tgt"),
         )
 
-    model = spark.read.parquet(
-        memo_publish(spark, "dsir_model", sf_dir, build_model)
-    )
+    model = memo_read(spark, "dsir_model", sf_dir, build_model)
     totals = model.agg(
         F.sum("c_raw").alias("t_raw"), F.sum("c_tgt").alias("t_tgt")
     )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import in_batch, table
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -972,7 +972,7 @@ def multimodal_image_neardup_incremental(
     completing the image dedup tier matrix: exact groups → banded
     near-dup → cluster-keep-best → incremental ingest gate).
     """
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     d = doc_ids(spark, sf_dir)
     png = d.mapInPandas(
@@ -993,16 +993,13 @@ def multimodal_image_neardup_incremental(
             ).alias("band_idx", "band"),
         )
 
-    existing_path = memo_publish(
+    existing = memo_read(
         spark,
         "image_ahash_groups",
         sf_dir,
-        lambda: hashed.where(F.col("doc_id") % 4 != 0)
-        .select("ahash")
-        .distinct(),
+        lambda: hashed.where(~in_batch()).select("ahash").distinct(),
     )
-    existing = spark.read.parquet(existing_path)
-    batch = hashed.where(F.col("doc_id") % 4 == 0)
+    batch = hashed.where(in_batch())
 
     def halves(df: DataFrame, pfx: str) -> DataFrame:
         return df.select(
@@ -2275,18 +2272,16 @@ def multimodal_video_neardup_incremental(
     completing the video tier matrix: group near-dup → incremental
     ingest gate).
     """
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     d = doc_ids(spark, sf_dir)
-    base = d.where(F.col("doc_id") % 4 != 0)
-
-    def build() -> DataFrame:
-        _per_doc, bgsh = _video_group_frames(base)
-        return bgsh
-
-    published = memo_publish(spark, "video_neardup_gsh", sf_dir, build)
-    bgsh = spark.read.parquet(published)
-    batch = d.where(F.col("doc_id") % 4 == 0)
+    bgsh = memo_read(
+        spark,
+        "video_neardup_gsh",
+        sf_dir,
+        lambda: _video_group_frames(d.where(~in_batch()))[1],
+    )
+    batch = d.where(in_batch())
     bsh = _trimmed_shingles(batch)
     collided = (
         bsh.join(bgsh, "shingle")

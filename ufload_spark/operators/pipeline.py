@@ -19,14 +19,21 @@ stage 5 is a partial-aggregated groupBy on source.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ufload_spark.operators.dedup import dedup_minhash_lsh_pairs
+from ufload_spark.operators.dedup import (
+    _minhash_sigs,
+    band_melt,
+    dedup_minhash_lsh_pairs,
+    exact_index,
+    minhash_collided,
+    text_fingerprint,
+)
 from ufload_spark.operators.textops import _TOKENS_SQL, token_count
 from ufload_spark.operators.textops import _TRIGRAM_RE
 from ufload_spark.plans.registry import QUERIES, register
-from ufload_spark.sources.tables import spread_scan, table
+from ufload_spark.sources.tables import in_batch, spread_scan, table
 
 MIN_TOKENS = 10
 MAX_PUNCT_RATIO = 0.30
@@ -102,6 +109,21 @@ def pipeline_curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quality_terms() -> tuple[Column, Column, Column]:
+    """Token count, punctuation ratio and trigram density of ``text``, as
+    doubles — the inputs of the quality rules both batch pipelines apply."""
+    toks = token_count(F.col("text")).cast("double")
+    punct = (
+        F.length("text") - F.length(F.regexp_replace("text", "[.,;:!?]", ""))
+    ).cast("double")
+    punct_ratio = punct / F.nullif(F.length("text").cast("double"), F.lit(0.0))
+    tri_hits = F.size(
+        F.regexp_extract_all(F.lower("text"), F.lit(f"({_TRIGRAM_RE})"), 0)
+    ).cast("double")
+    tri_density = tri_hits / F.nullif(F.length("text").cast("double"), F.lit(0.0))
+    return toks, punct_ratio, tri_density
+
+
 def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``survivors(doc_id, source, n_tokens)``: quality filter → exact
     dedup → LSH near-dup drop, as ONE plan (the Spark twin of
@@ -113,15 +135,7 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents"), "doc_id", src=(sf_dir, "documents")
     )
 
-    toks = token_count(F.col("text")).cast("double")
-    punct = (
-        F.length("text") - F.length(F.regexp_replace("text", "[.,;:!?]", ""))
-    ).cast("double")
-    punct_ratio = punct / F.nullif(F.length("text").cast("double"), F.lit(0.0))
-    tri_hits = F.size(
-        F.regexp_extract_all(F.lower("text"), F.lit(f"({_TRIGRAM_RE})"), 0)
-    ).cast("double")
-    tri_density = tri_hits / F.nullif(F.length("text").cast("double"), F.lit(0.0))
+    toks, punct_ratio, tri_density = _quality_terms()
 
     kept = d.where(
         (toks >= MIN_TOKENS)
@@ -131,9 +145,7 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         token_count(F.col("text")).alias("n_tokens"),
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        ).alias("fp"),
+        text_fingerprint().alias("fp"),
     )
 
     w = Window.partitionBy("fp").orderBy("doc_id")
@@ -277,24 +289,14 @@ def pipeline_filter_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — pipeline family).
     """
     d = table(spark, sf_dir, "documents")
-    toks = token_count(F.col("text")).cast("double")
-    punct = (
-        F.length("text") - F.length(F.regexp_replace("text", "[.,;:!?]", ""))
-    ).cast("double")
-    punct_ratio = punct / F.nullif(F.length("text").cast("double"), F.lit(0.0))
-    tri_hits = F.size(
-        F.regexp_extract_all(F.lower("text"), F.lit(f"({_TRIGRAM_RE})"), 0)
-    ).cast("double")
-    tri_density = tri_hits / F.nullif(F.length("text").cast("double"), F.lit(0.0))
+    toks, punct_ratio, tri_density = _quality_terms()
 
     flags = d.select(
         "doc_id",
         (toks >= MIN_TOKENS).alias("f_tok"),
         (F.coalesce(punct_ratio, F.lit(1.0)) < MAX_PUNCT_RATIO).alias("f_punct"),
         (F.coalesce(tri_density, F.lit(0.0)) > MIN_TRIGRAM_DENSITY).alias("f_tri"),
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        ).alias("fp"),
+        text_fingerprint().alias("fp"),
     )
     w = Window.partitionBy("fp").orderBy("doc_id")
     kept = (
@@ -424,8 +426,7 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — composed pipeline
     family, the ingest dual of pipeline_curate_documents).
     """
-    from ufload_spark.operators.dedup import N_BANDS, _minhash_sigs
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     d = table(spark, sf_dir, "documents")
     punct_ratio = (
@@ -440,30 +441,18 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.coalesce(punct_ratio, F.lit(1.0)) < MAX_PUNCT_RATIO)
         & (F.coalesce(tri_density, F.lit(0.0)) > MIN_TRIGRAM_DENSITY)
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     meta = d.select(
         "doc_id",
         "source",
         token_count(F.col("text")).cast("bigint").alias("n_tokens"),
-        F.md5(norm).alias("fp"),
+        text_fingerprint().alias("fp"),
         F.when(ok, 1).otherwise(0).alias("ok"),
     )
-    batchm = meta.where(F.col("doc_id") % 4 == 0)
+    batchm = meta.where(in_batch())
 
     # stage 2: the SAME persisted fingerprint set dedup_exact_incremental
-    # maintains (memo key shared deliberately — one index, two consumers)
-    fp_path = memo_publish(
-        spark,
-        "exact_fingerprints",
-        sf_dir,
-        lambda: meta.where(F.col("doc_id") % 4 != 0)
-        .select("fp")
-        .withColumnRenamed("fp", "fingerprint")
-        .distinct(),
-    )
-    corpus_fp = spark.read.parquet(fp_path).withColumnRenamed(
-        "fingerprint", "fp"
-    )
+    # and the streaming ingest gate read (one index, one builder)
+    corpus_fp = exact_index(spark, sf_dir, "fp")
     w = Window.partitionBy("fp").orderBy("doc_id")
     exact_novel = (
         batchm.where(F.col("ok") == 1)
@@ -476,40 +465,19 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 3: the corpus band-key table (persisted once), probed by the
     # exact-novel survivors' own signatures only
     sigs = _minhash_sigs(spark, sf_dir)
-
-    def melt(df: DataFrame) -> DataFrame:
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.col(f"m{2*b}").alias("k1"),
-                    F.col(f"m{2*b+1}").alias("k2"),
-                )
-                for b in range(N_BANDS)
-            ]
-        )
-        return df.select("doc_id", F.explode(bands).alias("bk")).select(
-            "doc_id", "bk.band", "bk.k1", "bk.k2"
-        )
-
-    keys_path = memo_publish(
+    existing_keys = memo_read(
         spark,
         "minhash_corpus_band_keys",
         sf_dir,
-        lambda: melt(sigs.where(F.col("doc_id") % 4 != 0)).select(
-            "band", "k1", "k2"
-        ).distinct(),
+        lambda: band_melt(sigs.where(~in_batch()))
+        .select("band", "k1", "k2")
+        .distinct(),
     )
-    existing_keys = spark.read.parquet(keys_path)
-    batch_keys = melt(
+    collided = minhash_collided(
         sigs.join(
             exact_novel.select("doc_id").hint("broadcast"), "doc_id", "left_semi"
-        )
-    )
-    collided = (
-        batch_keys.join(existing_keys, ["band", "k1", "k2"], "left_semi")
-        .select("doc_id")
-        .distinct()
+        ),
+        existing_keys,
     )
     admitted = exact_novel.join(collided, "doc_id", "left_anti")
 

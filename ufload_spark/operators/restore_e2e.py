@@ -60,8 +60,9 @@ from ufload_spark.plans.registry import register
 from ufload_spark.sources.loader import (
     AuditError,
     _scratch_unique,
+    publish_read,
     restore_first_viable,
-    stage_and_publish,
+    sf_tag,
 )
 
 #: instances the composed query restores — bounded so the probe loop stays
@@ -148,7 +149,7 @@ def ensure_candidate_zips(
     out = os.path.join(
         repo_root,
         ".scratch",
-        f"restore_zips_{os.path.basename(sf_dir.rstrip('/'))}{suffix}",
+        f"restore_zips_{sf_tag(sf_dir)}{suffix}",
     )
     if os.path.exists(os.path.join(out, ".done")):
         return out
@@ -345,7 +346,6 @@ def restore_instances(
     chain."""
     zips_dir = ensure_candidate_zips(spark, sf_dir, instances)
     cands = _candidate_rows(spark, sf_dir, instances)
-    sfbase = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     # Overlap the per-instance probe loops (guide §2.6, r11 — measured
     # 4.6 s sequential → ~1.5 s pooled at sf1): each instance's restore is
     # an independent chain of small driver-launched jobs against its OWN
@@ -362,7 +362,7 @@ def restore_instances(
         )
         if not mine:
             continue
-        target = _scratch_unique(f"restore_{instance}_{sfbase}")
+        target = _scratch_unique(f"restore_{instance}_{sf_tag(sf_dir)}")
         work.append((instance, mine, target))
     from concurrent.futures import ThreadPoolExecutor
 
@@ -417,9 +417,7 @@ def restore_instances(
         return out
     # the report itself exits through the audited sink and is read back
     # from the published copy — the oracle checks the POST-publish bytes
-    final = _scratch_unique(f"restore_report_{sfbase}")
-    stage_and_publish(spark, out, final)
-    return spark.read.parquet(final)
+    return publish_read(spark, out, "restore_report", sf_dir)
 
 
 def _audit_fact_sql() -> str:

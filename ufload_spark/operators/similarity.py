@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import BATCH_MOD, in_batch, table
 
 DIM = 64
 # Banded LSH: N_BANDS independent signatures of r sign bits each. Bucket
@@ -269,12 +269,11 @@ def _persisted_band_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse. This is also the production shape: the persisted signature table
     the incremental-admission queries maintain, built here on first use
     only because registered queries must be self-contained."""
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
-    target = memo_publish(
+    return memo_read(
         spark, "lsh_selfsigs", sf_dir, lambda: _lsh_band_sigs(spark, sf_dir)
     )
-    return spark.read.parquet(target)
 
 
 def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,10 +591,10 @@ def _spread(df: DataFrame, n_rows: int | None = None) -> DataFrame:
 
     SCALE-ADAPTIVE (r12, the r11 VERDICT's one regression): the partition
     count is ``min(parallelism, n_rows // SPREAD_ROWS_PER_TASK)`` when the
-    caller passes its row bound (the memoized parquet footer count — no
-    job), so tiny frames skip the exchange entirely instead of paying 32
-    fixed-cost tasks per downstream stage; ``n_rows=None`` keeps the old
-    cores-wide behavior."""
+    caller passes its row bound (``corpus_count``: a ``count()`` job on
+    first use per process and table, memoized after), so tiny frames skip
+    the exchange entirely instead of paying 32 fixed-cost tasks per
+    downstream stage; ``n_rows=None`` keeps the old cores-wide behavior."""
     spark = df.sparkSession
     cap = max(spark.sparkContext.defaultParallelism, 8)
     if n_rows is None:
@@ -1370,7 +1369,7 @@ def _cell_pairs_batch(pdf):
     pdf = pdf.sort_values("vec_id").reset_index(drop=True)
     n = len(pdf)
     ids = pdf["vec_id"].to_numpy()
-    isb = (ids % 4 == 0)
+    isb = ids % BATCH_MOD == 0
     bpos = np.flatnonzero(isb)
     if n < 2 or len(bpos) == 0:
         return empty
@@ -1445,29 +1444,25 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — the incremental
     discipline of dedup.py:205 applied to the SemDeDup family).
     """
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
     from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
-    base = e.where(F.col("vec_id") % 4 != 0)
-    cent_path = memo_publish(
+    base = e.where(~in_batch("vec_id"))
+    cent = memo_read(
         spark,
         "sem_centroids",
         sf_dir,
         lambda: kmeans_centroids(train_sample(base), k=k, kernel=True),
     )
-    cent = spark.read.parquet(cent_path)
-    base_asn_path = memo_publish(
+    base_asn = memo_read(
         spark,
         "sem_base_asn",
         sf_dir,
         lambda: _kernel_assign(base, cent, with_embedding=True),
     )
-    base_asn = spark.read.parquet(base_asn_path)
-    batch_asn = _kernel_assign(
-        e.where(F.col("vec_id") % 4 == 0), cent, with_embedding=True
-    )
+    batch_asn = _kernel_assign(e.where(in_batch("vec_id")), cent, with_embedding=True)
     # Scope the base side to the BATCH's cells before the cell-keyed
     # shuffle (r10 VERDICT ask #1): base cells the batch never touches can
     # only feed kernels that return empty (every emitted pair involves a
@@ -1646,7 +1641,7 @@ def _hier_assignment(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
     from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
@@ -1656,13 +1651,12 @@ def _hier_assignment(spark: SparkSession, sf_dir: str):
     # for the ~10^6-cell regime where the k-row model must never pass
     # through the driver (r10 VERDICT ask #2 — the r9 kernel collected all
     # k rows and re-created them as a driver-side DataFrame).
-    cent_path = memo_publish(
+    cent = memo_read(
         spark,
         "hier_centroids",
         sf_dir,
         lambda: kmeans_centroids(train_sample(e), k=k, kernel=True),
     )
-    cent = spark.read.parquet(cent_path)
     # k2 from the KNOB k, not the survivor count: the oracle's k2knob
     # computes ceil(sqrt(k)) from sknob, and whenever the trained table
     # carries fewer cids than k (train sample < k seeds) a
@@ -1929,21 +1923,13 @@ def similarity_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     what an ingest pipeline would admit as novel. Oracle recomputes both
     sides declaratively; hash-matching proves the parquet round-trip of
     signature data is lossless."""
-    from ufload_spark.sources.loader import _scratch_unique, stage_and_publish
-
-    import os as _os
+    from ufload_spark.sources.loader import publish_read
 
     sigs = _lsh_band_sigs(spark, sf_dir)
-    existing = sigs.where(F.col("vec_id") % 4 != 0)
-    target = _scratch_unique(
-        f"lsh_sigs_{_os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
-    stage_and_publish(spark, existing, target)
-    persisted = spark.read.parquet(target)
-
-    batch = sigs.where(F.col("vec_id") % 4 == 0)
+    persisted = publish_read(spark, sigs.where(~in_batch("vec_id")), "lsh_sigs", sf_dir)
     collided = (
-        batch.join(persisted, ["band", "sig"], "left_semi")
+        sigs.where(in_batch("vec_id"))
+        .join(persisted, ["band", "sig"], "left_semi")
         .select("vec_id")
         .distinct()
     )
@@ -1951,9 +1937,7 @@ def similarity_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature frame — the signature map evaluates exactly once (the
     # collided side); pinned by test_lsh_incremental_never_rehashes_corpus
     universe = (
-        table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") % 4 == 0)
-        .select("vec_id")
+        table(spark, sf_dir, "embeddings").where(in_batch("vec_id")).select("vec_id")
     )
     return universe.join(collided, "vec_id", "left_anti")
 
@@ -2023,7 +2007,7 @@ def dedup_embedding_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataF
     cluster_id over micro-clusters, the same bounded-state shape as the
     text side."""
     from ufload_spark.operators.dedup import min_label_components
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     def _confirmed_edges() -> DataFrame:
         pairs = _lsh_candidate_pairs(spark, sf_dir)
@@ -2048,9 +2032,7 @@ def dedup_embedding_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataF
     # planes, rounded sign decisions; the oracle hash-match pins the
     # cosine-confirm step), so it publishes once per (process, fixture)
     # like the MinHash pair graph
-    sim = spark.read.parquet(
-        memo_publish(spark, "embedding_cluster_pairs", sf_dir, _confirmed_edges)
-    )
+    sim = memo_read(spark, "embedding_cluster_pairs", sf_dir, _confirmed_edges)
     e = table(spark, sf_dir, "embeddings")
     comp = min_label_components(sim).select(
         F.col("n").alias("vec_id"), F.col("m").alias("cluster_id")
@@ -2104,10 +2086,10 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     run instead of rebuilt."""
     import os as _os
 
-    from ufload_spark.sources.loader import _scratch_unique, stage_and_publish
+    from ufload_spark.sources.loader import _scratch_unique, sf_tag, stage_and_publish
 
     e = table(spark, sf_dir, "embeddings")
-    sfx = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    sfx = sf_tag(sf_dir)
 
     def d2(a: str) -> Column:
         return F.round(
@@ -2679,23 +2661,19 @@ def similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``similarity_pq_topk`` also proves the index round-trip is lossless.
     Reference analog: the skip-if-unchanged download memo (ufload
     db.py:695-711)."""
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
     from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
-    books_path = memo_publish(
+    pbooks = memo_read(
         spark, "pq_codebooks", sf_dir, lambda: _pq_codebooks(spark, sf_dir)
     )
-    pbooks = spark.read.parquet(books_path)
-    codes_path = memo_publish(
+    pcodes = memo_read(
         spark,
         "pq_codes",
         sf_dir,
-        lambda: _pq_encode(
-            e, pbooks, corpus_count(spark, sf_dir, "embeddings")
-        ),
+        lambda: _pq_encode(e, pbooks, corpus_count(spark, sf_dir, "embeddings")),
     )
-    pcodes = spark.read.parquet(codes_path)
     return _pq_adc_topk(e, pbooks, pcodes)
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread_scan, table
+from ufload_spark.sources.tables import in_batch, spread_scan, table
 
 #: Stopword alternation shared by Spark and the DuckDB oracles.
 _STOP = "the|a|and|of|to|in|is|it"
@@ -134,9 +134,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-form fingerprint (lowercase, collapse whitespace, md5) —
     the exact-dedup key. md5 is bit-identical across engines, so this also
     pins down the normalization."""
+    from ufload_spark.operators.dedup import text_fingerprint as fingerprint
+
     d = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return d.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return d.select("doc_id", fingerprint().alias("fingerprint"))
 
 
 #: BPE-style pre-tokenizer (the GPT-2 shape, ASCII-reduced so Java and RE2
@@ -2832,17 +2833,18 @@ def text_quality_logreg_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — the ingest tier of the
     learned quality filter).
     """
-    from ufload_spark.sources.loader import memo_publish
+    from ufload_spark.sources.loader import memo_read
 
     fpath = _logreg_feat_path(spark, sf_dir)
-
-    def build() -> DataFrame:
-        base = spark.read.parquet(fpath).where("doc_id % 4 <> 0")
-        return _logreg_train_weights(spark, base)
-
-    wpath = memo_publish(spark, "logreg_base_model", sf_dir, build)
-    w = spark.read.parquet(wpath)
-    batch = spark.read.parquet(fpath).where("doc_id % 4 = 0")
+    w = memo_read(
+        spark,
+        "logreg_base_model",
+        sf_dir,
+        lambda: _logreg_train_weights(
+            spark, spark.read.parquet(fpath).where(~in_batch())
+        ),
+    )
+    batch = spark.read.parquet(fpath).where(in_batch())
     zsum = " + ".join(f"x{j} * w{j}" for j in range(_LOGREG_NF))
     return (
         batch.crossJoin(F.broadcast(w))

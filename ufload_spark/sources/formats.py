@@ -16,13 +16,11 @@ columns. That conversion IS ``stage_and_publish``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.loader import _scratch_unique
+from ufload_spark.sources.loader import _scratch_unique, sf_tag
 from ufload_spark.sources.tables import table
 
 _ORDERS_AGG_SQL = """
@@ -71,9 +69,7 @@ def _roundtrip(
 ) -> DataFrame:
     # unique per-invocation dest: these queries write-then-lazily-read, so a
     # shared path would let a driver retry observe a mid-rewrite directory
-    dest = _scratch_unique(
-        f"orders_{fmt}_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    dest = _scratch_unique(f"orders_{fmt}_{sf_tag(sf_dir)}")
     w = _orders_slice(spark, sf_dir).write.mode("overwrite").format(fmt)
     r = spark.read.format(fmt).schema(_ORDERS_SCHEMA)
     for k, v in (options or {}).items():
@@ -157,9 +153,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unique per-invocation dest (r3 driver hash-fail post-mortem): the
     # overwrite-then-append below is observably non-atomic, so the dir must
     # belong to THIS invocation alone
-    dest = _scratch_unique(
-        f"orders_evolved_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    dest = _scratch_unique(f"orders_evolved_{sf_tag(sf_dir)}")
     old = base.where(F.col("o_orderkey") % 2 == 0).drop("o_orderpriority")
     new = base.where(F.col("o_orderkey") % 2 == 1)
     old.write.mode("overwrite").parquet(dest)
@@ -209,9 +203,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline routes the corrupt column to a quarantine sink (the loader's
     staging discipline) instead of aggregating it.
     """
-    dest = _scratch_unique(
-        f"docs_jsonl_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    dest = _scratch_unique(f"docs_jsonl_{sf_tag(sf_dir)}")
     d = table(spark, sf_dir, "documents").select(
         F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("line"),
         "doc_id",

@@ -19,12 +19,11 @@ them by data volume (buckets ≈ total/target-file-size).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
+from ufload_spark.sources.loader import _scratch_unique, sf_tag
 from ufload_spark.sources.tables import table
 
 N_BUCKETS = 8
@@ -87,7 +86,7 @@ def layout_bucketed_orderkey_join(spark: SparkSession, sf_dir: str) -> DataFrame
     recurring orderkey join from two shuffles to zero. The oracle computes
     the same rollup from the raw parquet, proving the bucketed round-trip
     changed the layout, not the data."""
-    suffix = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    suffix = sf_tag(sf_dir)
     li_t = _unique_table(spark, f"li_bucketed_{suffix}")
     o_t = _unique_table(spark, f"o_bucketed_{suffix}")
     li = table(spark, sf_dir, "lineitem").select(
@@ -134,11 +133,7 @@ def layout_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (pinned by ``test_partitioned_write_prunes``). The layout twin of
     predicate pushdown: pushdown skips row groups, partitioning skips
     whole files. Oracle reads the raw parquet."""
-    from ufload_spark.sources.loader import _scratch_unique
-
-    dest = _scratch_unique(
-        f"events_by_type_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    dest = _scratch_unique(f"events_by_type_{sf_tag(sf_dir)}")
     ev = table(spark, sf_dir, "events")
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dest)
     back = spark.read.parquet(dest).where(
@@ -261,11 +256,7 @@ def layout_dynamic_partition_overwrite(
     many (cli/main.py restore loop) — partition-scoped replacement is
     that operation lake-side.
     """
-    from ufload_spark.sources.loader import _scratch_unique
-
-    dest = _scratch_unique(
-        f"events_dpo_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    dest = _scratch_unique(f"events_dpo_{sf_tag(sf_dir)}")
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",

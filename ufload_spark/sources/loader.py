@@ -652,19 +652,44 @@ def _scratch(name: str) -> str:
 _MEMO_PUBLISHED: dict[tuple[str, str], str] = {}
 
 
+def sf_tag(sf_dir: str) -> str:
+    """The fixture dir's name as a scratch-name suffix (``sf0.01`` →
+    ``sf0_01``)."""
+    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+
+
+def publish_scratch(spark: SparkSession, df: DataFrame, name: str, sf_dir: str) -> str:
+    """Publish ``df`` through :func:`stage_and_publish` to a fresh
+    :func:`_scratch_unique` path named ``<name>_<sf_tag>``; return it."""
+    target = _scratch_unique(f"{name}_{sf_tag(sf_dir)}")
+    stage_and_publish(spark, df, target)
+    return target
+
+
+def publish_read(
+    spark: SparkSession, df: DataFrame, name: str, sf_dir: str
+) -> DataFrame:
+    """:func:`publish_scratch`, then read the published copy back — the
+    write-then-read every persisted-index tier runs once per invocation."""
+    return spark.read.parquet(publish_scratch(spark, df, name, sf_dir))
+
+
 def memo_publish(spark: SparkSession, name: str, sf_dir: str, build) -> str:
     """Publish ``build()`` once per (process, fixture dir) under a unique
-    scratch path via :func:`stage_and_publish`; return the published path.
+    scratch path via :func:`publish_scratch`; return the published path.
     ONLY for deterministic frames — the memo would hide nondeterminism."""
     key = (name, os.path.abspath(sf_dir))
     cached = _MEMO_PUBLISHED.get(key)
     if cached is not None and os.path.exists(os.path.join(cached, "_SUCCESS")):
         return cached
-    sfx = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    target = _scratch_unique(f"{name}_{sfx}")
-    stage_and_publish(spark, build(), target)
+    target = publish_scratch(spark, build(), name, sf_dir)
     _MEMO_PUBLISHED[key] = target
     return target
+
+
+def memo_read(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """The :func:`memo_publish` copy of ``build()``, read back."""
+    return spark.read.parquet(memo_publish(spark, name, sf_dir, build))
 
 
 def restore_first_viable(
@@ -748,12 +773,8 @@ def loader_staging_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     into place, then aggregates FROM THE PUBLISHED COPY — so the oracle
     checks the data actually made it through the write path byte-correct."""
     src = table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
-    target = _scratch_unique(
-        f"orders_published_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    stage_and_publish(spark, src, target)
     return (
-        spark.read.parquet(target)
+        publish_read(spark, src, "orders_published", sf_dir)
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_orders"),
@@ -775,9 +796,7 @@ def loader_pointer_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Publishes ``orders`` via :func:`publish_versioned` and aggregates from
     :func:`read_current` — the crash-window-free publish path."""
     src = table(spark, sf_dir, "orders")
-    target = _scratch_unique(
-        f"orders_versioned_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    target = _scratch_unique(f"orders_versioned_{sf_tag(sf_dir)}")
     publish_versioned(spark, src, target)
     return (
         read_current(spark, target)
@@ -803,9 +822,7 @@ def loader_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention story (`keep_versions`) actually yields usable history, not
     just undeleted bytes. ``read_current`` would see the filtered v2."""
     src = table(spark, sf_dir, "orders")
-    target = _scratch_unique(
-        f"orders_history_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    target = _scratch_unique(f"orders_history_{sf_tag(sf_dir)}")
     publish_versioned(spark, src, target, keep_versions=2)
     publish_versioned(
         spark, src.where(F.col("o_totalprice") > 100000), target, keep_versions=2
@@ -844,9 +861,7 @@ def loader_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     PK reconciliation, db.py:805-815, applied across time instead of
     across databases)."""
     src = table(spark, sf_dir, "orders")
-    target = _scratch_unique(
-        f"orders_diffhist_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    target = _scratch_unique(f"orders_diffhist_{sf_tag(sf_dir)}")
     publish_versioned(spark, src, target, keep_versions=2)
     publish_versioned(
         spark, src.where(F.col("o_totalprice") > 100000), target, keep_versions=2

@@ -43,6 +43,7 @@ from pyspark.sql.datasource import (
 
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
+from ufload_spark.sources.loader import sf_tag
 
 LOG_SCHEMA = "fname string, line_no long, line string"
 
@@ -211,9 +212,7 @@ def ensure_fixture_logs(sf_dir: str) -> str:
     import pandas as pd
 
     repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    out = os.path.join(
-        repo_root, ".scratch", f"logs_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = os.path.join(repo_root, ".scratch", f"logs_{sf_tag(sf_dir)}")
     if os.path.exists(os.path.join(out, ".done")):
         return out
     tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"

@@ -10,7 +10,8 @@ assumes a single file.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ufload_spark.session import tune
 
@@ -56,7 +57,6 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     through this ONE function, so a future driver-side fixture refresh
     changing the encoding again is a one-line fix here, not a hunt.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     if col not in df.columns:
@@ -84,6 +84,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_ts(df)
     _TABLE_CACHE[key] = df
     return df
+
+
+#: The incremental tiers' stand-in for "a new batch against the published
+#: corpus": ids divisible by BATCH_MOD are the batch, the rest the corpus.
+#: Fixture patterns planted for these tiers must be coprime with it, or
+#: batch rows only ever collide with batch rows.
+BATCH_MOD = 4
+
+
+def in_batch(col: str = "doc_id") -> Column:
+    """The batch side of the split; ``~in_batch(col)`` is the corpus side."""
+    return F.col(col) % BATCH_MOD == 0
 
 
 #: (session, sf_dir, name) → scan partition count, for :func:`spread_scan`.

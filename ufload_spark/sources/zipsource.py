@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
+from ufload_spark.sources.loader import sf_tag
 
 N_FIXTURE_ZIPS = 20
 _FIXED_DATE = (2020, 1, 1, 0, 0, 0)  # deterministic member timestamp
@@ -115,9 +116,7 @@ def ensure_fixture_zips(sf_dir: str) -> str:
     import uuid
 
     repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    out = os.path.join(
-        repo_root, ".scratch", f"zips_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = os.path.join(repo_root, ".scratch", f"zips_{sf_tag(sf_dir)}")
     if os.path.exists(os.path.join(out, ".done")):
         return out
     tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"

@@ -30,14 +30,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ufload_spark.operators.dedup import (
-    HAMMING_D as _SH_HAMMING_D,
-    N_SEGS as _SH_N_SEGS,
-    SEG_BITS as _SH_SEG_BITS,
-    SIMHASH_BITS as _SH_BITS,
+    _SIMHASH_BITSUMS_SQL,
+    _SIMHASH_COMBINE_SQL,
+    _SIMHASH_PROBE_SQL,
+    dedup_simhash,
+    exact_index,
+    simhash_collided,
+    simhash_frame,
+    text_fingerprint,
 )
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
-from ufload_spark.sources.tables import normalize_ts
+from ufload_spark.sources.tables import in_batch, normalize_ts
 
 _SINK_SEQ = itertools.count()
 
@@ -397,18 +401,19 @@ def streaming_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the per-batch full-outer merge is the plain-parquet shape of
     what Delta/Iceberg MERGE does against indexed file groups; the
     stage/audit/publish sequence is unchanged there."""
-    import tempfile as _tempfile
-
     from ufload_spark.operators.archive import merge_upsert
-    from ufload_spark.sources.loader import _fs, _scratch_unique, stage_and_publish
+    from ufload_spark.sources.loader import (
+        _fs,
+        _scratch_unique,
+        sf_tag,
+        stage_and_publish,
+    )
     from ufload_spark.streaming.notify import run_with_notify
 
     sdf = events_readstream(spark, sf_dir).select("event_id", "event_type", "value")
     # unique target per invocation: reruns start from batch zero, and no
     # concurrent/retried invocation can observe this one's target mid-merge
-    target = _scratch_unique(
-        f"events_upserted_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
+    target = _scratch_unique(f"events_upserted_{sf_tag(sf_dir)}")
 
     def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -423,7 +428,7 @@ def streaming_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = merge_upsert(existing, batch, ["event_id"], on_duplicate="raise")
         stage_and_publish(s, merged, target)
 
-    ckpt = _tempfile.mkdtemp(prefix="ufload-ckpt-upsert-")
+    ckpt = tempfile.mkdtemp(prefix="ufload-ckpt-upsert-")
     run_with_notify(sdf, upsert_batch, checkpoint_dir=ckpt)
     return (
         spark.read.parquet(target)
@@ -822,6 +827,28 @@ def documents_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the columns each gate publishes per epoch segment; an empty admitted
+#: table (no epoch admitted anything) reads back with this schema
+_EXACT_SEGMENT = "fp string, doc_id bigint, source string"
+_SIMHASH_SEGMENT = "doc_id bigint, source string, simhash bigint"
+
+
+def _publish_segment(rows: DataFrame, target: str, epoch_id: int) -> None:
+    """Publish one micro-batch's survivors as the epoch's own segment
+    ``<target>/e<epoch>``; an empty batch publishes nothing."""
+    from ufload_spark.sources.loader import stage_and_publish
+
+    # EAGER checkpoint before the empty-gate (r12, guide §5): isEmpty()
+    # executed the whole batch pipeline once and the publish then
+    # re-executed it — the per-batch work ran ~twice. One materialization
+    # serves both; the frame is batch-sized. (The guard itself must stay:
+    # stage_and_publish AUDITS against empty frames by design.)
+    rows = rows.localCheckpoint()
+    if rows.isEmpty():
+        return
+    stage_and_publish(rows.sparkSession, rows, f"{target}/e{int(epoch_id):06d}")
+
+
 def ingest_gate_batch(
     batch: DataFrame, target: str, corpus_fp: DataFrame, epoch_id: int
 ) -> None:
@@ -837,33 +864,21 @@ def ingest_gate_batch(
     same min. A replayed epoch rewrites its own segment with identical
     rows (the per-batch result is a pure function of batch × static
     index), which is the foreachBatch exactly-once contract."""
-    s = batch.sparkSession
-    from ufload_spark.sources.loader import stage_and_publish
-
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     rows = (
-        batch.select(
-            "doc_id", "source", F.md5(norm).alias("fp")
-        )
+        batch.select("doc_id", "source", text_fingerprint().alias("fp"))
         .join(corpus_fp, "fp", "left_anti")
         .groupBy("fp")
-        .agg(
-            F.min_by(F.struct("doc_id", "source"), "doc_id").alias("d")
-        )
+        .agg(F.min_by(F.struct("doc_id", "source"), "doc_id").alias("d"))
         .select("fp", "d.doc_id", "d.source")
     )
-    # eager checkpoint before the empty-gate — isEmpty() + publish ran the
-    # batch pipeline twice (see neardup_gate_batch, r12)
-    rows = rows.localCheckpoint()
-    if rows.isEmpty():
-        return
-    stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    _publish_segment(rows, target, epoch_id)
 
 
-def _epoch_segments(spark: SparkSession, target: str) -> DataFrame:
+def _epoch_segments(spark: SparkSession, target: str, schema: str) -> DataFrame:
     """One DataFrame over the PUBLISHED epoch segments of a gate target —
     the immediate children whose name is exactly ``e<digits>``, the name
-    :func:`ingest_gate_batch` / :func:`neardup_gate_batch` publish. A bare
+    :func:`_publish_segment` gives them; with none published, an empty
+    frame of the gate's segment ``schema``. A bare
     ``{target}/e*`` glob also matches the ``eNNNNNN.staging.*`` /
     ``eNNNNNN.old.*`` siblings ``stage_and_publish`` parks while an
     epoch's publish is in flight (r10 ADVICE): debris from a crashed
@@ -888,11 +903,7 @@ def _epoch_segments(spark: SparkSession, target: str) -> DataFrame:
         if fs.exists(jtarget)
         else []
     )
-    # no published segment: keep the pre-r11 failure mode (the glob read
-    # raises PATH_NOT_FOUND) rather than inventing an empty schema
-    return spark.read.parquet(*segs) if segs else spark.read.parquet(
-        f"{target}/e[0-9]*/"
-    )
+    return spark.read.parquet(*segs) if segs else spark.createDataFrame([], schema)
 
 
 def read_ingest_admitted(spark: SparkSession, target: str) -> DataFrame:
@@ -904,10 +915,42 @@ def read_ingest_admitted(spark: SparkSession, target: str) -> DataFrame:
     debris) + one fp-keyed aggregate; the per-batch side never touches
     other epochs."""
     return (
-        _epoch_segments(spark, target)
+        _epoch_segments(spark, target, _EXACT_SEGMENT)
         .groupBy("fp")
         .agg(F.min_by(F.struct("doc_id", "source"), "doc_id").alias("d"))
         .select("fp", "d.doc_id", "d.source")
+    )
+
+
+def _run_gate(
+    spark: SparkSession, sf_dir: str, name: str, index: DataFrame, gate_batch, read
+) -> DataFrame:
+    """Drive one streaming admission gate: stream the batch side of the
+    documents split, call ``gate_batch(batch, target, index, epoch_id)``
+    on every non-empty micro-batch (each epoch publishes its own segment
+    under a fresh ``<name>_admitted`` scratch target), then ``read`` the
+    admitted table back and take the per-source census."""
+    from ufload_spark.sources.loader import _scratch_unique, sf_tag
+    from ufload_spark.streaming.notify import run_with_notify
+
+    sdf = documents_readstream(spark, sf_dir).where(in_batch())
+    target = _scratch_unique(f"{name}_admitted_{sf_tag(sf_dir)}")
+
+    def admit(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        gate_batch(batch, target, index, epoch_id)
+
+    ckpt = tempfile.mkdtemp(prefix=f"ufload-ckpt-{name}-")
+    run_with_notify(sdf, admit, checkpoint_dir=ckpt)
+    return (
+        read(spark, target)
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_admitted"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        )
     )
 
 
@@ -964,45 +1007,9 @@ def streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip-if-unchanged memo + staging publish, db.py:97-208,695-711),
     applied to corpus admission.
     """
-    import tempfile as _tempfile
-
-    from ufload_spark.sources.loader import _scratch_unique, memo_publish
-    from ufload_spark.sources.tables import table as static_table
-    from ufload_spark.streaming.notify import run_with_notify
-
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    corpus_fp_path = memo_publish(
-        spark,
-        "exact_fingerprints",
-        sf_dir,
-        lambda: static_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 4 != 0)
-        .select(F.md5(norm).alias("fingerprint"))
-        .distinct(),
-    )
-    corpus_fp = spark.read.parquet(corpus_fp_path).withColumnRenamed(
-        "fingerprint", "fp"
-    )
-    sdf = documents_readstream(spark, sf_dir).where(F.col("doc_id") % 4 == 0)
-    target = _scratch_unique(
-        f"ingest_admitted_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
-
-    def admit(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_gate_batch(batch, target, corpus_fp, epoch_id)
-
-    ckpt = _tempfile.mkdtemp(prefix="ufload-ckpt-ingest-")
-    run_with_notify(sdf, admit, checkpoint_dir=ckpt)
-    return (
-        read_ingest_admitted(spark, target)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_admitted"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
+    corpus_fp = exact_index(spark, sf_dir, "fp")
+    return _run_gate(
+        spark, sf_dir, "ingest", corpus_fp, ingest_gate_batch, read_ingest_admitted
     )
 
 
@@ -1025,37 +1032,9 @@ def neardup_gate_batch(
     index), which is the replay-idempotence the foreachBatch
     exactly-once contract needs. Readers go through
     :func:`read_admitted`, which doc_id-dedups across segments."""
-    s = batch.sparkSession
-    from ufload_spark.operators.dedup import (
-        HAMMING_D,
-        N_SEGS,
-        SEG_BITS,
-        simhash_frame,
-    )
-    from ufload_spark.sources.loader import stage_and_publish
-
     sims = simhash_frame(batch.select("doc_id", "text")).join(
         batch.select("doc_id", "source"), "doc_id"
     )
-
-    def melt(df: DataFrame) -> DataFrame:
-        segs = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("seg"),
-                    F.shiftright(F.col("simhash"), SEG_BITS * j)
-                    .bitwiseAND(F.lit((1 << SEG_BITS) - 1))
-                    .alias("segval"),
-                )
-                for j in range(N_SEGS)
-            ]
-        )
-        return df.select("doc_id", "simhash", F.explode(segs).alias("sv")).select(
-            "doc_id", "simhash", "sv.seg", "sv.segval"
-        )
-
-    b, e = melt(sims).alias("b"), melt(corpus_sims).alias("e")
-    hamming = F.bit_count(F.col("b.simhash").bitwiseXOR(F.col("e.simhash")))
     # BROADCAST the batch side (r12, guide §3.1): the planner sees a
     # micro-batch frame with no size statistics and would shuffle BOTH
     # sides of the segment equi-join — re-shuffling the corpus-sized index
@@ -1063,29 +1042,9 @@ def neardup_gate_batch(
     # contract (batch ≪ corpus at scale), so broadcasting it leaves the
     # index scan map-side: per batch the corpus is read once, never
     # exchanged.
-    collided = (
-        F.broadcast(b)
-        .join(
-            e,
-            (F.col("b.seg") == F.col("e.seg"))
-            & (F.col("b.segval") == F.col("e.segval")),
-        )
-        .where(hamming <= HAMMING_D)
-        .select(F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    rows = sims.join(collided, "doc_id", "left_anti").select(
-        "doc_id", "source", "simhash"
-    )
-    # EAGER checkpoint before the empty-gate (r12, guide §5): isEmpty()
-    # executed the whole shingle+probe pipeline once and the publish then
-    # re-executed it — the per-batch work ran ~twice. One materialization
-    # serves both; the frame is batch-sized. (The guard itself must stay:
-    # stage_and_publish AUDITS against empty frames by design.)
-    rows = rows.localCheckpoint()
-    if rows.isEmpty():
-        return
-    stage_and_publish(s, rows, f"{target}/e{int(epoch_id):06d}")
+    collided = simhash_collided(F.broadcast(sims), corpus_sims)
+    rows = sims.join(collided, "doc_id", "left_anti")
+    _publish_segment(rows.select("doc_id", "source", "simhash"), target, epoch_id)
 
 
 def read_admitted(spark: SparkSession, target: str) -> DataFrame:
@@ -1096,7 +1055,7 @@ def read_admitted(spark: SparkSession, target: str) -> DataFrame:
     way. One listed-segment scan (:func:`_epoch_segments` — published
     segments only, never in-flight staging debris); the per-batch side
     never touches other epochs."""
-    return _epoch_segments(spark, target).dropDuplicates(["doc_id"])
+    return _epoch_segments(spark, target, _SIMHASH_SEGMENT).dropDuplicates(["doc_id"])
 
 
 @register(
@@ -1114,33 +1073,14 @@ WITH tokens AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh
 ), bitsums AS (
   SELECT doc_id, """
-    + ", ".join(
-        f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(_SH_BITS)
-    )
+    + _SIMHASH_BITSUMS_SQL
     + """
   FROM hashed GROUP BY doc_id
 ), sims AS (
   SELECT doc_id, CAST("""
-    + " + ".join(
-        f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(_SH_BITS)
-    )
+    + _SIMHASH_COMBINE_SQL
     + f""" AS BIGINT) AS simhash FROM bitsums
-), batch AS (SELECT * FROM sims WHERE doc_id % 4 = 0),
-existing AS (SELECT * FROM sims WHERE doc_id % 4 <> 0),
-bsegs AS (
-  SELECT doc_id, simhash, j AS seg,
-         (simhash >> ({_SH_SEG_BITS} * j)) & {(1 << _SH_SEG_BITS) - 1} AS segval
-  FROM batch, (SELECT unnest(range(0, {_SH_N_SEGS})) AS j)
-), esegs AS (
-  SELECT doc_id, simhash, j AS seg,
-         (simhash >> ({_SH_SEG_BITS} * j)) & {(1 << _SH_SEG_BITS) - 1} AS segval
-  FROM existing, (SELECT unnest(range(0, {_SH_N_SEGS})) AS j)
-), collided AS (
-  SELECT DISTINCT b.doc_id
-  FROM bsegs b JOIN esegs e ON b.seg = e.seg AND b.segval = e.segval
-  WHERE bit_count(xor(b.simhash, e.simhash)) <= {_SH_HAMMING_D}
-), admitted AS (
+), {_SIMHASH_PROBE_SQL}, admitted AS (
   SELECT d.doc_id, d.source FROM documents d
   SEMI JOIN batch USING (doc_id)
   WHERE d.doc_id NOT IN (SELECT doc_id FROM collided)
@@ -1184,37 +1124,14 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: OP-STR-2 (skip-if-unchanged memo) composed with the
     dedup extension family — the streaming lifecycle of SimHash.
     """
-    import tempfile as _tempfile
+    from ufload_spark.sources.loader import memo_read
 
-    from ufload_spark.operators.dedup import dedup_simhash
-    from ufload_spark.sources.loader import _scratch_unique, memo_publish
-    from ufload_spark.streaming.notify import run_with_notify
-
-    corpus_path = memo_publish(
+    corpus_sims = memo_read(
         spark,
         "simhash_fps_corpus",
         sf_dir,
-        lambda: dedup_simhash(spark, sf_dir).where(F.col("doc_id") % 4 != 0),
+        lambda: dedup_simhash(spark, sf_dir).where(~in_batch()),
     )
-    corpus_sims = spark.read.parquet(corpus_path)
-    sdf = documents_readstream(spark, sf_dir).where(F.col("doc_id") % 4 == 0)
-    target = _scratch_unique(
-        f"neardup_admitted_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
-    )
-
-    def admit(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        neardup_gate_batch(batch, target, corpus_sims, epoch_id)
-
-    ckpt = _tempfile.mkdtemp(prefix="ufload-ckpt-neardup-")
-    run_with_notify(sdf, admit, checkpoint_dir=ckpt)
-    return (
-        read_admitted(spark, target)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_admitted"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
+    return _run_gate(
+        spark, sf_dir, "neardup", corpus_sims, neardup_gate_batch, read_admitted
     )
