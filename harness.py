@@ -310,10 +310,16 @@ def start(cmd: str, names, plain: bool = False, mem: str | None = None):
 
 
 def run(spark, registry, name: str, sf_dir: str) -> float:
-    """Push one registered query through the noop sink; seconds taken."""
-    t0 = time.perf_counter()
-    registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    """Push one registered query through the noop sink; seconds taken up to
+    the sink. The query's persisted and checkpointed frames are released
+    after the timer stops, when its lifetime scope exits."""
+    from ufload_spark.lifetime import scope
+
+    with scope():
+        t0 = time.perf_counter()
+        registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        seconds = time.perf_counter() - t0
+    return seconds
 
 
 def median(ts: list[float]) -> float:
@@ -324,36 +330,29 @@ def triple(ts: list[float]) -> dict:
     return {"median": round(median(ts), 3), "runs": [round(t, 3) for t in ts]}
 
 
-def drain(spark, full: bool = False) -> None:
-    """Inter-query hygiene (r6): several queries persist frames and rely on
-    the ContextCleaner's GC-driven unpersist; across ~300 invocations in
-    one bench process that cache accumulates, and the resulting executor
-    memory / GC pressure uniformly inflates LATER queries (measured: the
-    50-query suite read 1.27× of r4's 27-query suite on common entries,
-    while the same queries re-measured in isolation matched r4 exactly).
-    Clearing the cache after every measured run and forcing a full GC
-    once per pass keeps each query's number independent of suite size —
-    persisted INDEXES are parquet on disk (memo_publish), unaffected.
-    ``full`` is the expensive half (full JVM GC): once per PASS, not per
-    query — a per-query System.gc() taxed every sub-second entry ~50 ms."""
-    spark.catalog.clearCache()
-    if full:
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
+def drain(spark) -> None:
+    """Inter-pass hygiene (r6): a full Python + JVM GC once per PASS, so
+    garbage from one pass does not tax the next (measured: the 50-query
+    suite read 1.27× of r4's 27-query suite on common entries while the
+    same queries re-measured in isolation matched r4 exactly). Neither GC
+    frees a persisted or checkpointed frame; :func:`run`'s lifetime scope
+    releases those per query. Not per query: a per-query System.gc()
+    taxed every sub-second entry ~50 ms."""
+    gc.collect()
+    try:
+        spark._jvm.System.gc()
+    except Exception:
+        pass
 
 
 def timed_passes(spark, registry, names, sf_dir: str, passes: int) -> dict:
-    """``passes`` rounds over ``names``: one run each, drained per query,
-    full drain per pass. Returns every run's seconds per name."""
+    """``passes`` rounds over ``names``: one run each, drained per pass.
+    Returns every run's seconds per name."""
     runs: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(passes):
         for name in names:
             runs[name].append(run(spark, registry, name, sf_dir))
-            drain(spark)
-        drain(spark, full=True)
+        drain(spark)
     return runs
 
 
@@ -532,7 +531,6 @@ def spot(args) -> int:
             timings[name] = round(run(spark, registry, name, dest), 2)
         except Exception as ex:  # a spot failure IS the finding
             failures[name] = f"{type(ex).__name__}: {ex}"[:300]
-        drain(spark)
     spark.stop()
     print(
         json.dumps(
@@ -565,6 +563,7 @@ def sweep(args) -> int:
     Close ritual: ``harness.py sweep /root/testdata/sf0.1 --family
     fixedpoint --family sketch`` after the full sf0.01 sweep."""
     from tests.oracle import compare
+    from ufload_spark.lifetime import scope
 
     only = set(args.only or [])
     for fam in args.family or []:
@@ -576,7 +575,8 @@ def sweep(args) -> int:
     for name in names:
         try:
             q = registry[name]
-            compare(q.fn(spark, args.sf_dir), q.oracle, args.sf_dir)
+            with scope():
+                compare(q.fn(spark, args.sf_dir), q.oracle, args.sf_dir)
         except Exception as ex:  # noqa: BLE001 — report and continue
             fails.append(name)
             print(f"FAIL {name} {str(ex)[:200]}", flush=True)

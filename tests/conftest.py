@@ -11,6 +11,15 @@ SF_DIR = os.environ.get("UFLOAD_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MID = "/root/testdata/sf0.01"
 
 
+def persistent_rdds(spark: SparkSession) -> set[int]:
+    """Ids of the RDDs the session currently holds persisted (caches and
+    local checkpoints alike) — the leak probe of the lifetime tests."""
+    return {
+        int(k)
+        for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     from ufload_spark.session import RUNTIME_CONF

@@ -44,6 +44,20 @@ def test_no_row_udf_registration_anywhere():
     assert offenders == []
 
 
+def test_materializations_only_through_lifetime():
+    """Every persist and checkpoint in the engine goes through
+    `ufload_spark.lifetime` (`keep` / `cut`), the one module that knows how
+    a materialization is freed — a raw call makes a frame no scope owns."""
+    engine = OPERATORS.parent
+    offenders = [
+        str(path.relative_to(engine))
+        for path in sorted(engine.rglob("*.py"))
+        if path.name != "lifetime.py"
+        and re.search(r"\.(persist|cache|localCheckpoint|checkpoint)\(", path.read_text())
+    ]
+    assert offenders == []
+
+
 #: .count() occurrences that are NOT driver-side materializations of a big
 #: frame, each justified where it appears
 _ALLOWED_COLLECT = {

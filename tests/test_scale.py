@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, SF_DIR_MID
+from tests.conftest import SF_DIR, SF_DIR_MID, persistent_rdds
 from ufload_spark.sources.tables import table
 
 
@@ -505,14 +505,21 @@ def test_components_tiers_agree(spark):
     chain = [(i, i + 1) for i in range(100, 111)]
     tris = [(1, 2), (2, 3), (3, 1), (7, 9), (9, 8)]
     pairs = spark.createDataFrame(chain + tris, "a long, b long")
+    before = persistent_rdds(spark)
     small = {
         (r.n, r.m) for r in min_label_components(pairs).collect()
     }
+    small_left = persistent_rdds(spark) - before
     dist = {
         (r.n, r.m)
         for r in min_label_components(pairs, small_graph_edges=0).collect()
     }
+    dist_left = persistent_rdds(spark) - before - small_left
     assert small == dist
+    # called bare, each tier leaves only the labeling it returns: the
+    # pair/edge caches, chunk caches and superseded chunk checkpoints die
+    # with the call's own scope
+    assert len(dist_left) <= len(small_left), (dist_left, small_left)
     assert {m for _, m in small} == {100, 1, 7}  # component minima
     assert all(m == 100 for n, m in small if n >= 100)
 
@@ -1615,17 +1622,11 @@ def test_bucketed_bfs_round_no_edge_exchange(spark):
 def test_bucketed_tiers_release_their_caches(spark):
     """r11 (r10 VERDICT ask #5): the bucketed graph tiers publish their
     audit-sized results through the staged loader and unpersist every
-    cache their rounds accumulated — a registered query in a long-lived
-    session leaves NO new persistent RDDs behind once it returns."""
+    cache their rounds accumulated, and the streaming gates release each
+    micro-batch's segment checkpoint once it is published — called bare,
+    a registered query in a long-lived session leaves NO new persistent
+    RDDs behind once it returns."""
     from ufload_spark.plans.registry import load_all
-
-    def ids():
-        return {
-            int(k)
-            for k in spark.sparkContext._jsc.getPersistentRDDs()
-            .keySet()
-            .toArray()
-        }
 
     reg = load_all()
     for name in (
@@ -1633,10 +1634,12 @@ def test_bucketed_tiers_release_their_caches(spark):
         "graph_lpa_bucketed",
         "graph_bfs_bucketed",
         "graph_kcore_bucketed",
+        "streaming_ingest_gate",
+        "streaming_neardup_gate",
     ):
-        before = ids()
+        before = persistent_rdds(spark)
         df = reg[name].fn(spark, SF_DIR)
-        leaked = ids() - before
+        leaked = persistent_rdds(spark) - before
         assert not leaked, (name, leaked)
         assert df.count() > 0, name
 

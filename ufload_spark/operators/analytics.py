@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.functions.names import db_to_instance, file_to_db
+from ufload_spark.lifetime import cut
 from ufload_spark.operators.listing import BACKUPS_CTE, backups
 from ufload_spark.functions.binning import suboctave_bin, suboctave_bin_sql
 from ufload_spark.plans.registry import register
@@ -1123,7 +1124,7 @@ def _basket_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # This is NOT the r11 measured-negative (that checkpointed FITEMS
     # with no re-partition, adding materialization while forcing the
     # join to re-exchange); interleaved A/B at sf1: topn 8.97 -> 6.34 s.
-    items = items.localCheckpoint(eager=False)
+    items = cut(items)
     items = items.repartition(
         max(spark.sparkContext.defaultParallelism, 8), F.col("okey")
     )
@@ -1439,7 +1440,7 @@ def part_similarity_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint 32.8 s, all bit-identical. Incidence rows are
     # whale-capped (≤ CF_MAX_BASKET parts/customer), two bigints each, so
     # the checkpointed footprint stays ~corpus-incidence-sized at scale.
-    b = baskets.join(kept, "cust", "left_semi").localCheckpoint(eager=False)
+    b = cut(baskets.join(kept, "cust", "left_semi"))
     npart = b.groupBy("part").agg(F.count("*").cast("bigint").alias("n"))
     # Pair counts through the shared sized helper (r12 ADVICE defactoring;
     # the exploding-join aggregate sizing rationale and the measured
@@ -1754,9 +1755,7 @@ def part_similarity_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage at the two batch-sized frames (raw row blocks, no cache
     # encode) computes the batch subtree once: isolated sf1 medians
     # 31.4 s → 20.4 s, results bit-identical (361k rows).
-    batch = _cf_capped_baskets(spark, sf_dir, batch=True).localCheckpoint(
-        eager=False
-    )
+    batch = cut(_cf_capped_baskets(spark, sf_dir, batch=True))
 
     np_path = memo_publish(
         spark,
@@ -1774,7 +1773,7 @@ def part_similarity_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted = spark.table(co_table).select("part_a", "part_b", "co")
     # sized=False: the delta is batch-sized — the 4×P repartition was
     # measured neutral-to-worse here (see _cf_pair_counts)
-    delta = _cf_pair_counts(batch, sized=False).localCheckpoint(eager=False)
+    delta = cut(_cf_pair_counts(batch, sized=False))
     touched_early = (
         delta.select(F.col("part_a").alias("part"))
         .union(delta.select(F.col("part_b").alias("part")))
@@ -2986,7 +2985,7 @@ def basket_part_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same items checkpoint + okey re-clustering as _basket_pair_stats
     # (r12): here the distinct feeds FIVE consumers (two pair-join sides,
     # three triple-join sides) plus the support aggregate
-    items = items.localCheckpoint(eager=False)
+    items = cut(items)
     items = items.repartition(
         max(spark.sparkContext.defaultParallelism, 8), F.col("okey")
     )
@@ -3302,12 +3301,14 @@ def parts_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("q").alias("mq"), F.sum("c").alias("mc"))
     )
     dec = "decimal(38,0)"
-    pk = monthly.groupBy("l_partkey").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("mq").cast(dec).alias("sq"),
-        F.sum(F.col("mq").cast(dec) * F.col("mq")).cast(dec).alias("sqq"),
-        F.sum("mc").cast("bigint").alias("cents"),
-    ).localCheckpoint(eager=False)
+    pk = cut(
+        monthly.groupBy("l_partkey").agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.sum("mq").cast(dec).alias("sq"),
+            F.sum(F.col("mq").cast(dec) * F.col("mq")).cast(dec).alias("sqq"),
+            F.sum("mc").cast("bigint").alias("cents"),
+        )
+    )
     n, sq, sqq = (F.col(c) for c in ("n", "sq", "sqq"))
     spread = n * sqq - sq * sq
     binned = pk.select(

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut, hand_up, keep, scope
 from ufload_spark.plans.registry import QUERIES, register
 from ufload_spark.sources.tables import in_batch, table
 
@@ -788,26 +789,30 @@ def min_label_components(
     """
     from pyspark.sql import Observation
 
-    pr = pairs.toDF("u", "v").persist()
-    n_edges = pr.count()  # materializes the cache; the tier decision input
-    if n_edges <= small_graph_edges:
-        out = (
-            pr.repartition(1)
-            .mapInPandas(_unionfind_batches, schema="n long, m long")
-            .persist()
-        )
-        out.count()  # materialize before the pair cache is dropped
-        pr.unpersist()
-        return out
+    # the pair and edge caches, the chunk caches and every superseded
+    # chunk checkpoint are read only by this call's eager syncs: they die
+    # with its scope, and only the returned labeling is handed up
+    with scope():
+        pr = keep(pairs.toDF("u", "v"))
+        n_edges = pr.count()  # materializes the cache; the tier decision input
+        if n_edges <= small_graph_edges:
+            out = hand_up(
+                keep(
+                    pr.repartition(1).mapInPandas(
+                        _unionfind_batches, schema="n long, m long"
+                    )
+                )
+            )
+            out.count()  # materialize before the pair cache is dropped
+            return out
 
-    edges = pr.union(pr.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # cache: every iteration joins the same edge set (pr stays cached
-    # beneath it only until edges materializes in the first sync)
-    edges = edges.distinct().persist()
-    labels = (
-        edges.select(F.col("u").alias("n")).distinct().withColumn("m", F.col("n"))
-    )
-    try:
+        edges = pr.union(pr.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        # cache: every iteration joins the same edge set (pr stays cached
+        # beneath it only until edges materializes in the first sync)
+        edges = keep(edges.distinct())
+        labels = (
+            edges.select(F.col("u").alias("n")).distinct().withColumn("m", F.col("n"))
+        )
         for _ in range(MAX_CHUNKS):
             cur = labels
             for _ in range(CHUNK_ROUNDS):
@@ -825,11 +830,7 @@ def min_label_components(
                     (nm != F.col("m")).cast("long").alias("chg"),
                 )
             obs = Observation()
-            chunk = (
-                cur.observe(obs, F.sum("chg").alias("chg"))
-                .select("n", "m")
-                .persist()
-            )
+            chunk = keep(cur.observe(obs, F.sum("chg").alias("chg")).select("n", "m"))
             chunk.count()  # materialize; the convergence metric rides this job
             # sum over an empty label set is NULL, and an empty graph is
             # already converged
@@ -845,16 +846,12 @@ def min_label_components(
             # count above — checkpoint materialization bypasses the
             # observation listener (measured: lazy-checkpoint metrics
             # silently read 0 and convergence fired 8 rounds early).
-            labels = chunk.localCheckpoint(eager=True)
-            chunk.unpersist()
+            labels = cut(chunk, eager=True)
             if changed == 0:
-                return labels
+                return hand_up(labels)
         raise RuntimeError(
             f"label propagation did not converge in {CHUNK_ROUNDS * MAX_CHUNKS} rounds"
         )
-    finally:
-        edges.unpersist()
-        pr.unpersist()
 
 
 @register(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.functions.binning import suboctave_bin, suboctave_bin_sql
+from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import table
 
@@ -889,7 +890,7 @@ def events_kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a/b join sides) and the exact-cardinality audit twice — persist it
     # so the corpus scans once (its cardinality is users × types, orders
     # of magnitude under the event count)
-    hashed = e.select("event_type", h.alias("h")).distinct().persist()
+    hashed = keep(e.select("event_type", h.alias("h")).distinct())
     w = Window.partitionBy("event_type").orderBy("h")
     sk = (
         hashed.withColumn("rn", F.row_number().over(w))
@@ -1386,6 +1387,28 @@ ordered AS (
 )"""
 
 
+def _markov_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``(p, nxt, n, wout)`` transition-count matrix both Markov
+    queries iterate over (the ``pairs``/``outw`` CTEs): ONE per-user lag
+    window reduces the event stream to |types|² rows, kept so the steps
+    do not re-run the user exchange."""
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return keep(
+        ev.select(
+            "user_id",
+            F.col("event_type").alias("nxt"),
+            F.lag("event_type").over(w).alias("p"),
+        )
+        .where(F.col("p").isNotNull())
+        .groupBy("p", "nxt")
+        .agg(F.count("*").cast("bigint").alias("n"))
+        .withColumn(
+            "wout", F.sum("n").over(Window.partitionBy("p")).cast("bigint")
+        )
+    )
+
+
 def _markov_oracle() -> str:
     steps = [f", r0 AS (SELECT s, {MARKOV_MASS} // k AS r FROM states, ns)"]
     for i in range(1, MARKOV_ITERS + 1):
@@ -1437,22 +1460,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (extension surface — event-analytics family).
     """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("nxt"),
-            F.lag("event_type").over(w).alias("p"),
-        )
-        .where(F.col("p").isNotNull())
-        .groupBy("p", "nxt")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .withColumn(
-            "wout", F.sum("n").over(Window.partitionBy("p")).cast("bigint")
-        )
-        .persist()  # |types|² rows; spares re-running the user exchange per step
-    )
+    pairs = _markov_pairs(spark, sf_dir)
     states = pairs.select(F.col("p").alias("s")).distinct()
     ns = states.agg(F.count("*").cast("bigint").alias("k"))
     ranks = states.crossJoin(F.broadcast(ns)).select(
@@ -2357,7 +2365,7 @@ def events_countmin_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         bucket(F.col("d"), F.col("user_id")).alias("bucket"),
     )
-    probes = probes.localCheckpoint(eager=False)  # feeds sketch + probe join
+    probes = cut(probes)  # feeds sketch + probe join
     sketch = probes.groupBy("d", "bucket").agg(
         F.sum("exact_n").cast("bigint").alias("c")
     )
@@ -3249,22 +3257,7 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — event-analytics family,
     beside events_markov_stationary / events_funnel).
     """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("nxt"),
-            F.lag("event_type").over(w).alias("p"),
-        )
-        .where(F.col("p").isNotNull())
-        .groupBy("p", "nxt")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .withColumn(
-            "wout", F.sum("n").over(Window.partitionBy("p")).cast("bigint")
-        )
-        .persist()  # |types|² rows; spares re-running the user exchange per step
-    )
+    pairs = _markov_pairs(spark, sf_dir)
     allstates = (
         pairs.select(F.col("p").alias("s"))
         .unionAll(pairs.select(F.col("nxt").alias("s")))
@@ -3293,7 +3286,7 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("a"),
         )
-        a = a.localCheckpoint(eager=False)
+        a = cut(a)
     outw = pairs.groupBy(F.col("p").alias("s")).agg(
         F.max("wout").cast("bigint").alias("n_out")
     )
@@ -3423,7 +3416,7 @@ def events_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast("bigint").alias("n_users"))
     )
-    cohorts = cohorts.localCheckpoint(eager=False)
+    cohorts = cut(cohorts)
     sizes = cohorts.where(F.col("wk") == 0).select(
         "cohort_week", F.col("n_users").alias("base")
     )

@@ -22,6 +22,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut, keep, scope
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import spread_scan, table
 
@@ -241,18 +242,14 @@ def _vector_side(
     return vec.hint("shuffle_hash") if pin_build else vec
 
 
-def _cut(df: DataFrame, track: list | None) -> DataFrame:
+def _cut(df: DataFrame, *, broadcast: bool) -> DataFrame:
     """A round's lineage barrier. Without one, round k's vector subtree
     re-executes the whole round-1..k-1 prefix (LPA measured 26 s -> 0.3 s
-    at sf0.1). ``track=None``: a lazy ``localCheckpoint`` — nothing
-    materializes until the final action. Otherwise a PERSIST appended to
-    ``track`` for :func:`_publish_release` (same compute-once effect, and
+    at sf0.1). Broadcast layout: a lazy :func:`~ufload_spark.lifetime.cut`
+    — nothing materializes until the final action. Bucketed layout: a
+    :func:`~ufload_spark.lifetime.keep` (same compute-once effect, and
     InMemoryRelation keeps the outputPartitioning a checkpoint destroys)."""
-    if track is None:
-        return df.localCheckpoint(eager=False)
-    df = df.persist()
-    track.append(df)
-    return df
+    return cut(df) if broadcast else keep(df)
 
 
 def _pr_rounds(edges: DataFrame, *, broadcast: bool) -> DataFrame:
@@ -329,7 +326,7 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     see :func:`_pr_rounds`. Past broadcastable rank vectors the fallback
     is :func:`graph_pagerank_bucketed`.
     """
-    return _pr_rounds(_shared_edges(spark, sf_dir).persist(), broadcast=True)
+    return _pr_rounds(keep(_shared_edges(spark, sf_dir)), broadcast=True)
 
 
 @register(
@@ -443,7 +440,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of ``graph_pagerank_purchases``, sharing its published edge
     artifact and its oracle discipline).
     """
-    edges = _shared_edges(spark, sf_dir).persist()
+    edges = keep(_shared_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = (
         table(spark, sf_dir, "supplier")
@@ -493,7 +490,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("r"),
             )
         )
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = cut(ranks)
     return _rank_out(ranks.where(F.col("r") > 0))
 
 
@@ -610,7 +607,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closing probe, n_edges). ReuseExchange catches some duplicates,
     # but a lazy cut guarantees one execution regardless of how AQE
     # carves the downstream stages.
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges)
     deg = _degrees(edges, "u", "v")
     e = (
         edges.join(deg.withColumnsRenamed({"node": "u", "d": "du"}), "u")
@@ -624,7 +621,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the oriented edge list is read three times (two wedge sides + the
     # closing probe) — cut it once too
-    o = o.localCheckpoint(eager=False)
+    o = cut(o)
     o1 = o.alias("o1")
     o2 = o.alias("o2")
     o3 = o.alias("o3")
@@ -768,40 +765,12 @@ def _lpa_edges_and_labels(
     # materializes labels exactly once, so a cache would leak for the
     # process lifetime with no second reader (r8 advice)
     if persist_edges:
-        edges = edges.persist()
+        edges = keep(edges)
     labels = _lpa_rounds(edges, broadcast=True)
     return edges, labels
 
 
-def _publish_release(spark, result: DataFrame, name: str, cached) -> DataFrame:
-    """Materialize a bucketed tier's audit-sized result through the staged
-    loader, RELEASE every cache and local checkpoint the rounds
-    accumulated (``cached``), and return the published frame
-    (r10 VERDICT ask #5 — the r8 LPA publish-path leak
-    class: a registered query in a long-lived session must not leave
-    persistent RDDs behind after its result is consumed). The write is
-    distributed — no driver materialization; the result frames are
-    audit-sized (community counts / distance histogram / peel curve), so
-    the extra write+read is bounded.
-    ``tests/test_scale.py::test_bucketed_tiers_release_their_caches``
-    pins the contract."""
-    from ufload_spark.sources.loader import _scratch_unique, stage_and_publish
-
-    target = _scratch_unique(name)
-    stage_and_publish(spark, result, target)
-    for df in cached:
-        df.unpersist()
-        # DataFrame.unpersist does not free a localCheckpoint: its RDD
-        # stays registered until released on the RDD itself
-        plan = df._jdf.queryExecution().logical()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    return spark.read.parquet(target)
-
-
-def _lpa_rounds(
-    edges: DataFrame, *, broadcast: bool, track: list | None = None
-) -> DataFrame:
+def _lpa_rounds(edges: DataFrame, *, broadcast: bool) -> DataFrame:
     """The :data:`LPA_ITERS` synchronous vote rounds over an ``(src, dst,
     w)`` edge frame — shared by the broadcast tier
     (:func:`graph_label_propagation`, ``broadcast=True``) and the
@@ -860,7 +829,7 @@ def _lpa_rounds(
                 "label", F.struct(F.col("wsum"), (-F.col("label")).alias("nl"))
             ).alias("label")
         )
-        labels = _cut(labels, track)
+        labels = _cut(labels, broadcast=broadcast)
     return labels
 
 
@@ -894,19 +863,22 @@ def graph_lpa_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — the layout discipline of
     ``graph_pagerank_bucketed`` applied to the LPA family).
     """
-    # persist the bucketed scan: InMemoryRelation PRESERVES the bucket
-    # HashPartitioning (probed — the vote join stays exchange-free on the
-    # edge side), and the 4 rounds read the cache instead of re-scanning
-    # and re-sorting the table per round (measured sf1: 9.9 -> 8.8 s).
-    edges = spark.table(_bucketed_edges_table(spark, sf_dir)).select(
-        "src", "dst", "w"
-    ).persist()
-    cached: list[DataFrame] = [edges]
-    labels = _lpa_rounds(edges, broadcast=False, track=cached)
-    result = labels.groupBy(F.col("label").alias("community")).agg(
-        F.count("*").cast("bigint").alias("n_members")
-    )
-    return _publish_release(spark, result, "lpa_bucketed_out", cached)
+    from ufload_spark.sources.loader import publish_scratch
+
+    with scope():
+        # persist the bucketed scan: InMemoryRelation PRESERVES the bucket
+        # HashPartitioning (probed — the vote join stays exchange-free on the
+        # edge side), and the 4 rounds read the cache instead of re-scanning
+        # and re-sorting the table per round (measured sf1: 9.9 -> 8.8 s).
+        edges = keep(
+            spark.table(_bucketed_edges_table(spark, sf_dir)).select("src", "dst", "w")
+        )
+        labels = _lpa_rounds(edges, broadcast=False)
+        result = labels.groupBy(F.col("label").alias("community")).agg(
+            F.count("*").cast("bigint").alias("n_members")
+        )
+        target = publish_scratch(spark, result, "lpa_bucketed_out", sf_dir)
+    return spark.read.parquet(target)
 
 
 def _modularity_oracle() -> str:
@@ -1111,17 +1083,12 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — graph family; components
     answer "connected at all?", BFS answers "how far?").
     """
-    edges = _shared_edges(spark, sf_dir).select("src", "dst").persist()
+    edges = keep(_shared_edges(spark, sf_dir).select("src", "dst"))
     return _bfs_rounds(spark, sf_dir, edges, broadcast=True)
 
 
 def _bfs_rounds(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame,
-    *,
-    broadcast: bool,
-    track: list | None = None,
+    spark: SparkSession, sf_dir: str, edges: DataFrame, *, broadcast: bool
 ) -> DataFrame:
     """The :data:`BFS_ROUNDS` synchronous frontier expansions shared by
     the broadcast tier (:func:`graph_bfs_distances`) and the bucketed
@@ -1147,7 +1114,7 @@ def _bfs_rounds(
             .groupBy("node")
             .agg(F.min("d").cast("bigint").alias("d"))
         )
-        dist = _cut(dist, track)
+        dist = _cut(dist, broadcast=broadcast)
     return dist.groupBy(F.col("d").alias("distance")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -1179,14 +1146,17 @@ def graph_bfs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — layout discipline of
     ``graph_pagerank_bucketed`` applied to bounded traversal).
     """
-    # persist keeps the bucket partitioning AND saves the per-round
-    # rescan+sort (the LPA-bucketed measurement; same table, same shape)
-    edges = spark.table(_bucketed_edges_table(spark, sf_dir)).select(
-        "src", "dst"
-    ).persist()
-    cached: list[DataFrame] = [edges]
-    result = _bfs_rounds(spark, sf_dir, edges, broadcast=False, track=cached)
-    return _publish_release(spark, result, "bfs_bucketed_out", cached)
+    from ufload_spark.sources.loader import publish_scratch
+
+    with scope():
+        # persist keeps the bucket partitioning AND saves the per-round
+        # rescan+sort (the LPA-bucketed measurement; same table, same shape)
+        edges = keep(
+            spark.table(_bucketed_edges_table(spark, sf_dir)).select("src", "dst")
+        )
+        result = _bfs_rounds(spark, sf_dir, edges, broadcast=False)
+        target = publish_scratch(spark, result, "bfs_bucketed_out", sf_dir)
+    return spark.read.parquet(target)
 
 
 #: link-prediction output size
@@ -1357,9 +1327,7 @@ FROM p{k}"""
     return "".join(parts)
 
 
-def _kcore_curve(
-    pairs: DataFrame, *, broadcast: bool, track: list | None = None
-) -> DataFrame:
+def _kcore_curve(pairs: DataFrame, *, broadcast: bool) -> DataFrame:
     """The synchronous k-core peel over a ``(c, s)`` pair frame and its
     per-round ``(round, n_nodes, n_edges)`` curve — shared by the broadcast
     tier (:func:`graph_kcore_peel`) and the bucketed tier
@@ -1386,39 +1354,36 @@ def _kcore_curve(
       bucket layout. The semi joins take the same-parity key first
       (exchange-free on the pair side), then the opposite key — the
       round's single pair-frame exchange, which leaves the frame
-      partitioned for the NEXT round's first join, alternating. This
-      needs ``track``: persist keeps the outputPartitioning the
-      alternation rides, while a checkpoint rewrites the frame as an
-      opaque RDD scan (measured: every aggregate then re-exchanges). The
-      degree checkpoints are tracked too, for :func:`_publish_release`
-      (a tracked persist of them measured ~4.5x slower at sf0.1)."""
-    pairs = _cut(pairs, track)
+      partitioned for the NEXT round's first join, alternating. This is
+      why the bucketed barrier is a persist: it keeps the
+      outputPartitioning the alternation rides, while a checkpoint
+      rewrites the frame as an opaque RDD scan (measured: every aggregate
+      then re-exchanges). The degree frames stay checkpoints in both
+      layouts (a persist of them measured ~4.5x slower at sf0.1)."""
+    pairs = _cut(pairs, broadcast=broadcast)
     out = []
     for rnd in range(KCORE_ROUNDS + 1):
-        deg = (
+        deg = cut(
             pairs.select(
                 F.explode(F.array(F.col("c"), F.col("s"))).alias("node")
             )
             .groupBy("node")
             .agg(F.count("*").cast("bigint").alias("d"))
-            .localCheckpoint(eager=False)
         )
-        if track is not None:
-            track.append(deg)
         deg_c = deg.where(_is_cust("node")).select(F.col("node").alias("c"), "d")
         deg_s = deg.where(_is_supp("node")).select(F.col("node").alias("s"), "d")
         out.append(_kcore_stats(deg_c, deg_s, rnd))
         if rnd == KCORE_ROUNDS:
             break
-        keep = {
+        survivors = {
             key: _vector_side(
                 side.where(F.col("d") >= KCORE_K).select(key), key, broadcast=broadcast
             )
             for key, side in (("c", deg_c), ("s", deg_s))
         }
         for key in ("s", "c") if not broadcast and rnd % 2 else ("c", "s"):
-            pairs = pairs.join(keep[key], key, "left_semi")
-        pairs = _cut(pairs, track)
+            pairs = pairs.join(survivors[key], key, "left_semi")
+        pairs = _cut(pairs, broadcast=broadcast)
     return reduce(DataFrame.unionByName, out)
 
 
@@ -1485,18 +1450,21 @@ def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so round 0's pair frame arrives partitioned by ``c``; each
     round moves the pair frame once (the alternating semi key) and
     everything else that shuffles is node-sized. The round caches and
-    degree checkpoints are released once the curve is published
-    (:func:`_publish_release`).
+    degree checkpoints are released once the curve is published (rule 2
+    of :mod:`ufload_spark.lifetime`).
     ``test_bucketed_kcore_round_no_pair_exchange_on_bucket_key`` pins
     round 0's shape.
 
     Reference analog: none (extension surface — layout discipline of
     ``graph_pagerank_bucketed`` applied to the peeling family).
     """
+    from ufload_spark.sources.loader import publish_scratch
+
     edges = spark.table(_bucketed_edges_table(spark, sf_dir))
-    cached: list[DataFrame] = []
-    res = _kcore_curve(_customer_pairs(edges), broadcast=False, track=cached)
-    return _publish_release(spark, res, "kcore_bucketed_out", cached)
+    with scope():
+        res = _kcore_curve(_customer_pairs(edges), broadcast=False)
+        target = publish_scratch(spark, res, "kcore_bucketed_out", sf_dir)
+    return spark.read.parquet(target)
 
 
 def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1876,11 +1844,10 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     The totals are 1-row aggregates broadcast back — never a global
     sort. Reference analog: none (extension surface, graph family).
     """
-    edges = (
+    edges = keep(
         _shared_edges(spark, sf_dir)
         .where(_is_cust("src"))  # directed half: customer -> supplier
         .select(_entity_key("src").alias("c"), _entity_key("dst").alias("s"), "w")
-        .persist()
     )
     custs = edges.select("c").distinct()
     nc = custs.groupBy().agg(F.count("*").alias("n"))
@@ -1893,7 +1860,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vector feeds the next half-step's broadcast AND the total's
         # 1-row aggregate — without the cut each broadcast subtree
         # re-executes the whole prior chain (measured 38 s -> ~6 s sf1).
-        raw = raw.localCheckpoint(eager=False)
+        raw = cut(raw)
         total = raw.groupBy().agg(F.sum(col).cast("decimal(38,0)").alias("t"))
         return raw.crossJoin(F.broadcast(total)).select(
             key,

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import in_batch, table
 
@@ -1872,7 +1873,7 @@ def multimodal_image_cluster_keep_best(
         F.count("*").cast("long").alias("n"),
         F.min("doc_id").cast("long").alias("rep"),
     )
-    groups = groups.localCheckpoint(eager=False)
+    groups = cut(groups)
     bands = groups.select(
         "ahash",
         "rep",

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
 from ufload_spark.sources.tables import BATCH_MOD, in_batch, table
@@ -774,7 +775,7 @@ def kmeans_centroids(
         # per-iteration jobs (dedup_semantic_pairs 6.6 s plain vs 10.0 s
         # checkpointed). The frame is model-sized (k rows) either way.
         if not kernel:
-            cent = cent.localCheckpoint(eager=False)
+            cent = cut(cent)
     return cent
 
 
@@ -2413,7 +2414,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the next iteration's broadcast and the three downstream codebook
         # consumers (corpus encode, query distance table, ADC) otherwise
         # each re-execute the whole training chain. PQ_M×PQ_K rows — tiny.
-        cent = cent.localCheckpoint(eager=False)
+        cent = cut(cent)
     return cent
 
 
@@ -2830,8 +2831,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     preprocessing ahead of the IVF/PQ indexes registered above).
     """
     row, fold, seq, matvec = _pca_fit(spark, sf_dir)
-    barrier = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-    row = barrier(
+    row = cut(
         row.withColumn("w4", matvec(F.col("c"), F.col("v")))
     ).select(
         "n",
@@ -2912,8 +2912,7 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
     # at DIM=64). A lazy localCheckpoint truncates the lineage outright:
     # each eigen step is optimized alone, and what crosses the barrier is
     # one materialized row, not an expression.
-    barrier = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-    row = barrier(row)
+    row = cut(row)
     fold = lambda arr: F.aggregate(  # noqa: E731
         arr, F.lit(0.0), lambda acc, x: acc + x
     )
@@ -2936,8 +2935,8 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
         )
 
     for _ in range(PCA_ITERS):
-        row = barrier(row.withColumn("w", matvec(F.col("c"), F.col("v"))))
-        row = barrier(
+        row = cut(row.withColumn("w", matvec(F.col("c"), F.col("v"))))
+        row = cut(
             row.withColumn(
                 "nrm",
                 F.round(
@@ -2945,7 +2944,7 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
                 ),
             )
         )
-        row = barrier(
+        row = cut(
             row.withColumn(
                 "v",
                 F.transform(
@@ -3433,15 +3432,14 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid", "cid", "ce", cos_micro(F.col("qe"), F.col("ce")).alias("rel")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), "cid")
-    pool = (
+    pool = keep(
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= MMR_POOL)
         .select("qid", "cid", "ce", "rel")
-        .persist()
     )
     a = pool.select("qid", F.col("cid").alias("ca"), F.col("ce").alias("ea"))
     b = pool.select("qid", F.col("cid").alias("cb"), F.col("ce").alias("eb"))
-    sims = (
+    sims = keep(
         a.join(b, ["qid"])
         .where(F.col("ca") != F.col("cb"))
         .select(
@@ -3450,7 +3448,6 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cb",
             cos_micro(F.col("ea"), F.col("eb")).alias("sim"),
         )
-        .persist()
     )
     lam, inv = MMR_LAMBDA_X10, 10 - MMR_LAMBDA_X10
     argmax = F.max_by(

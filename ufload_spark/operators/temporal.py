@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import table
 
@@ -1875,7 +1876,7 @@ def orders_forecast_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    daily = daily.localCheckpoint(eager=False)
+    daily = cut(daily)
     # SCALE GUARD: all windows below run over the bounded daily frame.
     w_ma = Window.orderBy("day").rangeBetween(-3, 3)
     ma = daily.select(
@@ -1923,7 +1924,7 @@ def orders_forecast_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("ym"),
     )
-    deseas = deseas.localCheckpoint(eager=False)
+    deseas = cut(deseas)
     w_day = Window.orderBy("day")
     slopes = deseas.select(
         "day",

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import in_batch, spread_scan, table
 
@@ -596,7 +597,14 @@ def _bpe_train(
     ``word, freq, s``, list of 1-row merge DataFrames). See
     :func:`text_bpe_learn` for semantics."""
     d = table(spark, sf_dir, "documents")
-    words = (
+    # The K-round loop's lineage references the word table 2^K-ish times
+    # (round k's argmax subtree and its words subtree each re-derive round
+    # k-1). Persisting the VOCABULARY-sized base table collapses that to
+    # one corpus scan + cache reads; what still recomputes per round is
+    # word-table-sized, not corpus-sized. The cache lives until the
+    # caller's lifetime scope exits; at real training depth each round's
+    # table would be checkpointed instead (see docstring).
+    words = keep(
         d.select(
             F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word")
         )
@@ -610,15 +618,6 @@ def _bpe_train(
                 F.trim(F.regexp_replace("word", "(.)", "$1 ")), F.lit(" </w>")
             ).alias("s"),
         )
-        # The K-round loop's lineage references the word table 2^K-ish
-        # times (round k's argmax subtree and its words subtree each
-        # re-derive round k-1). Persisting the VOCABULARY-sized base table
-        # collapses that to one corpus scan + cache reads; what still
-        # recomputes per round is word-table-sized, not corpus-sized.
-        # Spark's ContextCleaner unpersists when the query's frames are
-        # GC'd; at real training depth each round's table would be
-        # checkpointed instead (see docstring).
-        .persist()
     )
     merges = []
     cur = words
@@ -2012,7 +2011,7 @@ def text_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(NB_VOCAB)
         .select("w")
     )
-    vocab = vocab.localCheckpoint(eager=False)
+    vocab = cut(vocab)
     dt = (
         toks.join(F.broadcast(vocab), "w", "left_semi")
         .groupBy("doc_id", "lang", "w")
@@ -2627,7 +2626,7 @@ def _logreg_train_weights(spark: SparkSession, feat: DataFrame) -> DataFrame:
                 for j in range(_LOGREG_NF)
             ]
         )
-        w = w.localCheckpoint(eager=False)
+        w = cut(w)
     return w
 
 

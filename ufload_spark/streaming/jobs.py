@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ufload_spark.lifetime import cut, scope
 from ufload_spark.operators.dedup import (
     _SIMHASH_BITSUMS_SQL,
     _SIMHASH_COMBINE_SQL,
@@ -841,12 +842,15 @@ def _publish_segment(rows: DataFrame, target: str, epoch_id: int) -> None:
     # EAGER checkpoint before the empty-gate (r12, guide §5): isEmpty()
     # executed the whole batch pipeline once and the publish then
     # re-executed it — the per-batch work ran ~twice. One materialization
-    # serves both; the frame is batch-sized. (The guard itself must stay:
+    # serves both; the frame is batch-sized and released with the scope
+    # once the segment is published. (The guard itself must stay:
     # stage_and_publish AUDITS against empty frames by design.)
-    rows = rows.localCheckpoint()
-    if rows.isEmpty():
-        return
-    stage_and_publish(rows.sparkSession, rows, f"{target}/e{int(epoch_id):06d}")
+    with scope():
+        rows = cut(rows, eager=True)
+        if not rows.isEmpty():
+            stage_and_publish(
+                rows.sparkSession, rows, f"{target}/e{int(epoch_id):06d}"
+            )
 
 
 def ingest_gate_batch(
