@@ -334,10 +334,11 @@ def drain(spark) -> None:
     """Inter-pass hygiene (r6): a full Python + JVM GC once per PASS, so
     garbage from one pass does not tax the next (measured: the 50-query
     suite read 1.27× of r4's 27-query suite on common entries while the
-    same queries re-measured in isolation matched r4 exactly). Neither GC
-    frees a persisted or checkpointed frame; :func:`run`'s lifetime scope
-    releases those per query. Not per query: a per-query System.gc()
-    taxed every sub-second entry ~50 ms."""
+    same queries re-measured in isolation matched r4 exactly). The GCs do
+    not release persisted or checkpointed frames (a registry scan found
+    136 persistent RDDs still registered after both); :func:`run`'s
+    lifetime scope releases those per query. Not per query: a per-query
+    System.gc() taxed every sub-second entry ~50 ms."""
     gc.collect()
     try:
         spark._jvm.System.gc()
