@@ -58,6 +58,26 @@ def test_materializations_only_through_lifetime():
     assert offenders == []
 
 
+def test_partition_sizing_has_one_owner():
+    """`sources/tables.py` owns the partition-count decision: it is the only
+    module that reads `defaultParallelism` (`parallelism`), and no other
+    `.repartition(` takes a parallelism expression — every explicit hash
+    spread goes through `tables.spread`."""
+    engine = OPERATORS.parent
+    owner = engine / "sources" / "tables.py"
+    readers, sized = [], []
+    for path in sorted(engine.rglob("*.py")):
+        if path == owner:
+            continue
+        src = path.read_text()
+        if "defaultParallelism" in src:
+            readers.append(str(path.relative_to(engine)))
+        if re.search(r"\.repartition\(\s*[^,)]*parallelism", src, re.IGNORECASE):
+            sized.append(str(path.relative_to(engine)))
+    assert readers == []
+    assert sized == []
+
+
 #: .count() occurrences that are NOT driver-side materializations of a big
 #: frame, each justified where it appears
 _ALLOWED_COLLECT = {
@@ -66,7 +86,6 @@ _ALLOWED_COLLECT = {
     # convergence sync — each a scalar the iterative contract needs
     "dedup.py": 3,
     "analytics.py": 1,  # GroupedData.pivot().count() — a lazy aggregate
-    "similarity.py": 1,  # lsh_r: memoized parquet-footer corpus count → r knob
 }
 
 

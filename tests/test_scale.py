@@ -1374,6 +1374,7 @@ def test_bucketed_lpa_round_join_no_edge_exchange(spark):
         N_GRAPH_BUCKETS,
         _bucketed_edges_table,
     )
+    from ufload_spark.sources.tables import spread
 
     name = _bucketed_edges_table(spark, SF_DIR)
     edges = spark.table(name).select("src", "dst", "w")
@@ -1393,12 +1394,13 @@ def test_bucketed_lpa_round_join_no_edge_exchange(spark):
         contrib = edges.join(lab, edges.src == lab.node).select(
             F.col("dst").alias("node"), "label", "w"
         )
-        stream = contrib.unionByName(
-            labels.select(
-                "node", "label", F.lit(LPA_SELF_W).cast("bigint").alias("w")
-            )
-        ).repartition(
-            max(spark.sparkContext.defaultParallelism, 8), F.col("node")
+        stream = spread(
+            contrib.unionByName(
+                labels.select(
+                    "node", "label", F.lit(LPA_SELF_W).cast("bigint").alias("w")
+                )
+            ),
+            "node",
         )
         votes = stream.groupBy("node", "label").agg(
             F.sum("w").cast("bigint").alias("wsum")

@@ -17,7 +17,12 @@ from ufload_spark.sources.loader import (
     should_reload,
     stage_and_publish,
 )
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import (
+    SPREAD_ROWS_PER_TASK,
+    parallelism,
+    spread,
+    table,
+)
 from ufload_spark.sources.zipsource import zip_listing
 
 
@@ -419,6 +424,58 @@ def test_normalize_ts_dtype_matrix(spark, tmp_path):
     # a frame without the column passes through untouched
     no_ts = spark.createDataFrame([(1,)], "x int")
     assert normalize_ts(no_ts) is no_ts
+
+
+def test_spread_rules(spark):
+    """`spread`'s width and its two skip rules (plans only, no job)."""
+    one = spark.range(100, numPartitions=1)
+    width = parallelism(spark)
+    assert spread(one, "id").rdd.getNumPartitions() == width
+    assert spread(one, "id", waves=4).rdd.getNumPartitions() == 4 * width
+    rows = 3 * SPREAD_ROWS_PER_TASK
+    assert spread(one, "id", n_rows=rows).rdd.getNumPartitions() == 3
+    assert spread(one, "id", n_rows=SPREAD_ROWS_PER_TASK) is one
+    many = spark.range(100, numPartitions=parallelism(spark, floor=1))
+    assert spread(many, "id", src=("test", "many")) is many
+    assert spread(one, "id", src=("test", "one")) is not one
+    # the split count is read once per session and source
+    assert spread(one, "id", src=("test", "many")) is one
+
+
+def test_per_session_memos_do_not_pin_the_session(spark):
+    """`table` and `spread` keep their memos on the session itself: after a
+    session has read through both, no module-level container under
+    `ufload_spark.sources` still reaches it (a dict keyed on the session
+    would keep every stopped session and its frames alive)."""
+    import importlib
+    import pkgutil
+
+    import ufload_spark.sources as sources
+    from pyspark.sql import DataFrame
+
+    s2 = spark.newSession()
+    li = table(s2, SF_DIR, "lineitem")
+    spread(li, "l_orderkey", src=(SF_DIR, "lineitem"))
+    assert table(s2, SF_DIR, "lineitem") is li
+
+    def reaches(obj, depth: int = 0) -> bool:
+        if obj is s2 or (isinstance(obj, DataFrame) and obj.sparkSession is s2):
+            return True
+        if depth > 4:
+            return False
+        if isinstance(obj, dict):
+            obj = [*obj.keys(), *obj.values()]
+        if isinstance(obj, (list, tuple, set, frozenset)):
+            return any(reaches(x, depth + 1) for x in obj)
+        return False
+
+    pinned = [
+        f"{mod.name}.{k}"
+        for mod in pkgutil.iter_modules(sources.__path__)
+        for k, v in vars(importlib.import_module(f"{sources.__name__}.{mod.name}")).items()
+        if reaches(v)
+    ]
+    assert pinned == []
 
 
 def test_version_history_and_time_travel(spark, tmp_path):

@@ -71,4 +71,7 @@ def scope():
         for df, checkpointed in reversed(owned):
             df.unpersist()
             if checkpointed:
-                df._jdf.queryExecution().logical().rdd().unpersist(False)
+                # through the context, not RDD.unpersist, which logs a
+                # "lineage has been truncated" warning for every checkpoint
+                rdd = df._jdf.queryExecution().logical().rdd()
+                rdd.context().unpersistRDD(rdd.id(), False)

@@ -23,7 +23,7 @@ from ufload_spark.lifetime import cut
 from ufload_spark.operators.listing import BACKUPS_CTE, backups
 from ufload_spark.functions.binning import suboctave_bin, suboctave_bin_sql
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread_scan, table
+from ufload_spark.sources.tables import spread, table
 
 
 @register(
@@ -1104,10 +1104,10 @@ def _basket_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused exchange, so the checkpoint only adds its own materialization:
     isolated sf1 medians 17.9 s (current) vs 21.0 s (fitems checkpointed)
     for part_recommendations_topn."""
-    # spread_scan on okey (guide §2.4/§2.5): parallelizes the 2-split
+    # spread on okey (guide §2.4/§2.5): parallelizes the 2-split
     # fixture scan and pre-satisfies the (okey, part) distinct AND the
     # within-basket okey self-join — one exchange instead of two.
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
     )
     items = li.select(
@@ -1124,10 +1124,7 @@ def _basket_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # This is NOT the r11 measured-negative (that checkpointed FITEMS
     # with no re-partition, adding materialization while forcing the
     # join to re-exchange); interleaved A/B at sf1: topn 8.97 -> 6.34 s.
-    items = cut(items)
-    items = items.repartition(
-        max(spark.sparkContext.defaultParallelism, 8), F.col("okey")
-    )
+    items = spread(cut(items), "okey")
     freq = (
         items.groupBy("part")
         .agg(F.count("*").alias("sup"))
@@ -1413,9 +1410,9 @@ def part_similarity_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (extension surface — recommender family,
     beside `part_recommendations_topn`).
     """
-    # spread_scan: the orders probe + the (cust, part) distinct's partial
+    # spread: the orders probe + the (cust, part) distinct's partial
     # aggregate run above the 2-split lineitem scan — parallelize first.
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
     )
     o = table(spark, sf_dir, "orders")
@@ -1498,9 +1495,9 @@ def _cf_capped_baskets(
     scan is pruned, not the join output. The whale cap is per-customer
     and the mod partitions customers, so capping inside a slice equals
     capping globally then slicing."""
-    # spread_scan: the orders probe + the (cust, part) distinct's partial
+    # spread: the orders probe + the (cust, part) distinct's partial
     # aggregate run above the 2-split lineitem scan (see part_similarity_cosine).
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
     )
     o = table(spark, sf_dir, "orders")
@@ -1624,18 +1621,13 @@ def _cf_pair_counts(b: DataFrame, *, sized: bool = True) -> DataFrame:
     11.5 s after; r12 ADVICE)."""
     a_side = b.select("cust", F.col("part").alias("part_a"))
     c_side = b.select("cust", F.col("part").alias("part_b"))
-    spark = b.sparkSession
     pairs = (
         a_side.join(c_side, "cust")
         .where(F.col("part_a") < F.col("part_b"))
         .select("part_a", "part_b")
     )
     if sized:
-        pairs = pairs.repartition(
-            CF_PAIR_REPART_MULT * spark.sparkContext.defaultParallelism,
-            F.col("part_a"),
-            F.col("part_b"),
-        )
+        pairs = spread(pairs, "part_a", "part_b", waves=CF_PAIR_REPART_MULT)
     return pairs.groupBy("part_a", "part_b").agg(
         F.count("*").cast("bigint").alias("co")
     )
@@ -2973,10 +2965,10 @@ def basket_part_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none — extension surface.
     """
-    # spread_scan on okey (guide §2.4/§2.5): parallelizes the 2-split
+    # spread on okey (guide §2.4/§2.5): parallelizes the 2-split
     # fixture scan and pre-satisfies the (okey, part) distinct AND the
     # within-basket okey self-join — one exchange instead of two.
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
     )
     items = li.select(
@@ -2985,10 +2977,7 @@ def basket_part_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same items checkpoint + okey re-clustering as _basket_pair_stats
     # (r12): here the distinct feeds FIVE consumers (two pair-join sides,
     # three triple-join sides) plus the support aggregate
-    items = cut(items)
-    items = items.repartition(
-        max(spark.sparkContext.defaultParallelism, 8), F.col("okey")
-    )
+    items = spread(cut(items), "okey")
     freq = (
         items.groupBy("part")
         .agg(F.count("*").alias("sup"))
@@ -4251,11 +4240,11 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside `lineitem_ols_price_model` [levels-on-levels within return
     flags] — elasticity is the log-log slope economists actually read).
     """
-    # spread_scan: the broadcast part-probe + the (brand, part, month)
+    # spread: the broadcast part-probe + the (brand, part, month)
     # partial aggregate run above a 2-split fixture scan; the repartition
     # on the aggregate's own part key parallelizes them (no-op at real
     # split counts; all sums exact integers/decimals).
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_partkey", src=(sf_dir, "lineitem")
     )
     p = table(spark, sf_dir, "part")

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.operators.textops import _TOKENS_SQL, token_count
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread_scan, table
+from ufload_spark.sources.tables import spread, table
 
 # --- PII scrubbing ---------------------------------------------------------
 
@@ -75,10 +75,10 @@ def corpus_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     each PII class and replaces it with a typed placeholder; the md5 of the
     scrubbed text makes the oracle verify the REWRITE, not just the counts.
     Narrow map — linear at any scale; on a pathologically-small split
-    count (the 1-row-group fixture) :func:`spread_scan` hash-repartitions
+    count (the 1-row-group fixture) :func:`spread` hash-repartitions
     once so the four regex passes run on every core instead of one, and is
     a structural no-op when the corpus arrives in thousands of splits."""
-    d = spread_scan(
+    d = spread(
         table(spark, sf_dir, "documents"), "doc_id", src=(sf_dir, "documents")
     )
     t = _injected(d)

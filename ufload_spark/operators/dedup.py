@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, hand_up, keep, scope
 from ufload_spark.plans.registry import QUERIES, register
-from ufload_spark.sources.tables import in_batch, table
+from ufload_spark.sources.tables import in_batch, spread, table
 
 K_HASHES = 8
 N_BANDS = 4  # bands of 2 rows each
@@ -99,13 +99,8 @@ def shingles_frame(d: DataFrame, distinct: bool = True) -> DataFrame:
     """Frame-level core of :func:`shingles` — same shape, but over any
     frame carrying (doc_id, text): reused by the streaming near-dup gate,
     whose micro-batches are not a fixture table."""
-    spark = d.sparkSession
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    # floor of 8 only matters on tiny local sessions (defaultParallelism
-    # dominates on any real cluster); the exchange itself is what the
-    # downstream window needs regardless of the count
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    t = d.repartition(n_parts, "doc_id").select(
+    t = spread(d, "doc_id").select(
         "doc_id", F.posexplode(toks).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -1698,8 +1693,7 @@ def _winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp) — the distinct winnowing fingerprints of every doc."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    t = d.repartition(n_parts, "doc_id").select(
+    t = spread(d, "doc_id").select(
         "doc_id", F.posexplode(toks).alias("pos0", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos0")

@@ -21,20 +21,17 @@ from ufload_spark.plans.registry import register
 from ufload_spark.sources.tables import table
 
 
-@register(
-    "events_tumbling_hourly",
-    """
+TUMBLING_HOURLY_SQL = """
 SELECT date_trunc('hour', ts) AS window_start, event_type,
        count(*) AS n_events, round(sum(value), 2) AS total_value
 FROM events GROUP BY 1, 2
-""",
-    doc="tumbling event-time window aggregate (streaming twin: groupBy(window))",
-)
-def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows via ``F.window`` — identical partial/final
-    aggregation to the Structured Streaming version; epoch-aligned windows
-    equal ``date_trunc('hour')``."""
-    ev = table(spark, sf_dir, "events")
+"""
+
+
+def tumbling_hourly(ev: DataFrame) -> DataFrame:
+    """1-hour tumbling windows via ``F.window`` over a batch or streaming
+    events frame — the one body of ``events_tumbling_hourly`` and its
+    streaming twin; epoch-aligned windows equal ``date_trunc('hour')``."""
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -51,8 +48,15 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_session_windows",
-    """
+    "events_tumbling_hourly",
+    TUMBLING_HOURLY_SQL,
+    doc="tumbling event-time window aggregate (streaming twin: groupBy(window))",
+)
+def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return tumbling_hourly(table(spark, sf_dir, "events"))
+
+
+SESSION_WINDOWS_SQL = """
 WITH flagged AS (
   SELECT user_id, ts,
          CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -69,16 +73,16 @@ WITH flagged AS (
 SELECT user_id, min(ts) AS session_start, max(ts) AS last_ts,
        count(*) AS n_events
 FROM numbered GROUP BY user_id, session_no
-""",
-    doc="session windows (30 min gap) — F.session_window vs gaps-and-islands",
-)
-def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+"""
+
+
+def session_windows(ev: DataFrame) -> DataFrame:
     """Session windows with a 30-minute inactivity gap via
-    ``F.session_window`` (the batch form of the streaming stateful session
-    operator). The oracle reconstructs sessions with the classic
-    gaps-and-islands SQL: a new session starts when the gap ≥ 30 min, since
-    Spark sessions are half-open ``[start, last+gap)``."""
-    ev = table(spark, sf_dir, "events")
+    ``F.session_window`` over a batch or streaming events frame — the one
+    body of ``events_session_windows`` and its streaming twin. The oracle
+    reconstructs sessions with the classic gaps-and-islands SQL: a new
+    session starts when the gap ≥ 30 min, since Spark sessions are
+    half-open ``[start, last+gap)``."""
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
@@ -89,6 +93,15 @@ def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
+
+
+@register(
+    "events_session_windows",
+    SESSION_WINDOWS_SQL,
+    doc="session windows (30 min gap) — F.session_window vs gaps-and-islands",
+)
+def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return session_windows(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -198,9 +211,7 @@ def events_late_data_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_sliding_windows",
-    """
+SLIDING_WINDOWS_SQL = """
 WITH expl AS (
   SELECT e.value,
          time_bucket(INTERVAL 30 MINUTE, e.ts)
@@ -209,17 +220,17 @@ WITH expl AS (
 )
 SELECT window_start, count(*) AS n_events, round(sum(value), 2) AS total_value
 FROM expl GROUP BY window_start
-""",
-    doc="sliding event-time windows (1 h window, 30 min slide) — each event "
-    "lands in window_size/slide windows",
-)
-def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping windows via ``F.window(ts, '1 hour', '30 minutes')``:
-    Spark assigns each event to the 2 windows covering it (the oracle
-    reconstructs them as the 30-min-aligned bucket and its predecessor).
-    Same partial-agg economics as tumbling windows — the row expansion
-    happens map-side before the partial aggregate."""
-    ev = table(spark, sf_dir, "events")
+"""
+
+
+def sliding_windows(ev: DataFrame) -> DataFrame:
+    """Overlapping windows via ``F.window(ts, '1 hour', '30 minutes')`` over
+    a batch or streaming events frame — the one body of
+    ``events_sliding_windows`` and its streaming twin. Spark assigns each
+    event to the 2 windows covering it (the oracle reconstructs them as the
+    30-min-aligned bucket and its predecessor). Same partial-agg economics
+    as tumbling windows — the row expansion happens map-side before the
+    partial aggregate."""
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(
@@ -228,6 +239,16 @@ def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
+
+
+@register(
+    "events_sliding_windows",
+    SLIDING_WINDOWS_SQL,
+    doc="sliding event-time windows (1 h window, 30 min slide) — each event "
+    "lands in window_size/slide windows",
+)
+def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sliding_windows(table(spark, sf_dir, "events"))
 
 
 _GAP_SCHEMA = "user_id long, n_gaps long, median_gap_s double"

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, keep, scope
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread_scan, table
+from ufload_spark.sources.tables import spread, table
 
 #: total probability mass in micro-units, damping as an integer percentage
 PR_MASS = 1_000_000_000
@@ -503,11 +503,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchased-parts graph shared by triangle counting and link
     prediction: undirected ``(u, v)`` part pairs, ``u < v``, bought together
     in at least :data:`TRI_EDGE_MINSUP` distinct orders."""
-    # spread_scan on the self-join key (guide §2.4/§2.5): one okey
+    # spread on the self-join key (guide §2.4/§2.5): one okey
     # exchange parallelizes the 2-split fixture scan AND satisfies the
     # (okey, part) distinct and the okey self-join behind it — the
     # distinct's own exchange disappears.
-    li = spread_scan(
+    li = spread(
         table(spark, sf_dir, "lineitem"), "l_orderkey", src=(sf_dir, "lineitem")
     )
     items = li.select(
@@ -808,15 +808,15 @@ def _lpa_rounds(edges: DataFrame, *, broadcast: bool) -> DataFrame:
         # partial agg barely compressed (a node's incident labels are
         # near-distinct per map task). Interleaved 5-pass A/B at sf1:
         # 10.9 s -> 8.3 s median (broadcast tier), bit-identical output.
-        stream = contrib.unionByName(
-            labels.select(
-                "node",
-                "label",
-                F.lit(LPA_SELF_W).cast("bigint").alias("w"),
-            )
-        ).repartition(
-            max(edges.sparkSession.sparkContext.defaultParallelism, 8),
-            F.col("node"),
+        stream = spread(
+            contrib.unionByName(
+                labels.select(
+                    "node",
+                    "label",
+                    F.lit(LPA_SELF_W).cast("bigint").alias("w"),
+                )
+            ),
+            "node",
         )
         votes = stream.groupBy("node", "label").agg(
             F.sum("w").cast("bigint").alias("wsum")

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import in_batch, table
+from ufload_spark.sources.tables import in_batch, spread, table
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -179,12 +179,7 @@ def doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     up-front doc_id repartition is the `shingles` device; at 100 TB the
     table arrives in thousands of splits and this exchange disappears
     into the layout."""
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    return (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(n_parts, "doc_id")
-    )
+    return spread(table(spark, sf_dir, "documents").select("doc_id"), "doc_id")
 
 
 def with_binary_content(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,7 +33,7 @@ from ufload_spark.operators.dedup import (
 from ufload_spark.operators.textops import _TOKENS_SQL, token_count
 from ufload_spark.operators.textops import _TRIGRAM_RE
 from ufload_spark.plans.registry import QUERIES, register
-from ufload_spark.sources.tables import in_batch, spread_scan, table
+from ufload_spark.sources.tables import in_batch, spread, table
 
 MIN_TOKENS = 10
 MAX_PUNCT_RATIO = 0.30
@@ -128,10 +128,10 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``survivors(doc_id, source, n_tokens)``: quality filter → exact
     dedup → LSH near-dup drop, as ONE plan (the Spark twin of
     :func:`_survivors_sql`)."""
-    # spread_scan: the quality filter's regex passes + fingerprint md5 are
+    # spread: the quality filter's regex passes + fingerprint md5 are
     # the heavy per-row work and run ABOVE the 1-split fixture scan; the
     # repartition parallelizes them and is a no-op at real split counts.
-    d = spread_scan(
+    d = spread(
         table(spark, sf_dir, "documents"), "doc_id", src=(sf_dir, "documents")
     )
 

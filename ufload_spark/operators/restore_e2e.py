@@ -64,6 +64,7 @@ from ufload_spark.sources.loader import (
     restore_first_viable,
     sf_tag,
 )
+from ufload_spark.sources.tables import parallelism
 
 #: instances the composed query restores — bounded so the probe loop stays
 #: a handful of tiny Spark jobs at any fixture scale (the reference's ``-i``
@@ -371,7 +372,7 @@ def restore_instances(
     # whose tasks rarely fill more than a few cores, so ~1 worker per 8
     # cores (floor 2) keeps the back-fill effect without over-subscribing
     # the scheduler; with few instances the instance count caps it.
-    n_workers = max(2, spark.sparkContext.defaultParallelism // 8)
+    n_workers = max(2, parallelism(spark) // 8)
     if len(work) > 1:
         with ThreadPoolExecutor(max_workers=min(n_workers, len(work))) as pool:
             report_rows = list(

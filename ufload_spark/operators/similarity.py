@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
-from ufload_spark.sources.tables import BATCH_MOD, in_batch, table
+from ufload_spark.sources.tables import (
+    BATCH_MOD,
+    corpus_count,
+    in_batch,
+    spread,
+    table,
+)
 
 DIM = 64
 # Banded LSH: N_BANDS independent signatures of r sign bits each. Bucket
@@ -47,11 +53,6 @@ N_BANDS = 6
 R_MIN = 12
 TOP_K = 5
 
-#: plan-build-time cache of the derived r per fixture dir (fixtures are
-#: immutable within a session; avoids re-counting on every invocation)
-_R_CACHE: dict[str, int] = {}
-
-
 def _r_for_count(n_vectors: int) -> int:
     import math
 
@@ -59,15 +60,9 @@ def _r_for_count(n_vectors: int) -> int:
 
 
 def lsh_r(spark: SparkSession, sf_dir: str) -> int:
-    """The corpus-derived planes-per-band knob: one parquet-footer count of
-    the embeddings table (metadata-only scan), memoized per fixture dir."""
-    import os as _os
-
-    key = _os.path.abspath(sf_dir)
-    if key not in _R_CACHE:
-        n = table(spark, sf_dir, "embeddings").count()
-        _R_CACHE[key] = _r_for_count(n)
-    return _R_CACHE[key]
+    """The corpus-derived planes-per-band knob, from the embeddings table's
+    memoized parquet-footer count."""
+    return _r_for_count(corpus_count(spark, sf_dir, "embeddings"))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -566,47 +561,6 @@ def train_sample(emb: DataFrame, mod: int = TRAIN_SAMPLE_MOD) -> DataFrame:
     return emb.where(bucket == 0)
 
 
-#: minimum vectors per spread task (r12): below ~1k vectors per task the
-#: REPARTITION_BY_NUM's fixed per-task cost (scheduling + exchange + the
-#: AQE coalescing it disables) exceeds the parallelism it buys — the r11
-#: unconditional 32-way spread REGRESSED similarity_ivf_topk 3.62 → 4.68 s
-#: at sf0.1's 2k vectors (and the driver's 8-core run of the SAME code was
-#: FASTER, 2.73 s: fewer fixed-size tasks) while winning at sf1's 20k.
-#: Data-derived and cores-capped, so at 100 TB the spread saturates the
-#: session parallelism exactly as before.
-SPREAD_ROWS_PER_TASK = 1024
-
-
-def _spread(df: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """Hash-repartition an embeddings-shaped frame on ``vec_id`` — the
-    :func:`shingles` precedent from dedup.py applied to the vector family:
-    the embeddings fixture is one parquet file with one row group, so every
-    scan is ONE map task and the heavy per-row work ABOVE the scan
-    (subvector explode × broadcast codebook join × argmin aggregates; the
-    Arrow matmul kernel) runs single-core while 31 cores idle. The exchange
-    ships the (small) vector table once; at 100 TB the table arrives in
-    thousands of splits and the same hash exchange is what the downstream
-    per-vector aggregates would demand anyway. Values are unchanged — every
-    downstream reduction is either exact-integer or rounded to the shared
-    ``_R`` decimals (the engine's standing reduction-order discipline).
-
-    SCALE-ADAPTIVE (r12, the r11 VERDICT's one regression): the partition
-    count is ``min(parallelism, n_rows // SPREAD_ROWS_PER_TASK)`` when the
-    caller passes its row bound (``corpus_count``: a ``count()`` job on
-    first use per process and table, memoized after), so tiny frames skip
-    the exchange entirely instead of paying 32 fixed-cost tasks per
-    downstream stage; ``n_rows=None`` keeps the old cores-wide behavior."""
-    spark = df.sparkSession
-    cap = max(spark.sparkContext.defaultParallelism, 8)
-    if n_rows is None:
-        n_parts = cap
-    else:
-        n_parts = min(cap, n_rows // SPREAD_ROWS_PER_TASK)
-        if n_parts <= 1:
-            return df
-    return df.repartition(n_parts, "vec_id")
-
-
 def _kernel_assign(emb: DataFrame, cent: DataFrame, *, with_embedding: bool) -> DataFrame:
     """Arrow-vectorized cell assignment: distances of every vector to ALL
     k centroids as ONE numpy matmul per batch (``||x||² − 2·X@Cᵀ + ||c||²``,
@@ -702,9 +656,9 @@ def kmeans_centroids(
     # would be re-paid by every collect (dedup_semantic_pairs regressed
     # 6.6 s → ~10 s with it); the fold path evaluates everything inside
     # one query where the exchange is planned once. ``n_rows`` (the
-    # caller's training-set row bound) sizes the spread — see _spread.
+    # caller's training-set row bound) sizes the spread — see tables.spread.
     if not kernel:
-        emb = _spread(emb, n_rows)
+        emb = spread(emb, "vec_id", n_rows=n_rows)
     seeds = (
         emb.select(
             "vec_id",
@@ -898,7 +852,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Probed queries (a handful of rows) broadcast into the assignment scan, so
     the big side never shuffles on the skewed cell key."""
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     n_emb = corpus_count(spark, sf_dir, "embeddings")
@@ -922,7 +875,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w_vec = Window.partitionBy("vec_id").orderBy("d", "cid")
     asn = (
-        _spread(cand, n_emb)  # see _spread: 1-split fixture scans
+        spread(cand, "vec_id", n_rows=n_emb)
         .crossJoin(F.broadcast(cent))
         .select("vec_id", "embedding", "cid", d2("embedding").alias("d"))
         .withColumn("rn", F.row_number().over(w_vec))
@@ -1107,7 +1060,6 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_embedding_cosine``'s hyperplane-LSH retrieval with the
     cluster-gated formulation whose keep/drop rule is centroid-aware).
     """
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
@@ -1306,7 +1258,6 @@ def dedup_semantic_pairs_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     epsilon-overlap companion the SemDeDup paper's cluster-gating
     trades away, here as its own oracle-replayed tier).
     """
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
@@ -1446,7 +1397,6 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline of dedup.py:205 applied to the SemDeDup family).
     """
     from ufload_spark.sources.loader import memo_read
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
@@ -1643,7 +1593,6 @@ def _hier_assignment(spark: SparkSession, sf_dir: str):
     import pandas as pd
 
     from ufload_spark.sources.loader import memo_read
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
@@ -1857,7 +1806,6 @@ def similarity_semantic_cell_quality(spark: SparkSession, sf_dir: str) -> DataFr
     import numpy as np
     import pandas as pd
 
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
@@ -2112,7 +2060,6 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         cent_path, inv_path = cached
     else:
-        from ufload_spark.sources.tables import corpus_count
 
         n_emb = corpus_count(spark, sf_dir, "embeddings")
         cent = kmeans_centroids(
@@ -2120,7 +2067,9 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         w_vec = Window.partitionBy("vec_id").orderBy("d", "cid")
         inv = (
-            _spread(e.where(F.col("vec_id") >= IVF_Q_HI), n_emb)
+            spread(
+                e.where(F.col("vec_id") >= IVF_Q_HI), "vec_id", n_rows=n_emb
+            )
             .crossJoin(F.broadcast(cent))
             .select("vec_id", "cid", d2("embedding").alias("d"))
             .withColumn("rn", F.row_number().over(w_vec))
@@ -2352,13 +2301,13 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-subspace oracle CTEs still reproduce it bit-for-bit. Seeds
     are hash-ordered vec_ids — every subspace trains from the SAME seed
     vectors (sliced differently), mirrored exactly in the oracle."""
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
-    # see _spread: 1-split fixture scans; sized by the sample's row bound
-    tr = _spread(
+    # sized by the sample's row bound
+    tr = spread(
         train_sample(e),
-        corpus_count(spark, sf_dir, "embeddings") // TRAIN_SAMPLE_MOD,
+        "vec_id",
+        n_rows=corpus_count(spark, sf_dir, "embeddings") // TRAIN_SAMPLE_MOD,
     )
     subs = _pq_subvectors(tr, "vec_id")
     hw = Window.orderBy("h", "vec_id")
@@ -2579,7 +2528,6 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (extension surface — similarity family).
     """
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     books = _pq_codebooks(spark, sf_dir)
@@ -2594,9 +2542,10 @@ def _pq_encode(
     ``(cand_id, m, code)``. The argmin runs as a min_by hash aggregate
     (same rationale and tie-break as training): the corpus×PQ_M×PQ_K
     scored frame never hits a sort. ``n_rows`` sizes the scan spread —
-    see :func:`_spread`."""
+    see :func:`~ufload_spark.sources.tables.spread`."""
     cand = _pq_subvectors(
-        _spread(e.where(F.col("vec_id") >= PQ_Q_HI), n_rows), "cand_id"
+        spread(e.where(F.col("vec_id") >= PQ_Q_HI), "vec_id", n_rows=n_rows),
+        "cand_id",
     )
     return (
         cand.join(F.broadcast(books), "m")
@@ -2663,7 +2612,6 @@ def similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the skip-if-unchanged download memo (ufload
     db.py:695-711)."""
     from ufload_spark.sources.loader import memo_read
-    from ufload_spark.sources.tables import corpus_count
 
     e = table(spark, sf_dir, "embeddings")
     pbooks = memo_read(

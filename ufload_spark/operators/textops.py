@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import in_batch, spread_scan, table
+from ufload_spark.sources.tables import in_batch, spread, table
 
 #: Stopword alternation shared by Spark and the DuckDB oracles.
 _STOP = "the|a|and|of|to|in|is|it"
@@ -1996,10 +1996,10 @@ def text_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside text_langid_confusion / text_unigram_logprob).
     """
     d = table(spark, sf_dir, "documents")
-    # spread_scan: tokenize/explode + the vocab partial aggregate are the
+    # spread: tokenize/explode + the vocab partial aggregate are the
     # heavy map work above the 1-split fixture scan (no-op at real split
     # counts); every downstream reduction is exact-integer or decimal.
-    toks = spread_scan(d, "doc_id", src=(sf_dir, "documents")).select(
+    toks = spread(d, "doc_id", src=(sf_dir, "documents")).select(
         "doc_id",
         "lang",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"),

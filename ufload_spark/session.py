@@ -44,7 +44,6 @@ RUNTIME_CONF: dict[str, str] = {
 
 #: Build-time confs (only used when WE create the session, e.g. bench/tests).
 BUILD_CONF: dict[str, str] = {
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
     # Broadcast threshold compares against PRUNED COMPRESSED-COLUMNAR
     # size estimates, but the build side materializes as an in-heap

@@ -29,12 +29,12 @@ TABLES = (
 )
 
 
-#: Per-session catalog cache: (session, sf_dir, name) → analyzed DataFrame.
-#: spark.read.parquet re-reads footers for schema inference on every call —
-#: pure driver-side latency. A real engine resolves a table's schema once in
-#: its catalog; this dict is that catalog. Keyed on the session object
-#: itself so a restarted session never sees stale frames.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+def _session_memo(spark: SparkSession, name: str) -> dict:
+    """A dict kept on the session object itself (as :func:`tune` keeps its
+    sentinel), so it dies with the session and a new session starts empty.
+    A module-level dict keyed on the session would pin every stopped
+    session and its frames for the life of the process."""
+    return vars(spark).setdefault(f"_ufload_spark_{name}", {})
 
 
 def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -74,15 +74,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     to Catalyst — callers select/filter on the returned DataFrame."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    key = (spark, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = normalize_ts(df)
-    _TABLE_CACHE[key] = df
+    # spark.read.parquet re-reads footers for schema inference on every
+    # call — pure driver-side latency — so each session resolves a table
+    # once, the way a catalog would
+    tables = _session_memo(spark, "tables")
+    df = tables.get((sf_dir, name))
+    if df is None:
+        tune(spark)
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            df = normalize_ts(df)
+        tables[(sf_dir, name)] = df
     return df
 
 
@@ -98,41 +100,59 @@ def in_batch(col: str = "doc_id") -> Column:
     return F.col(col) % BATCH_MOD == 0
 
 
-#: (session, sf_dir, name) → scan partition count, for :func:`spread_scan`.
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
+#: fewest rows per task of a spread sized by ``n_rows``: below ~1k rows a
+#: task's fixed cost (scheduling, the exchange, the AQE coalescing a
+#: REPARTITION_BY_NUM disables) exceeds the parallelism it buys
+SPREAD_ROWS_PER_TASK = 1024
 
 
-def spread_scan(df: DataFrame, key: str, *, src: tuple | None = None) -> DataFrame:
-    """Scale-adaptive read-side parallelism (guide §2.5 "input skew: one
-    huge unsplittable file → repartition immediately after the read", §2.2):
-    hash-repartition ``df`` on ``key`` to the session's parallelism — but
-    ONLY when its scan actually arrives in fewer splits than the session
-    has cores. The fixtures are one parquet file with one row group per
-    table, so every scan is 1-2 map tasks and ALL per-row work above it
-    (regex passes, explodes, hash fan-outs, partial aggregates) runs
-    single-core while 31 cores idle. At 100 TB the same table arrives in
-    thousands of row groups, the partition count exceeds parallelism, and
-    this helper is a structural no-op — the adaptivity the constant-knob
-    alternative (`minPartitionNum`, fixed repartitions) lacks.
+def parallelism(spark: SparkSession, floor: int = 8) -> int:
+    """The session's cores, at least ``floor``: the width of every explicit
+    hash spread (the floor only matters on tiny local sessions)."""
+    return max(spark.sparkContext.defaultParallelism, floor)
 
-    The decision reads ``df.rdd.getNumPartitions()`` once per (session,
-    src) — plan compilation only, no job — and memoizes it. Values are
-    unchanged: the callers' downstream reductions are exact-integer,
-    `_R`-rounded, or per-row maps (the engine's standing reduction-order
-    discipline)."""
+
+def spread(
+    df: DataFrame,
+    *keys,
+    n_rows: int | None = None,
+    src: tuple | None = None,
+    waves: int = 1,
+) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` to ``waves`` × :func:`parallelism`
+    tasks — the one explicit spread in the engine.
+
+    Why: the fixtures are one parquet file with one row group per table,
+    so a scan arrives in 1–2 splits and all per-row work above it (regex
+    passes, explodes, hash fan-outs, partial aggregates, the vector
+    kernels) runs on one core while the rest idle. At 100 TB the same
+    table arrives in thousands of splits and the spread is a no-op, or the
+    exchange the downstream per-key work demands anyway. Values never
+    change: the reductions above a spread are exact-integer, rounded to
+    shared decimals, or per-row maps.
+
+    The rule, one skip per size hint:
+
+    - ``src`` (``(sf_dir, table)`` of the scan ``df`` reads): skip when the
+      scan already has at least as many splits as the session has cores.
+      The split count is read once per session and table (plan
+      compilation, no job).
+    - ``n_rows`` (the frame's row bound): the width is capped at
+      ``n_rows // SPREAD_ROWS_PER_TASK``, and a width of 1 or less skips.
+    - neither: always spread."""
     spark = df.sparkSession
-    n_cores = spark.sparkContext.defaultParallelism
+    n = waves * parallelism(spark)
     if src is not None:
-        ck = (spark, *src)
-        n_scan = _SCAN_PARTS_CACHE.get(ck)
-        if n_scan is None:
-            n_scan = df.rdd.getNumPartitions()
-            _SCAN_PARTS_CACHE[ck] = n_scan
-    else:
-        n_scan = df.rdd.getNumPartitions()
-    if n_scan >= n_cores:
-        return df
-    return df.repartition(max(n_cores, 8), key)
+        splits = _session_memo(spark, "scan_splits")
+        if src not in splits:
+            splits[src] = df.rdd.getNumPartitions()
+        if splits[src] >= parallelism(spark, floor=1):
+            return df
+    if n_rows is not None:
+        n = min(n, n_rows // SPREAD_ROWS_PER_TASK)
+        if n <= 1:
+            return df
+    return df.repartition(n, *keys)
 
 
 #: (sf_dir, name) → row count. Corpus counts parameterize the

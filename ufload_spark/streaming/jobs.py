@@ -40,6 +40,14 @@ from ufload_spark.operators.dedup import (
     simhash_frame,
     text_fingerprint,
 )
+from ufload_spark.operators.events import (
+    SESSION_WINDOWS_SQL,
+    SLIDING_WINDOWS_SQL,
+    TUMBLING_HOURLY_SQL,
+    session_windows,
+    sliding_windows,
+    tumbling_hourly,
+)
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
 from ufload_spark.sources.tables import in_batch, normalize_ts
@@ -87,11 +95,7 @@ def run_to_memory(
 
 @register(
     "streaming_tumbling_hourly",
-    """
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n_events, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2
-""",
+    TUMBLING_HOURLY_SQL,
     doc="Structured Streaming tumbling-window aggregate run to completion "
     "(readStream → watermark → window agg → memory sink, AvailableNow)",
 )
@@ -102,34 +106,14 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched; the watermark (OP-STR-1, the reference's 900 s guard) bounds
     state eviction in a continuous deployment."""
     sdf = events_readstream(spark, sf_dir).withWatermark("ts", "15 minutes")
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return run_to_memory(
+        tumbling_hourly(sdf), output_mode="complete", prefix="tumbling"
     )
-    return run_to_memory(agg, output_mode="complete", prefix="tumbling")
 
 
 @register(
     "streaming_sliding_windows",
-    """
-WITH expl AS (
-  SELECT e.value,
-         time_bucket(INTERVAL 30 MINUTE, e.ts)
-           - k.k * INTERVAL 30 MINUTE AS window_start
-  FROM events e, (SELECT unnest(range(0, 2)) AS k) k
-)
-SELECT window_start, count(*) AS n_events, round(sum(value), 2) AS total_value
-FROM expl GROUP BY window_start
-""",
+    SLIDING_WINDOWS_SQL,
     doc="Structured Streaming sliding-window aggregate (1 h window, 30 min "
     "slide) run to completion — overlapping-window state in the streaming "
     "engine, complete mode",
@@ -142,15 +126,9 @@ def streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     slide-by-slide). Complete mode makes the final sink equal the batch
     aggregate under any batching."""
     sdf = events_readstream(spark, sf_dir).withWatermark("ts", "15 minutes")
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
+    return run_to_memory(
+        sliding_windows(sdf), output_mode="complete", prefix="sliding"
     )
-    return run_to_memory(agg, output_mode="complete", prefix="sliding")
 
 
 @register(
@@ -443,24 +421,7 @@ def streaming_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_session_windows",
-    """
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   >= INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), numbered AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS session_no
-  FROM flagged
-)
-SELECT user_id, min(ts) AS session_start, max(ts) AS last_ts,
-       count(*) AS n_events
-FROM numbered GROUP BY user_id, session_no
-""",
+    SESSION_WINDOWS_SQL,
     doc="Structured Streaming session windows (30 min inactivity gap) run "
     "to completion — MERGING session state, complete mode",
 )
@@ -475,17 +436,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batching; the watermark bounds how long an open session can wait
     for a bridging event in a continuous deployment."""
     sdf = events_readstream(spark, sf_dir).withWatermark("ts", "15 minutes")
-    agg = (
-        sdf.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "last_ts",
-            "n_events",
-        )
+    return run_to_memory(
+        session_windows(sdf), output_mode="complete", prefix="sessions"
     )
-    return run_to_memory(agg, output_mode="complete", prefix="sessions")
 
 
 @register(
