@@ -27,7 +27,6 @@ def spark() -> SparkSession:
     builder = (
         SparkSession.builder.appName("ufload_spark-tests")
         .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
     )

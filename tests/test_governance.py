@@ -99,13 +99,25 @@ _ALLOWED_DRIVER_COLLECT = {
     # r9: the trained k-means centroid MODEL (k×DIM doubles, bounded by
     # the quantizer size, never the corpus) collected to ship into the
     # Arrow matmul kernels via closure — the `_plane_matrix` discipline.
-    # One site in _kernel_assign, one in _kernel_assign2 (the
-    # epsilon-overlap top-2 variant), one in the cell-quality audit
-    # kernel, one in the hierarchical tier's PIVOT selection (k2 = O(√k)
-    # rows — the k-row fine model itself stays a published DataFrame
-    # end to end since r11).
-    "similarity.py": 4,
+    # One site, `_centroid_matrix`, serving the flat/overlap/incremental
+    # assignment kernel, the cell-quality audit and the hierarchical
+    # tier's PIVOT selection (k2 = O(√k) rows — the k-row fine model
+    # itself stays a published DataFrame end to end since r11).
+    "similarity.py": 1,
 }
+
+
+def test_vector_primitives_have_one_owner():
+    """`operators/similarity.py` writes each vector primitive once: the
+    cosine quotient lives in `cosine`, the centroid-distance expansion in
+    `_nearest` (the one top-1/top-2 kernel — no `_kernel_assign2` copy),
+    and the IVF index publishes through the loader memo, not a private
+    cache."""
+    src = (OPERATORS / "similarity.py").read_text()
+    assert src.count("/ (F.sqrt(sqnorm(") == 1
+    assert src.count("2.0 * (X @") == 1
+    assert "_kernel_assign2" not in src
+    assert "_IVF_INDEX_CACHE" not in src
 
 
 def test_driver_side_materialization_is_bounded():

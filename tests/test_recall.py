@@ -553,17 +553,56 @@ def test_kernel_assign2_single_centroid_degrades_gracefully(spark):
     sample smaller than 2); the top-2 overlap kernel must emit primary
     memberships only — the oracle's behavior (no rn=2 rows) — instead of
     raising IndexError on order[:, 1]."""
-    from ufload_spark.operators.similarity import _kernel_assign2
+    from ufload_spark.operators.similarity import _kernel_assign
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id long, embedding array<float>",
     )
     cent = spark.createDataFrame([(7, [0.5, 0.5])], "cid int, ce array<double>")
-    rows = _kernel_assign2(emb, cent).collect()
+    rows = _kernel_assign(emb, cent, overlap=True).collect()
     assert len(rows) == 2, rows  # no overflow rows
     assert {r["vec_id"] for r in rows} == {1, 2}
     assert all(r["cell"] == 7 for r in rows)
+
+
+def test_single_centroid_top2_tiers_match_oracle(spark, tmp_path):
+    """The other two top-2 consumers of the centroid-distance kernel on a
+    corpus that trains ONE centroid (7 vectors, only vec_id 7 in the md5
+    training bucket): the cell-quality audit reports its one cell with a
+    NULL margin and the hierarchical tier probes the one pivot that
+    exists — both exactly as their oracles do, instead of IndexError on
+    the absent second-nearest column."""
+    import hashlib
+    import os
+
+    from tests.oracle import compare
+    from ufload_spark.operators.similarity import DIM, TRAIN_SAMPLE_MOD
+    from ufload_spark.plans.registry import load_all
+    from ufload_spark.sources.tables import TABLES
+
+    ids = list(range(1, 8))
+    in_train = [
+        i for i in ids
+        if int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) % TRAIN_SAMPLE_MOD == 0
+    ]
+    assert in_train == [7]
+    etab = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = np.random.default_rng(0).standard_normal((len(ids), DIM)).astype(np.float32)
+    pq.write_table(
+        pa.Table.from_pandas(
+            pd.DataFrame({"vec_id": ids, "embedding": list(vecs), "label": [0] * len(ids)}),
+            schema=etab.schema,
+            preserve_index=False,
+        ),
+        f"{tmp_path}/embeddings.parquet",
+    )
+    for t in TABLES:  # the oracle connection binds a view per table
+        if t != "embeddings":
+            os.symlink(f"{SF_DIR}/{t}.parquet", f"{tmp_path}/{t}.parquet")
+    reg, sf = load_all(), str(tmp_path)
+    for name in ("similarity_semantic_cell_quality", "dedup_semantic_pairs_hier"):
+        compare(reg[name].fn(spark, sf), reg[name].oracle, sf)
 
 
 def test_overlap_recovers_planted_boundary_dups(spark, tmp_path):

@@ -1312,10 +1312,11 @@ def test_bucketed_pagerank_iteration_join_no_edge_exchange(spark):
     edge side straight from its buckets (SelectedBucketsCount in the
     scan, NO exchange between scan and join); the only shuffles are the
     node-sized rank vector and the inflow aggregate. Runs at
-    shuffle.partitions=32 — NOT the session's 8 == N_GRAPH_BUCKETS — the
-    regime where the r11 defect lived: without the explicit repartition
-    into the bucket count, EnsureRequirements re-shuffles the EDGE side
-    to match the 32-partition rank vector every iteration."""
+    shuffle.partitions=32 (set here explicitly; also the session's
+    RUNTIME_CONF value) — NOT N_GRAPH_BUCKETS — the regime where the r11
+    defect lived: without the explicit repartition into the bucket count,
+    EnsureRequirements re-shuffles the EDGE side to match the 32-partition
+    rank vector every iteration."""
     from ufload_spark.operators.graph import N_GRAPH_BUCKETS, _bucketed_edges_table
 
     name = _bucketed_edges_table(spark, SF_DIR)
@@ -1752,11 +1753,9 @@ def test_semantic_incremental_base_side_is_cell_scoped(spark):
     k = _sem_k(corpus_count(spark, SF_DIR, "embeddings"))
     base = e.where(F.col("vec_id") % 4 != 0)
     cent = kmeans_centroids(train_sample(base), k=k, kernel=True)
-    base_asn = _kernel_assign(base, cent, with_embedding=True)
+    base_asn = _kernel_assign(base, cent)
     one_id = e.select(F.min("vec_id")).first()[0]
-    tiny = _kernel_assign(
-        e.where(F.col("vec_id") == one_id), cent, with_embedding=True
-    )
+    tiny = _kernel_assign(e.where(F.col("vec_id") == one_id), cent)
     cells = tiny.select("cell").distinct()
     touched = base_asn.join(F.broadcast(cells), "cell", "left_semi")
     n_touched, n_full = touched.count(), base_asn.count()

@@ -78,6 +78,19 @@ def sqnorm(a: Column) -> Column:
     return dot(a, a)
 
 
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine of two float arrays in double — the one formula behind every
+    exact rescoring step (the oracles' ``dp / (sqrt(na) * sqrt(nb))``)."""
+    return dot(a, b) / (F.sqrt(sqnorm(a)) * F.sqrt(sqnorm(b)))
+
+
+def _top_k(scored: DataFrame, k: int, *order) -> DataFrame:
+    """The first ``k`` rows per ``qid`` under ``order``, ranked 1..k in
+    ``rnk`` — the oracles' ``row_number() OVER (PARTITION BY qid ...)``."""
+    w = Window.partitionBy("qid").orderBy(*order)
+    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+
+
 @register(
     "embedding_norms",
     """
@@ -135,17 +148,10 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = c.crossJoin(F.broadcast(q)).select(
         "qid",
         "cid",
-        F.round(
-            dot(F.col("qe"), F.col("ce"))
-            / (F.sqrt(sqnorm(F.col("qe"))) * F.sqrt(sqnorm(F.col("ce")))),
-            6,
-        ).alias("cosine"),
+        F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cid", "cosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("cosine"), "cid").select(
+        "qid", "cid", "cosine", "rnk"
     )
 
 
@@ -293,6 +299,20 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_rescored(spark: SparkSession, sf_dir: str, t: float) -> DataFrame:
+    """Exact rescoring of the LSH candidates: each pair joined to both
+    vectors (``emb_a``, ``emb_b``) and kept where its cosine is ≥ ``t``."""
+    pairs = _lsh_candidate_pairs(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
+    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
+    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
+    return (
+        pairs.join(ea, "vec_a")
+        .join(eb, "vec_b")
+        .where(cosine(F.col("emb_a"), F.col("emb_b")) >= t)
+    )
+
+
 @register(
     "similarity_lsh_buckets",
     f"WITH {_PLANES_SQL} SELECT band, sig, count(*) AS n_vecs FROM sigs GROUP BY band, sig",
@@ -332,18 +352,10 @@ def similarity_lsh_ann_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-pairs work is confined to within-bucket, and bucket population is
     corpus-size / 2^r per band — both knobs (bands for recall, planes for
     bucket granularity) scale independently."""
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
-    e = table(spark, sf_dir, "embeddings")
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt(sqnorm(F.col("emb_a"))) * F.sqrt(sqnorm(F.col("emb_b")))
-    )
-    return (
-        pairs.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .where(cos >= 0.2)
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+    return _lsh_rescored(spark, sf_dir, 0.2).select(
+        "vec_a",
+        "vec_b",
+        F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cosine"),
     )
 
 
@@ -445,19 +457,14 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     eq = e.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("emb_q"))
     ec = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("emb_c"))
-    cos = dot(F.col("emb_q"), F.col("emb_c")) / (
-        F.sqrt(sqnorm(F.col("emb_q"))) * F.sqrt(sqnorm(F.col("emb_c")))
-    )
+    cos = cosine(F.col("emb_q"), F.col("emb_c"))
     scored = (
         cand.join(F.broadcast(eq), "qid")
         .join(ec, "cid")
         .select("qid", "cid", F.round(cos, 6).alias("cosine"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cid", "cosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("cosine"), "cid").select(
+        "qid", "cid", "cosine", "rnk"
     )
 
 
@@ -506,11 +513,8 @@ def similarity_topk_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame
     scored = c.crossJoin(F.broadcast(q)).select(
         "qid", "cid", F.round(cos(F.col("qe"), F.col("ce")), 6).alias("cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cid", "cosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("cosine"), "cid").select(
+        "qid", "cid", "cosine", "rnk"
     )
 
 
@@ -561,54 +565,129 @@ def train_sample(emb: DataFrame, mod: int = TRAIN_SAMPLE_MOD) -> DataFrame:
     return emb.where(bucket == 0)
 
 
-def _kernel_assign(emb: DataFrame, cent: DataFrame, *, with_embedding: bool) -> DataFrame:
-    """Arrow-vectorized cell assignment: distances of every vector to ALL
-    k centroids as ONE numpy matmul per batch (``||x||² − 2·X@Cᵀ + ||c||²``,
-    rounded to the shared ``_R`` decimals; argmin ties → smallest cid,
-    the fold path's ``ORDER BY d, cid``). Numeric caveat (r9 ADVICE): the
-    expansion form accumulates float error differently from the fold
-    path's / the oracle's direct ``sum(pow(x−c,2))``, so the rounded
-    distances agree only when no distance lands within ~1e-13 of a
-    0.5e-6 rounding boundary — overwhelmingly likely on real data, not
-    guaranteed; a boundary hit would shift one rounded distance by 1e-6
-    and surface as a driver hash mismatch, which is the detector we keep
-    pointed at it. The centroid table
-    is MODEL-sized (k×DIM) and ships via closure — the `_plane_matrix`
-    discipline — so the big side is one scan, no crossJoin row blow-up,
-    no per-(vector, centroid) Catalyst fold: at corpus-derived k the fold
-    path evaluates O(n·k) 64-step folds (measured 112 s at sf1 for
-    n=20k, k=313); the matmul is ~400 MFLOP, sub-second."""
+def _centroid_matrix(cent: DataFrame):
+    """A model-sized centroid frame ``(cid, ce)`` on the driver as
+    ``(C, cids)``: the float64 centroid matrix and its int32 cids, both
+    cid-ascending. The one driver collect of a trained model — k×DIM
+    doubles, never the corpus — shipped into the Arrow kernels via closure
+    (the `_plane_matrix` discipline)."""
     import numpy as np
-    import pandas as pd
 
     rows = sorted(cent.collect(), key=lambda r: r["cid"])
     C = np.array([r["ce"] for r in rows], dtype=np.float64)
-    cids = np.array([r["cid"] for r in rows], dtype=np.int32)
-    nc = (C * C).sum(axis=1)
+    return C, np.array([r["cid"] for r in rows], dtype=np.int32)
 
-    schema = "vec_id long, cell int, d double"
-    if with_embedding:
-        schema = "vec_id long, embedding array<float>, cell int, d double"
+
+def _nearest(X, C, top2: bool = False):
+    """The centroid-distance kernel: squared L2 of every row of ``X`` to
+    every row of ``C`` as ONE matmul (``||x||² − 2·X@Cᵀ + ||c||²``),
+    rounded to the shared ``_R`` decimals. Returns ``(j1, d1, j2, d2)``:
+    the nearest centroid's row index and distance, then the second
+    nearest's — ``None`` unless ``top2`` and ``C`` has at least two rows
+    (no second-nearest exists, exactly the oracle's absent ``rn = 2``).
+
+    Tie rule: ``C`` rows are cid-ascending and both ``argmin`` (top-1) and
+    ``argsort(kind="stable")[:, 0]`` (top-2) pick the FIRST minimum, i.e.
+    the smallest cid — the oracle's ``ORDER BY d, cid``.
+
+    Numeric caveat (r9 ADVICE): the expansion form accumulates float error
+    differently from the fold path's / the oracle's direct
+    ``sum(pow(x−c,2))``, so the rounded distances agree only when no
+    distance lands within ~1e-13 of a 0.5e-6 rounding boundary —
+    overwhelmingly likely on real data, not guaranteed; a boundary hit
+    would shift one rounded distance by 1e-6 and surface as a driver hash
+    mismatch, which is the detector we keep pointed at it."""
+    import numpy as np
+
+    D = np.round(
+        (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :],
+        _R,
+    )
+    ii = np.arange(len(X))
+    if not top2:
+        j1 = D.argmin(axis=1)
+        return j1, D[ii, j1], None, None
+    order = np.argsort(D, axis=1, kind="stable")
+    j1 = order[:, 0]
+    if D.shape[1] < 2:
+        return j1, D[ii, j1], None, None
+    j2 = order[:, 1]
+    return j1, D[ii, j1], j2, D[ii, j2]
+
+
+def _kernel_assign(emb: DataFrame, cent: DataFrame, *, overlap: bool = False) -> DataFrame:
+    """Arrow-vectorized cell assignment ``(vec_id, embedding, cell, d)``:
+    every vector's nearest cell and its rounded distance ``d`` from
+    :func:`_nearest`, one matmul per batch.
+    The centroid table is MODEL-sized and ships via closure, so the big
+    side is one scan — no crossJoin row blow-up, no per-(vector, centroid)
+    Catalyst fold: at corpus-derived k the fold path evaluates O(n·k)
+    64-step folds (measured 112 s at sf1 for n=20k, k=313); the matmul is
+    ~400 MFLOP, sub-second.
+
+    ``overlap`` is the epsilon-overlap pass: a vector ALSO emits its
+    SECOND-nearest cell whenever the rounded margin satisfies
+    ``d2 − d1 ≤`` :data:`SEM_EPS_FRAC```·d1`` — both memberships carry the
+    distance to THAT cell's centroid, so the pair stage's typicality drop
+    rule stays per-cell; the margin runs on the shared-rounded distances
+    with the oracle's arithmetic, so membership is deterministic. A single
+    trained centroid (a degenerate corpus whose train sample yields one
+    seed) has no second-nearest: primary memberships only, the oracle's
+    behavior (r10 ADVICE)."""
+    import numpy as np
+    import pandas as pd
+
+    C, cids = _centroid_matrix(cent)
 
     def fn(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            D = np.round(
-                (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + nc[None, :], _R
+            j1, d1, j2, d2 = _nearest(X, C, top2=overlap)
+            out = pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "cell": cids[j1],
+                    "d": d1,
+                    "embedding": pdf["embedding"],
+                }
             )
-            j = D.argmin(axis=1)  # first min = smallest cid (C sorted by cid)
-            out = {
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": cids[j],
-                "d": D[np.arange(len(j)), j],
-            }
-            if with_embedding:
-                out["embedding"] = pdf["embedding"]
-            yield pd.DataFrame(out)
+            if j2 is not None:
+                sec = (d2 - d1) <= SEM_EPS_FRAC * d1
+                ovf = out[sec].assign(cell=cids[j2[sec]], d=d2[sec])
+                out = pd.concat([out, ovf], ignore_index=True)
+            yield out
 
-    return emb.select("vec_id", "embedding").mapInPandas(fn, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(
+        fn, schema="vec_id long, embedding array<float>, cell int, d double"
+    )
+
+
+def _lloyd_update(cent: DataFrame, asn: DataFrame, vec: str, *keys: str) -> DataFrame:
+    """One Lloyd update step grouped by ``keys`` (``cid`` for k-means,
+    ``m, cid`` for the PQ codebooks): posexplode the assigned vectors
+    ``vec`` and average per coordinate, rounded to ``_R`` — map-side partial
+    aggregation ships k×DIM partials per partition, never vectors — then
+    rebuild each centroid array in coordinate order. Cells that lose all
+    members keep their previous centroid."""
+    means = (
+        asn.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, (F.col("pos") + 1).alias("i"))
+        .agg(F.round(F.avg("x"), _R).alias("mi"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "mi"))),
+                lambda s: s.getField("mi"),
+            ).alias("me")
+        )
+    )
+    return (
+        cent.withColumnRenamed("ce", "pe")
+        .join(means, list(keys), "left")
+        .select(*keys, F.coalesce("me", "pe").alias("ce"))
+    )
 
 
 def kmeans_centroids(
@@ -633,10 +712,7 @@ def kmeans_centroids(
     - **assign**: broadcast the k×DIM centroid table against the corpus
       scan; per-vector argmin of squared L2 (window over ``vec_id`` — one
       evenly-keyed shuffle). The fold runs JVM-side via zip_with/aggregate.
-    - **update**: posexplode to (cell, i, x) and groupBy(cell, i).avg —
-      map-side partial aggregation does the heavy lifting, the shuffle
-      carries k×DIM partials per partition, not vectors. Cells that lose
-      all members keep their previous centroid.
+    - **update**: :func:`_lloyd_update` keyed by ``cid``.
 
     Every averaged coordinate and every distance is rounded to ``_R``
     decimals so the DuckDB oracle (same algorithm, unrolled CTEs) lands on
@@ -679,8 +755,8 @@ def kmeans_centroids(
             # corpus-derived k (SemDeDup): the fold path's O(n·k) 64-step
             # folds dominate; the Arrow matmul kernel assigns per batch.
             # Same rounded distances and tie rule (up to the
-            # expansion-form float caveat in _kernel_assign), same means.
-            asn = _kernel_assign(emb, cent, with_embedding=True).select(
+            # expansion-form float caveat in _nearest), same means.
+            asn = _kernel_assign(emb, cent).select(
                 "vec_id",
                 F.transform("embedding", lambda x: x.cast("double")).alias("xe"),
                 F.col("cell").alias("cid"),
@@ -701,23 +777,7 @@ def kmeans_centroids(
                 .withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") == 1)
             )
-        means = (
-            asn.select("cid", F.posexplode("xe").alias("pos", "x"))
-            .groupBy("cid", (F.col("pos") + 1).alias("i"))
-            .agg(F.round(F.avg("x"), _R).alias("mi"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mi"))),
-                    lambda s: s.getField("mi"),
-                ).alias("me")
-            )
-        )
-        cent = (
-            cent.withColumnRenamed("ce", "pe")
-            .join(means, "cid", "left")
-            .select("cid", F.coalesce("me", "pe").alias("ce"))
-        )
+        cent = _lloyd_update(cent, asn, "xe", "cid")
         # Lineage cut per Lloyd iteration — FOLD PATH ONLY (r11, both
         # directions measured at sf1): the fold path broadcasts cent_t
         # in-plan, so each iteration's broadcast build re-executes
@@ -828,6 +888,47 @@ SELECT qid, cand_id, cosine, rnk FROM (
 )
 
 
+def _l2_to_centroid(a: str) -> Column:
+    """Rounded squared L2 of the float array ``a`` to the centroid ``ce``
+    (the oracles' ``round(sum(pow(x − c, 2)), _R)``)."""
+    return F.round(
+        sqdist(F.transform(a, lambda x: x.cast("double")), F.col("ce")), _R
+    )
+
+
+def _ivf_assign(e: DataFrame, cent: DataFrame, n_emb: int, *carry: str) -> DataFrame:
+    """Every IVF candidate (``vec_id >= IVF_Q_HI``) in its nearest cell:
+    the tiny centroid table broadcast against the candidate scan, then a
+    per-vector argmin (window rank over vec_id, an evenly-keyed shuffle).
+    Returns ``(vec_id, *carry, cell)``."""
+    w_vec = Window.partitionBy("vec_id").orderBy("d", "cid")
+    return (
+        spread(e.where(F.col("vec_id") >= IVF_Q_HI), "vec_id", n_rows=n_emb)
+        .crossJoin(F.broadcast(cent))
+        .select("vec_id", *carry, "cid", _l2_to_centroid("embedding").alias("d"))
+        .withColumn("rn", F.row_number().over(w_vec))
+        .where(F.col("rn") == 1)
+        .select("vec_id", *carry, F.col("cid").alias("cell"))
+    )
+
+
+def _ivf_probe(e: DataFrame, cent: DataFrame) -> DataFrame:
+    """The IVF query batch (``vec_id`` in ``[IVF_Q_LO, IVF_Q_HI)``) with the
+    :data:`N_PROBE` cells nearest each query: ``(qid, qe, cell)``, one row
+    per probed cell (same metric and tie rule as the quantizer)."""
+    q = e.where(
+        (F.col("vec_id") >= IVF_Q_LO) & (F.col("vec_id") < IVF_Q_HI)
+    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
+    w_q = Window.partitionBy("qid").orderBy("d", "cid")
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .select("qid", "qe", "cid", _l2_to_centroid("qe").alias("d"))
+        .withColumn("rn", F.row_number().over(w_q))
+        .where(F.col("rn") <= N_PROBE)
+        .select("qid", "qe", F.col("cid").alias("cell"))
+    )
+
+
 @register(
     "similarity_ivf_topk",
     _IVF_ORACLE_SQL,
@@ -856,53 +957,17 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     n_emb = corpus_count(spark, sf_dir, "embeddings")
     cent = kmeans_centroids(train_sample(e), n_rows=n_emb // TRAIN_SAMPLE_MOD)
-    cand = e.where(F.col("vec_id") >= IVF_Q_HI)
-    q = e.where(
-        (F.col("vec_id") >= IVF_Q_LO) & (F.col("vec_id") < IVF_Q_HI)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-
-    def cos(a: str, b: str) -> Column:
-        return F.round(
-            dot(F.col(a), F.col(b))
-            / (F.sqrt(sqnorm(F.col(a))) * F.sqrt(sqnorm(F.col(b)))),
-            6,
-        )
-
-    def d2(a: str) -> Column:
-        return F.round(
-            sqdist(F.transform(a, lambda x: x.cast("double")), F.col("ce")), _R
-        )
-
-    w_vec = Window.partitionBy("vec_id").orderBy("d", "cid")
-    asn = (
-        spread(cand, "vec_id", n_rows=n_emb)
-        .crossJoin(F.broadcast(cent))
-        .select("vec_id", "embedding", "cid", d2("embedding").alias("d"))
-        .withColumn("rn", F.row_number().over(w_vec))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("cid").alias("cell"))
-    )
-    w_q = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .select("qid", "qe", "cid", d2("qe").alias("d"))
-        .withColumn("rn", F.row_number().over(w_q))
-        .where(F.col("rn") <= N_PROBE)
-        .select("qid", "qe", F.col("cid").alias("cell"))
-    )
+    asn = _ivf_assign(e, cent, n_emb, "embedding")
     scored = (
-        asn.join(F.broadcast(probe), "cell")
+        asn.join(F.broadcast(_ivf_probe(e, cent)), "cell")
         .select(
             "qid",
             F.col("vec_id").alias("cand_id"),
-            cos("qe", "embedding").alias("cosine"),
+            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("cosine"),
         )
     )
-    w_topk = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_topk))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cand_id", "cosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("cosine"), "cand_id").select(
+        "qid", "cand_id", "cosine", "rnk"
     )
 
 
@@ -941,17 +1006,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is the distinct set of dropped ids. This composes with
     ``documents`` joins for text-level corpus dedup at 100 TB: banded bucket
     join → rescore → anti-join the dropped ids against the corpus."""
-    pairs = _lsh_candidate_pairs(spark, sf_dir)
-    e = table(spark, sf_dir, "embeddings")
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt(sqnorm(F.col("emb_a"))) * F.sqrt(sqnorm(F.col("emb_b")))
-    )
     return (
-        pairs.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .where(cos >= DEDUP_COS_THRESHOLD)
+        _lsh_rescored(spark, sf_dir, DEDUP_COS_THRESHOLD)
         .select(F.col("vec_b").alias("dropped_vec_id"))
         .distinct()
     )
@@ -1066,12 +1122,9 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-derived k makes the fold-based crossJoin assignment O(n·k)
     # Catalyst folds (112 s at sf1) — train and assign via the Arrow
     # matmul kernel instead (see _kernel_assign; same rounded distances
-    # and tie rule up to the expansion-form float caveat noted there)
+    # and tie rule up to the expansion-form float caveat in _nearest)
     cent = kmeans_centroids(train_sample(e), k=k, kernel=True)
-    asn = _kernel_assign(e, cent, with_embedding=True).select(
-        "vec_id", "embedding", "cell", "d"
-    )
-    return _pairs_from_assignment(asn)
+    return _pairs_from_assignment(_kernel_assign(e, cent))
 
 
 def _cell_pairs(pdf):
@@ -1157,71 +1210,6 @@ ad AS (
 )
 
 
-def _kernel_assign2(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """Top-2 variant of :func:`_kernel_assign` for the epsilon-overlap
-    pass: every vector emits its nearest cell, plus its SECOND-nearest
-    whenever the rounded margin satisfies ``d2 − d1 ≤``
-    :data:`SEM_EPS_FRAC```·d1`` — both memberships carrying the distance
-    to THAT cell's centroid so the pair stage's typicality drop rule
-    stays per-cell. Tie order matches the oracle's ``ORDER BY d, cid``
-    for both ranks (stable argsort over cid-ordered columns); the margin
-    comparison runs on the shared-rounded distances with the identical
-    arithmetic in both engines, so membership is deterministic. Same
-    model-sized closure and one-scan shape as `_kernel_assign`."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    C = np.array([r["ce"] for r in rows], dtype=np.float64)
-    cids = np.array([r["cid"] for r in rows], dtype=np.int32)
-    nc = (C * C).sum(axis=1)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            D = np.round(
-                (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + nc[None, :],
-                _R,
-            )
-            order = np.argsort(D, axis=1, kind="stable")
-            ii = np.arange(len(X))
-            j1 = order[:, 0]
-            d1 = D[ii, j1]
-            prim = pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "embedding": pdf["embedding"],
-                    "cell": cids[j1],
-                    "d": d1,
-                }
-            )
-            if D.shape[1] < 2:
-                # single trained centroid (train sample yields one seed on
-                # a degenerate corpus): no second-nearest cell exists —
-                # emit primary memberships only, exactly the oracle's
-                # behavior (its rn=2 rows are simply absent). r10 ADVICE.
-                yield prim
-                continue
-            j2 = order[:, 1]
-            d2 = D[ii, j2]
-            sec = (d2 - d1) <= SEM_EPS_FRAC * d1
-            ovf = pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[sec],
-                    "embedding": pdf["embedding"][sec],
-                    "cell": cids[j2[sec]],
-                    "d": d2[sec],
-                }
-            )
-            yield pd.concat([prim, ovf], ignore_index=True)
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        fn, schema="vec_id long, embedding array<float>, cell int, d double"
-    )
-
-
 @register(
     "dedup_semantic_pairs_overlap",
     _SEM_OVERLAP_ORACLE,
@@ -1262,7 +1250,7 @@ def dedup_semantic_pairs_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
     cent = kmeans_centroids(train_sample(e), k=k, kernel=True)
-    return _pairs_from_assignment(_kernel_assign2(e, cent))
+    return _pairs_from_assignment(_kernel_assign(e, cent, overlap=True))
 
 
 _SEM_INCR_ORACLE = (
@@ -1411,9 +1399,9 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "sem_base_asn",
         sf_dir,
-        lambda: _kernel_assign(base, cent, with_embedding=True),
+        lambda: _kernel_assign(base, cent),
     )
-    batch_asn = _kernel_assign(e.where(in_batch("vec_id")), cent, with_embedding=True)
+    batch_asn = _kernel_assign(e.where(in_batch("vec_id")), cent)
     # Scope the base side to the BATCH's cells before the cell-keyed
     # shuffle (r10 VERDICT ask #1): base cells the batch never touches can
     # only feed kernels that return empty (every emitted pair involves a
@@ -1620,30 +1608,25 @@ def _hier_assignment(spark: SparkSession, sf_dir: str):
     # md5(cid), cid LIMIT k2), planned as a distributed top-k; ONLY the
     # k2 = O(√k) pivot rows are collected — the pivot matrix is the one
     # piece small enough to ship via closure at this tier's target scale
-    piv_rows = sorted(
-        cent.orderBy(F.md5(F.col("cid").cast("string")), "cid")
-        .limit(k2)
-        .collect(),
-        key=lambda r: r["cid"],
+    P, pc = _centroid_matrix(
+        cent.orderBy(F.md5(F.col("cid").cast("string")), "cid").limit(k2)
     )
-    P = np.array([r["ce"] for r in piv_rows], dtype=np.float64)
-    pc = np.array([r["cid"] for r in piv_rows], dtype=np.int32)
-    npv = (P * P).sum(axis=1)
 
+    # the SEM_PROBE2 = 2 nearest pivots; a model with a single pivot has no
+    # second-nearest, so p2 repeats p1 and the vector probes the one pivot
+    # that exists — the oracle's probe CTE (no rn = 2 row)
     def probe_fn(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nx = (X * X).sum(axis=1)[:, None]
-            DP = np.round(nx - 2.0 * (X @ P.T) + npv[None, :], _R)
-            probed = pc[np.argsort(DP, axis=1, kind="stable")[:, :SEM_PROBE2]]
+            j1, _, j2, _ = _nearest(X, P, top2=True)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "embedding": pdf["embedding"],
-                    "p1": probed[:, 0],
-                    "p2": probed[:, 1],
+                    "p1": pc[j1],
+                    "p2": pc[j1 if j2 is None else j2],
                     "salt": (pdf["vec_id"].to_numpy() % SEM_SALT).astype(
                         "int32"
                     ),
@@ -1719,19 +1702,13 @@ def _hier_assignment(spark: SparkSession, sf_dir: str):
         Cc = np.array(list(cent_pdf["ce"]), dtype=np.float64)
         cc = cent_pdf["cid"].to_numpy()
         X = np.array(list(vec_pdf["embedding"]), dtype=np.float64)
-        D = np.round(
-            (X * X).sum(axis=1)[:, None]
-            - 2.0 * (X @ Cc.T)
-            + (Cc * Cc).sum(axis=1)[None, :],
-            _R,
-        )
-        j = D.argmin(axis=1)
+        j, d, _, _ = _nearest(X, Cc)
         return pd.DataFrame(
             {
                 "vec_id": vec_pdf["vec_id"].to_numpy(),
                 "embedding": vec_pdf["embedding"],
                 "cell": cc[j].astype("int32"),
-                "d": D[np.arange(len(j)), j],
+                "d": d,
             }
         )
 
@@ -1806,31 +1783,21 @@ def similarity_semantic_cell_quality(spark: SparkSession, sf_dir: str) -> DataFr
     import numpy as np
     import pandas as pd
 
-
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(corpus_count(spark, sf_dir, "embeddings"))
     cent = kmeans_centroids(train_sample(e), k=k, kernel=True)
-    rows = sorted(cent.collect(), key=lambda r: r["cid"])
-    C = np.array([r["ce"] for r in rows], dtype=np.float64)
-    cids = np.array([r["cid"] for r in rows], dtype=np.int32)
-    nc = (C * C).sum(axis=1)
+    C, cids = _centroid_matrix(cent)
 
+    # a single trained centroid has no second-nearest: d2 is NaN, which
+    # Arrow ships as NULL — the oracle's absent rn = 2 (mean_margin NULL)
     def fn(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            D = np.round(
-                (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + nc[None, :], _R
-            )
-            j = D.argmin(axis=1)
-            two = np.sort(D, axis=1)[:, :2]
+            j1, d1, _, d2 = _nearest(X, C, top2=True)
             yield pd.DataFrame(
-                {
-                    "cell": cids[j],
-                    "d1": two[:, 0],
-                    "d2": two[:, 1],
-                }
+                {"cell": cids[j1], "d1": d1, "d2": np.nan if d2 is None else d2}
             )
 
     per_vec = e.select("vec_id", "embedding").mapInPandas(
@@ -1958,30 +1925,18 @@ def dedup_embedding_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataF
     from ufload_spark.operators.dedup import min_label_components
     from ufload_spark.sources.loader import memo_read
 
-    def _confirmed_edges() -> DataFrame:
-        pairs = _lsh_candidate_pairs(spark, sf_dir)
-        e_ = table(spark, sf_dir, "embeddings")
-        ea = e_.select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-        )
-        eb = e_.select(
-            F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-        )
-        cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-            F.sqrt(sqnorm(F.col("emb_a"))) * F.sqrt(sqnorm(F.col("emb_b")))
-        )
-        return (
-            pairs.join(ea, "vec_a")
-            .join(eb, "vec_b")
-            .where(cos >= DEDUP_COS_THRESHOLD)
-            .select("vec_a", "vec_b")
-        )
-
     # the confirmed edge graph is deterministic per fixture (seeded
     # planes, rounded sign decisions; the oracle hash-match pins the
     # cosine-confirm step), so it publishes once per (process, fixture)
     # like the MinHash pair graph
-    sim = memo_read(spark, "embedding_cluster_pairs", sf_dir, _confirmed_edges)
+    sim = memo_read(
+        spark,
+        "embedding_cluster_pairs",
+        sf_dir,
+        lambda: _lsh_rescored(spark, sf_dir, DEDUP_COS_THRESHOLD).select(
+            "vec_a", "vec_b"
+        ),
+    )
     e = table(spark, sf_dir, "embeddings")
     comp = min_label_components(sim).select(
         F.col("n").alias("vec_id"), F.col("m").alias("cluster_id")
@@ -2007,11 +1962,6 @@ def dedup_embedding_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-#: per-process memo of the published IVF index (centroids, inverted lists)
-#: per fixture dir — see the consistency note in the build phase below
-_IVF_INDEX_CACHE: dict[str, tuple[str, str]] = {}
-
-
 @register(
     "similarity_ivf_incremental",
     _IVF_ORACLE_SQL,
@@ -2033,90 +1983,47 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the skip-if-unchanged download memo (ufload
     db.py:695-711) — expensive artifact built once, consulted by every later
     run instead of rebuilt."""
-    import os as _os
-
-    from ufload_spark.sources.loader import _scratch_unique, sf_tag, stage_and_publish
+    from ufload_spark.sources.loader import memo_read
 
     e = table(spark, sf_dir, "embeddings")
-    sfx = sf_tag(sf_dir)
-
-    def d2(a: str) -> Column:
-        return F.round(
-            sqdist(F.transform(a, lambda x: x.cast("double")), F.col("ce")), _R
-        )
-
+    n_emb = corpus_count(spark, sf_dir, "embeddings")
     # ---- build phase: executes eagerly on FIRST use per (process, fixture);
     # the trained index is bit-deterministic (content-addressed sample,
     # hash-ordered init), so repeat invocations re-read the published index —
     # the built-once/queried-many lifecycle this query exists to model
-    # (memo rationale at loader._MEMO_PUBLISHED). Both artifacts publish
-    # from ONE
-    # training run: the inverted lists must be assignments to exactly the
-    # centroid table they ship with.
-    key = _os.path.abspath(sf_dir)
-    cached = _IVF_INDEX_CACHE.get(key)
-    if cached is not None and all(
-        _os.path.exists(_os.path.join(p, "_SUCCESS")) for p in cached
-    ):
-        cent_path, inv_path = cached
-    else:
-
-        n_emb = corpus_count(spark, sf_dir, "embeddings")
-        cent = kmeans_centroids(
+    # (memo rationale at loader._MEMO_PUBLISHED). The centroids are bounded
+    # by k (N_CENTROIDS rows) — one file, not one per shuffle partition; the
+    # inverted lists are corpus-sized, so their layout stays with the
+    # upstream partitioning. The lists are assignments to the PUBLISHED
+    # centroid copy, so a rebuilt list can never disagree with the model it
+    # ships with.
+    pcent = memo_read(
+        spark,
+        "ivf_centroids",
+        sf_dir,
+        lambda: kmeans_centroids(
             train_sample(e), n_rows=n_emb // TRAIN_SAMPLE_MOD
-        )
-        w_vec = Window.partitionBy("vec_id").orderBy("d", "cid")
-        inv = (
-            spread(
-                e.where(F.col("vec_id") >= IVF_Q_HI), "vec_id", n_rows=n_emb
-            )
-            .crossJoin(F.broadcast(cent))
-            .select("vec_id", "cid", d2("embedding").alias("d"))
-            .withColumn("rn", F.row_number().over(w_vec))
-            .where(F.col("rn") == 1)
-            .select(F.col("cid").alias("cell"), "vec_id")
-        )
-        cent_path = _scratch_unique(f"ivf_centroids_{sfx}")
-        inv_path = _scratch_unique(f"ivf_invlists_{sfx}")
-        # centroids are bounded by k (N_CENTROIDS rows) — one file, not one
-        # per shuffle partition; the inverted lists are corpus-sized, so
-        # their layout stays with the upstream partitioning
-        stage_and_publish(spark, cent, cent_path, partitions=1)
-        stage_and_publish(spark, inv, inv_path)
-        _IVF_INDEX_CACHE[key] = (cent_path, inv_path)
+        ).repartition(1),
+    )
+    pinv = memo_read(
+        spark,
+        "ivf_invlists",
+        sf_dir,
+        lambda: _ivf_assign(e, pcent, n_emb).select("cell", "vec_id"),
+    )
 
     # ---- query phase: persisted index + corpus scan only ----
-    pcent = spark.read.parquet(cent_path)
-    pinv = spark.read.parquet(inv_path)
-    q = e.where(
-        (F.col("vec_id") >= IVF_Q_LO) & (F.col("vec_id") < IVF_Q_HI)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
-    w_q = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        q.crossJoin(F.broadcast(pcent))
-        .select("qid", "qe", "cid", d2("qe").alias("d"))
-        .withColumn("rn", F.row_number().over(w_q))
-        .where(F.col("rn") <= N_PROBE)
-        .select("qid", "qe", F.col("cid").alias("cell"))
-    )
     scored = (
-        pinv.join(F.broadcast(probe), "cell")
+        pinv.join(F.broadcast(_ivf_probe(e, pcent)), "cell")
         .join(e.select("vec_id", F.col("embedding").alias("cand_emb")), "vec_id")
         .select(
             "qid",
             F.col("vec_id").alias("cand_id"),
-            F.round(
-                dot(F.col("qe"), F.col("cand_emb"))
-                / (F.sqrt(sqnorm(F.col("qe"))) * F.sqrt(sqnorm(F.col("cand_emb")))),
-                6,
-            ).alias("cosine"),
+            F.round(cosine(F.col("qe"), F.col("cand_emb")), 6).alias("cosine"),
         )
     )
-    w_topk = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_topk))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cand_id", "cosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("cosine"), "cand_id").select(
+        "qid", "cand_id", "cosine", "rnk"
     )
 
 
@@ -2248,11 +2155,8 @@ def similarity_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("qcosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("qcosine"), "cid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cid", "qcosine", "rnk")
+    return _top_k(scored, TOP_K, F.desc("qcosine"), "cid").select(
+        "qid", "cid", "qcosine", "rnk"
     )
 
 
@@ -2342,23 +2246,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.any_value("sub").alias("sub"),
             )
         )
-        means = (
-            asn.select("m", "cid", F.posexplode("sub").alias("pos", "x"))
-            .groupBy("m", "cid", (F.col("pos") + 1).alias("i"))
-            .agg(F.round(F.avg("x"), _R).alias("mi"))
-            .groupBy("m", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mi"))),
-                    lambda s: s.getField("mi"),
-                ).alias("me")
-            )
-        )
-        cent = (
-            cent.withColumnRenamed("ce", "pe")
-            .join(means, ["m", "cid"], "left")
-            .select("m", "cid", F.coalesce("me", "pe").alias("ce"))
-        )
+        cent = _lloyd_update(cent, asn, "sub", "m", "cid")
         # Lineage cut per Lloyd iteration (r11, same as kmeans_centroids):
         # the next iteration's broadcast and the three downstream codebook
         # consumers (corpus encode, query distance table, ADC) otherwise
@@ -2580,11 +2468,8 @@ def _pq_adc_topk(e: DataFrame, books: DataFrame, codes: DataFrame) -> DataFrame:
         .groupBy("qid", "cand_id")
         .agg((F.sum("dmicro").cast("double") / 1e6).alias("approx_d"))
     )
-    wk = Window.partitionBy("qid").orderBy("approx_d", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .where(F.col("rnk") <= TOP_K)
-        .select("qid", "cand_id", "approx_d", "rnk")
+    return _top_k(scored, TOP_K, "approx_d", "cand_id").select(
+        "qid", "cand_id", "approx_d", "rnk"
     )
 
 
@@ -3029,16 +2914,9 @@ def similarity_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
         "true_label",
         "label",
-        F.round(
-            dot(F.col("qe"), F.col("ce"))
-            / (F.sqrt(sqnorm(F.col("qe"))) * F.sqrt(sqnorm(F.col("ce")))),
-            6,
-        ).alias("cosine"),
+        F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "cid")
-    topk = scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= TOP_K
-    )
+    topk = _top_k(scored, TOP_K, F.desc("cosine"), "cid")
     votes = topk.groupBy("qid", "true_label", "label").agg(
         F.count("*").alias("n_votes")
     )
@@ -3372,18 +3250,13 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def cos_micro(a, b) -> F.col:
-        return F.round(
-            dot(a, b) / (F.sqrt(sqnorm(a)) * F.sqrt(sqnorm(b))) * 1e6
-        ).cast("bigint")
+        return F.round(cosine(a, b) * 1e6).cast("bigint")
 
     scored = c.crossJoin(F.broadcast(q)).select(
         "qid", "cid", "ce", cos_micro(F.col("qe"), F.col("ce")).alias("rel")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("rel"), "cid")
     pool = keep(
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= MMR_POOL)
-        .select("qid", "cid", "ce", "rel")
+        _top_k(scored, MMR_POOL, F.desc("rel"), "cid").select("qid", "cid", "ce", "rel")
     )
     a = pool.select("qid", F.col("cid").alias("ca"), F.col("ce").alias("ea"))
     b = pool.select("qid", F.col("cid").alias("cb"), F.col("ce").alias("eb"))
@@ -3633,11 +3506,12 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.where(F.col("vec_id") >= 5).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("emb_c")
     )
-    cos = dot(F.col("emb_q"), F.col("emb_c")) / (
-        F.sqrt(sqnorm(F.col("emb_q"))) * F.sqrt(sqnorm(F.col("emb_c")))
-    )
     return (
         c.crossJoin(F.broadcast(q))
-        .select("qid", "cid", F.round(cos, 6).alias("cosine"))
+        .select(
+            "qid",
+            "cid",
+            F.round(cosine(F.col("emb_q"), F.col("emb_c")), 6).alias("cosine"),
+        )
         .where(F.col("cosine") >= RANGE_COS_T)
     )
