@@ -78,6 +78,55 @@ def test_partition_sizing_has_one_owner():
     assert sized == []
 
 
+#: a batch parquet read, with or without reader options, and a frame built
+#: from driver-side values
+_CONTROL_PLANE_CALLS = re.compile(
+    r"\bread(?:\.\w+\([^()]*\))*\.parquet\(|\bcreateDataFrame\("
+)
+
+#: the helpers in `sources/tables.py` that own those calls
+_CONTROL_PLANE_OWNERS = {"local_frame", "footers", "read_parquet"}
+
+#: calls outside the helpers, per module, each with its reason
+_ALLOWED_CONTROL_PLANE = {
+    # the schema-evolution query reads with mergeSchema: its schema is the
+    # union of every file's footer, which is what the query demonstrates,
+    # not the first file's schema `read_parquet` takes
+    "sources/formats.py": 1,
+}
+
+
+def test_control_plane_frames_have_one_owner():
+    """Every frame over Python values goes through `tables.local_frame`
+    (an Arrow-built `LocalRelation`: no job, no Python worker) and every
+    parquet read through `tables.read_parquet` / `tables.footers` (schema
+    and row count from a driver-side footer read, no inference or count
+    job): `createDataFrame(` and `read.parquet(` appear only inside those
+    helpers, or in the allow-listed modules."""
+    import ast
+
+    engine = OPERATORS.parent
+    owner = engine / "sources" / "tables.py"
+    spans = [
+        (node.lineno, node.end_lineno)
+        for node in ast.parse(owner.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name in _CONTROL_PLANE_OWNERS
+    ]
+    assert len(spans) == len(_CONTROL_PLANE_OWNERS)
+    found = {}
+    for path in sorted(engine.rglob("*.py")):
+        src = path.read_text()
+        lines = [
+            src.count("\n", 0, m.start()) + 1
+            for m in _CONTROL_PLANE_CALLS.finditer(src)
+        ]
+        if path == owner:
+            lines = [n for n in lines if not any(a <= n <= b for a, b in spans)]
+        if lines:
+            found[str(path.relative_to(engine))] = len(lines)
+    assert found == _ALLOWED_CONTROL_PLANE
+
+
 #: .count() occurrences that are NOT driver-side materializations of a big
 #: frame, each justified where it appears
 _ALLOWED_COLLECT = {

@@ -19,7 +19,11 @@ from ufload_spark.sources.loader import (
 )
 from ufload_spark.sources.tables import (
     SPREAD_ROWS_PER_TASK,
+    TABLES,
+    footers,
+    local_frame,
     parallelism,
+    read_parquet,
     spread,
     table,
 )
@@ -124,6 +128,166 @@ def test_pointer_publish_reader_never_sees_missing(spark, tmp_path, monkeypatch)
     # superseded versions beyond keep_versions are swept; current survives
     versions = [p for p in os.listdir(tmp_path) if ".v." in p]
     assert len(versions) <= 2
+
+
+def _corrupt_footers(monkeypatch):
+    """Make the loader's footer read report one row more than the bytes
+    hold — a staged copy that disagrees with what its write observed."""
+    from ufload_spark.sources import loader
+
+    real = loader.footers
+
+    def lying(s, *paths):
+        schema, rows = real(s, *paths)
+        return schema, rows + 1
+
+    monkeypatch.setattr(loader, "footers", lying)
+
+
+def test_publish_audit_mismatch_keeps_target(spark, tmp_path, monkeypatch):
+    """Footer rows ≠ observed rows: the directory-swap publish raises, the
+    published target keeps its rows, and no staging or old copy is left."""
+    target = str(tmp_path / "t")
+    df = table(spark, SF_DIR, "region")
+    n = stage_and_publish(spark, df, target)
+    before = sorted(spark.read.parquet(target).collect())
+    _corrupt_footers(monkeypatch)
+    with pytest.raises(AuditError, match="staged copy is corrupt"):
+        stage_and_publish(spark, df.limit(2), target)
+    assert sorted(spark.read.parquet(target).collect()) == before
+    assert len(before) == n
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_versioned_audit_mismatch_keeps_pointer(spark, tmp_path, monkeypatch):
+    """Footer rows ≠ observed rows: the pointer publish raises before its
+    commit, the pointer still names the previous version, and the rejected
+    version dir and the lease are gone."""
+    from ufload_spark.sources import loader
+
+    target = str(tmp_path / "t")
+    df = table(spark, SF_DIR, "region")
+    n = loader.publish_versioned(spark, df, target)
+    pointer = (tmp_path / "t.current").read_text()
+    before = sorted(os.listdir(tmp_path))
+    _corrupt_footers(monkeypatch)
+    with pytest.raises(AuditError, match="write observed"):
+        loader.publish_versioned(spark, df.limit(2), target)
+    assert (tmp_path / "t.current").read_text() == pointer
+    assert loader.read_current(spark, target).count() == n
+    assert sorted(os.listdir(tmp_path)) == before
+    assert [p for p in before if ".v." in p] == [pointer]
+
+
+def _jobs_run(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"probe-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_footers_match(spark, *paths):
+    (schema, rows), jobs = _jobs_run(spark, lambda: footers(spark, *paths))
+    assert jobs == 0
+    inferred = spark.read.parquet(*paths)
+    assert schema == inferred.schema
+    assert rows == inferred.count()
+    back, jobs = _jobs_run(spark, lambda: read_parquet(spark, *paths))
+    assert jobs == 0
+    assert back.schema == inferred.schema
+
+
+def test_footers_match_inference_on_fixtures(spark):
+    """`footers` gives the schema and row count schema inference and a
+    `count()` give, for every fixture table (``events`` carries
+    TIMESTAMP(NANOS), read as bigint under the session's ``nanosAsLong``)."""
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    for name in TABLES:
+        _assert_footers_match(spark, f"{SF_DIR}/{name}.parquet")
+
+
+def test_footers_match_inference_on_spark_output(spark, tmp_path):
+    """A multi-file Spark output with a non-nullable column (made nullable,
+    as a file relation makes it), a multi-path segment read, and a
+    key=value partitioned directory; an empty directory raises as
+    inference does."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    src = spark.range(0, 300, numPartitions=3).select(
+        "id", (F.col("id") % 5).cast("string").alias("k")
+    )
+    assert not src.schema["id"].nullable
+    src.write.parquet(str(tmp_path / "multi"))
+    parts = [p for p in os.listdir(tmp_path / "multi") if p.endswith(".parquet")]
+    assert len(parts) == 3
+    _assert_footers_match(spark, str(tmp_path / "multi"))
+    assert footers(spark, str(tmp_path / "multi"))[0]["id"].nullable
+
+    segs = [str(tmp_path / "gate" / f"e{i:06d}") for i in range(3)]
+    for i, seg in enumerate(segs):
+        src.where(F.col("id") % 3 == i).write.parquet(seg)
+    _assert_footers_match(spark, *segs)
+
+    src.write.partitionBy("k").parquet(str(tmp_path / "by_k"))
+    part = str(tmp_path / "by_k")
+    assert read_parquet(spark, part).schema == spark.read.parquet(part).schema
+    assert footers(spark, part)[1] == 300
+
+    (tmp_path / "empty").mkdir()
+    for read in (footers, read_parquet, lambda s, p: s.read.parquet(p)):
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            read(spark, str(tmp_path / "empty"))
+
+
+def test_local_frame_round_trip(spark):
+    """`local_frame` keeps the exact schema (nullability included), NULLs,
+    dict rows and zero rows, and plans a `LocalRelation` that runs no job."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        BooleanType,
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType(
+        [
+            StructField("s", StringType()),
+            StructField("n", LongType(), nullable=False),
+            StructField("i", IntegerType()),
+            StructField("b", BooleanType()),
+            StructField("x", DoubleType()),
+            StructField("d", DecimalType(12, 2)),
+            StructField("day", DateType()),
+        ]
+    )
+    rows = [
+        ("a", 1, 7, True, 0.5, decimal.Decimal("1.25"), datetime.date(2020, 2, 29)),
+        (None, 2, None, None, None, None, None),
+    ]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    got, jobs = _jobs_run(spark, df.collect)
+    assert jobs == 0
+    assert [tuple(r) for r in got] == rows
+    by_name = local_frame(spark, [{"n": 3, "s": "q"}], "s string, n long")
+    assert [tuple(r) for r in by_name.collect()] == [("q", 3)]
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == schema and empty.collect() == []
 
 
 def test_empty_stage_rejected(spark, tmp_path):

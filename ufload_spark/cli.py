@@ -45,6 +45,7 @@ from ufload_spark.operators.listing import (
     latest_backup_per_instance,
     version_sort,
 )
+from ufload_spark.sources.tables import local_frame
 
 
 @dataclass
@@ -186,7 +187,8 @@ def restore_paths(
             rows.append((base, True, n, target))
         except AuditError as e:
             rows.append((base, False, 0, str(e)))
-    rep = spark.createDataFrame(
+    rep = local_frame(
+        spark,
         rows, "name string, ok boolean, dump_rows long, detail string"
     )
     return rep.select(
@@ -225,7 +227,8 @@ def restore(spark: SparkSession, cfg: Config, target_dir: str) -> DataFrame:
                 if f.endswith(".zip")
             )
         if cfg.dry_run:
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [(os.path.basename(p), "extract+stage+publish", target_dir) for p in paths],
                 "name string, planned_action string, target string",
             )

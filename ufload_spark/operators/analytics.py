@@ -23,7 +23,7 @@ from ufload_spark.lifetime import cut
 from ufload_spark.operators.listing import BACKUPS_CTE, backups
 from ufload_spark.functions.binning import suboctave_bin, suboctave_bin_sql
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread, table
+from ufload_spark.sources.tables import local_frame, read_parquet, spread, table
 
 
 @register(
@@ -1577,7 +1577,7 @@ def _cf_pairs_bucketed_table(spark: SparkSession, sf_dir: str) -> tuple[str, int
     )
     name = _unique_table(spark, f"cf_co_pairs_b_{sf_tag(sf_dir)}")
     (
-        spark.read.parquet(co_path)
+        read_parquet(spark, co_path)
         # one task per bucket → one file per bucket → the scan exposes the
         # sortBy order and the merge's SMJ needs no re-sort
         .repartition(n_buckets, "part_a", "part_b")
@@ -1807,7 +1807,7 @@ def part_similarity_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts are additive and the mod partitions customers, so this equals
     # popularity over the full incidence WITHOUT rebuilding it — the probe
     # never scans the train customers' baskets at all.
-    np_train = spark.read.parquet(np_path).select("part", F.col("n").alias("n_t"))
+    np_train = read_parquet(spark, np_path).select("part", F.col("n").alias("n_t"))
     np_batch = _cf_part_popularity(batch).select("part", F.col("n").alias("n_d"))
     npart = np_train.join(np_batch, "part", "full").select(
         "part",
@@ -3592,7 +3592,8 @@ def orders_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(conv(substring(md5(CAST(o_orderkey AS STRING)), 1, 12),"
                f" 16, 10) AS BIGINT) div {BOOT_M24}").alias("l0"),
     )
-    keys = spark.createDataFrame(
+    keys = local_frame(
+        spark,
         [(b, k1, k2, k3) for b, (k1, k2, k3) in enumerate(BOOT_KEYS)],
         "b int, k1 bigint, k2 bigint, k3 bigint",
     )

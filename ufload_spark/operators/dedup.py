@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, hand_up, keep, scope
 from ufload_spark.plans.registry import QUERIES, register
-from ufload_spark.sources.tables import in_batch, spread, table
+from ufload_spark.sources.tables import in_batch, read_parquet, spread, table
 
 K_HASHES = 8
 N_BANDS = 4  # bands of 2 rows each
@@ -447,7 +447,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Here the fixture stands in for both sides (batch = doc_id % 4 == 0,
     corpus = the rest); in production ``existing`` is
-    ``spark.read.parquet(sig_table)``. Survivors = batch docs whose bands
+    ``read_parquet(spark, sig_table)``. Survivors = batch docs whose bands
     all miss the corpus — the rows safe to append, after which their
     signatures are appended to the signature table too."""
     sigs = _minhash_sigs(spark, sf_dir)
@@ -1067,7 +1067,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = publish_scratch(
             spark, _bloom_dup_candidates(spark, sf_dir), "bloom_prefilter", sf_dir
         )
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 @register(

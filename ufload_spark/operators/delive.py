@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import local_frame, table
 
 #: DuckDB CTEs for the derived de-live inputs (FIXTURES.md §B3).
 DELIVE_CTE = """
@@ -227,7 +227,7 @@ def delive_create_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast lookup join."""
     u = users(spark, sf_dir)
     g = groups(spark, sf_dir)
-    spec = spark.createDataFrame(_NEW_USER_SPECS, "login string, dept string")
+    spec = local_frame(spark, _NEW_USER_SPECS, "login string, dept string")
     max_id = u.agg(F.max("id").alias("mx"))
     w = Window.orderBy("login")
     new_users = (

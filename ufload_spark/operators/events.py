@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ufload_spark.functions.binning import suboctave_bin, suboctave_bin_sql
 from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import local_frame, table
 
 
 TUMBLING_HOURLY_SQL = """
@@ -2789,9 +2789,9 @@ def events_funnel_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min(us).alias("t_view"))
     )
-    w = spark.createDataFrame(
-        [(h,) for h in FUNNEL_WINDOWS_H], "win_h int"
-    ).select("win_h", (F.col("win_h").cast("bigint") * 3600000000).alias("win_us"))
+    w = local_frame(spark, [(h,) for h in FUNNEL_WINDOWS_H], "win_h int").select(
+        "win_h", (F.col("win_h").cast("bigint") * 3600000000).alias("win_us")
+    )
     vw = v.crossJoin(F.broadcast(w))
     clicks = ev.where(F.col("event_type") == "click").select(
         "user_id", us.alias("t_e")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, keep, scope
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import spread, table
+from ufload_spark.sources.tables import read_parquet, spread, table
 
 #: total probability mass in micro-units, damping as an integer percentage
 PR_MASS = 1_000_000_000
@@ -878,7 +878,7 @@ def graph_lpa_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_members")
         )
         target = publish_scratch(spark, result, "lpa_bucketed_out", sf_dir)
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 def _modularity_oracle() -> str:
@@ -1156,7 +1156,7 @@ def graph_bfs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         result = _bfs_rounds(spark, sf_dir, edges, broadcast=False)
         target = publish_scratch(spark, result, "bfs_bucketed_out", sf_dir)
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 #: link-prediction output size
@@ -1464,7 +1464,7 @@ def graph_kcore_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scope():
         res = _kcore_curve(_customer_pairs(edges), broadcast=False)
         target = publish_scratch(spark, res, "kcore_bucketed_out", sf_dir)
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

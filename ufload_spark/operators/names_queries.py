@@ -21,6 +21,7 @@ from ufload_spark.functions.names import (
     match_any_wildcard,
 )
 from ufload_spark.plans.registry import register
+from ufload_spark.sources.tables import local_frame
 
 _FILE_CASES = [
     "OCG_MM1_WA-20160831-220427-A-UF2.1-2p3.dump",
@@ -44,7 +45,7 @@ SELECT * FROM (VALUES
     "plus the live fn[:-5] fallback branch (cli/main.py:77-78)",
 )
 def fn_file_to_db(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(n,) for n in _FILE_CASES], "name string")
+    df = local_frame(spark, [(n,) for n in _FILE_CASES], "name string")
     return df.select("name", file_to_db(F.col("name"), "pfx").alias("db_name"))
 
 
@@ -69,7 +70,7 @@ SELECT * FROM (VALUES
     doc="OP-FN-2 db→instance vs reference test_db.py golden outputs",
 )
 def fn_db_to_instance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(d,) for d in _DB_CASES], "db string")
+    df = local_frame(spark, [(d,) for d in _DB_CASES], "db string")
     return df.select("db", db_to_instance(F.col("db"), "prod").alias("instance"))
 
 
@@ -96,7 +97,7 @@ SELECT * FROM (VALUES
     doc="OP-FN-3 instance→cloud-dir dispatch chain (cloud.py:34-48)",
 )
 def fn_instance_to_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(i,) for i in _INST_CASES], "instance string")
+    df = local_frame(spark, [(i,) for i in _INST_CASES], "instance string")
     return df.select("instance", instance_to_dir(F.col("instance")).alias("dir"))
 
 
@@ -115,7 +116,7 @@ SELECT * FROM (VALUES
     doc="OP-FIL-4 any-of wildcard vs reference test_cloud.py golden outputs",
 )
 def fn_wildcard_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(n,) for n in _WILDCARD_FILES], "name string")
+    df = local_frame(spark, [(n,) for n in _WILDCARD_FILES], "name string")
     return df.select(
         "name",
         match_any_wildcard(F.col("name"), ["SZ1_NHL", "OCG_UG"]).alias("matched"),
@@ -133,8 +134,8 @@ SELECT * FROM (VALUES
     doc="OP-FN-5 drop-4-then-base64-decode (cloud.py:22-31)",
 )
 def fn_decrypt_password(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(
-        [("XXXXczNjcmV0LXB3",), ("AAAAaHVudGVyMg==",)], "enc string"
+    df = local_frame(
+        spark, [("XXXXczNjcmV0LXB3",), ("AAAAaHVudGVyMg==",)], "enc string"
     )
     return df.select("enc", decrypt_password(F.col("enc")).alias("pw"))
 
@@ -280,7 +281,7 @@ def fn_try_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin the three failure classes: unparseable cast, bigint overflow
     (max+1), and division by zero."""
     rows = [("7", 2), ("x", 0), ("9223372036854775807", 1), ("42", 0)]
-    df = spark.createDataFrame(rows, "s string, n int")
+    df = local_frame(spark, rows, "s string, n int")
     as_long = F.expr("try_cast(s AS BIGINT)")
     return df.select(
         "s",

@@ -64,7 +64,7 @@ from ufload_spark.sources.loader import (
     restore_first_viable,
     sf_tag,
 )
-from ufload_spark.sources.tables import parallelism
+from ufload_spark.sources.tables import local_frame, parallelism
 
 #: instances the composed query restores — bounded so the probe loop stays
 #: a handful of tiny Spark jobs at any fixture scale (the reference's ``-i``
@@ -388,7 +388,7 @@ def restore_instances(
             restore_one_instance(spark, zips_dir, i, m, t)
             for i, m, t in work
         ]
-    out = spark.createDataFrame(report_rows, _REPORT_SCHEMA)
+    out = local_frame(spark, report_rows, _REPORT_SCHEMA)
     if clean_stale:
         # stale_dropped = per-instance backup count − 1 (r11): row_number
         # is gapless and exactly one row per non-empty instance has rn=1,

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import local_frame, table
 
 BAND_S = 300  # range-join band: 5 minutes
 
@@ -1526,9 +1526,7 @@ def orders_forecast_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("cents") - F.lag("cents").over(w_day)).alias("dc"),
         (F.col("day") - F.lag("day").over(w_day)).alias("dd"),
     ).select("day", F.expr("(dc * 1000000) div dd").alias("s_micro"))
-    lags = spark.createDataFrame(
-        list(enumerate(HOLT_W)), "k bigint, w bigint"
-    )
+    lags = local_frame(spark, list(enumerate(HOLT_W)), "k bigint, w bigint")
     dec = "decimal(38,0)"
     lvl = (
         daily.select("day")
@@ -1931,9 +1929,7 @@ def orders_forecast_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ym") - F.lag("ym").over(w_day)).alias("dy"),
         (F.col("day") - F.lag("day").over(w_day)).alias("dd"),
     ).select("day", F.expr("dy div dd").alias("s_micro"))
-    lags = spark.createDataFrame(
-        list(enumerate(HOLT_W)), "k bigint, w bigint"
-    )
+    lags = local_frame(spark, list(enumerate(HOLT_W)), "k bigint, w bigint")
     lvl = (
         deseas.select("day")
         .crossJoin(F.broadcast(lags))

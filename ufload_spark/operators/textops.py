@@ -14,7 +14,13 @@ from pyspark.sql import functions as F
 
 from ufload_spark.lifetime import cut, keep
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import in_batch, spread, table
+from ufload_spark.sources.tables import (
+    in_batch,
+    local_frame,
+    read_parquet,
+    spread,
+    table,
+)
 
 #: Stopword alternation shared by Spark and the DuckDB oracles.
 _STOP = "the|a|and|of|to|in|is|it"
@@ -2586,7 +2592,7 @@ def _logreg_fit(spark: SparkSession, sf_dir: str):
     ONE aggregate over the published features with the current 1-row
     weight frame broadcast. Returns ``(feat, w)``: the published feature
     frame and the trained 1-row weight frame (w0..w4, milli units)."""
-    feat = spark.read.parquet(_logreg_feat_path(spark, sf_dir))
+    feat = read_parquet(spark, _logreg_feat_path(spark, sf_dir))
     return feat, _logreg_train_weights(spark, feat)
 
 
@@ -2596,7 +2602,8 @@ def _logreg_train_weights(spark: SparkSession, feat: DataFrame) -> DataFrame:
     per-step lineage cut on the weight frame is the HITS/LPA lesson —
     without it step k's broadcast subtree re-executes the whole step
     1..k−1 prefix."""
-    w = spark.createDataFrame(
+    w = local_frame(
+        spark,
         [tuple([0] * _LOGREG_NF)],
         ", ".join(f"w{j} long" for j in range(_LOGREG_NF)),
     )
@@ -2840,10 +2847,10 @@ def text_quality_logreg_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "logreg_base_model",
         sf_dir,
         lambda: _logreg_train_weights(
-            spark, spark.read.parquet(fpath).where(~in_batch())
+            spark, read_parquet(spark, fpath).where(~in_batch())
         ),
     )
-    batch = spark.read.parquet(fpath).where(in_batch())
+    batch = read_parquet(spark, fpath).where(in_batch())
     zsum = " + ".join(f"x{j} * w{j}" for j in range(_LOGREG_NF))
     return (
         batch.crossJoin(F.broadcast(w))

@@ -37,8 +37,11 @@ RUNTIME_CONF: dict[str, str] = {
     # state stores fix their partition count from this at first run — the
     # default 200 is pure overhead locally. A cluster deployment overrides.
     "spark.sql.shuffle.partitions": "32",
-    # push count/min/max straight into parquet footers (audit counts,
-    # skip-if-unchanged probes become metadata reads, no row scan)
+    # push count/min/max over a parquet scan into its footers (the job
+    # reads metadata, no rows). The loader's audit counts and corpus_count
+    # need no job at all (sources.tables.footers reads the footers on the
+    # driver); the conf stays for every other count() over parquet, whose
+    # plans would change without it
     "spark.sql.parquet.aggregatePushdown": "true",
 }
 

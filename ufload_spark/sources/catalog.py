@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import TABLES, register_views, table
+from ufload_spark.sources.tables import TABLES, local_frame, register_views, table
 
 
 def tables_df(spark: SparkSession) -> DataFrame:
@@ -28,8 +28,8 @@ def tables_df(spark: SparkSession) -> DataFrame:
         (t.name, t.tableType, t.isTemporary)
         for t in spark.catalog.listTables()
     ]
-    return spark.createDataFrame(
-        rows, "table_name string, table_type string, is_temporary boolean"
+    return local_frame(
+        spark, rows, "table_name string, table_type string, is_temporary boolean"
     )
 
 
@@ -76,7 +76,7 @@ def catalog_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("events", table_exists(spark, "events")),
         ("no_such_table", table_exists(spark, "no_such_table")),
     ]
-    return spark.createDataFrame(rows, "table_name string, table_exists boolean")
+    return local_frame(spark, rows, "table_name string, table_exists boolean")
 
 
 # keep the imported helper referenced (used by callers composing catalog

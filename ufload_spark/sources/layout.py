@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
 from ufload_spark.sources.loader import _scratch_unique, sf_tag
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import read_parquet, table
 
 N_BUCKETS = 8
 
@@ -136,7 +136,7 @@ def layout_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = _scratch_unique(f"events_by_type_{sf_tag(sf_dir)}")
     ev = table(spark, sf_dir, "events")
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dest)
-    back = spark.read.parquet(dest).where(
+    back = read_parquet(spark, dest).where(
         F.col("event_type").isin("click", "purchase")
     )
     return back.groupBy("event_type").agg(
@@ -272,7 +272,7 @@ def layout_dynamic_partition_overwrite(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(dest)
     )
-    back = spark.read.parquet(dest)
+    back = read_parquet(spark, dest)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("cents").alias("total_cents"),

@@ -8,7 +8,9 @@ Here the same lifecycle is expressed over table directories:
 1. **stage**: write the DataFrame as parquet under ``<target>.staging.<pid>``
 2. **audit**: row count *observed during the staging write itself*
    (``df.observe`` — one scan of the source, no second pass) must equal the
-   staged copy's parquet-footer count — nothing is visible to readers yet
+   staged copy's parquet-footer count, read on the driver
+   (:func:`~ufload_spark.sources.tables.footers` — no job) — nothing is
+   visible to readers yet
 3. **publish**: atomically rename staging → target (old data, if any, is
    moved aside first and deleted only after the swap succeeds)
 
@@ -47,7 +49,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ufload_spark.plans.registry import register
-from ufload_spark.sources.tables import table
+from ufload_spark.sources.tables import footers, local_frame, read_parquet, table
 
 # Staging dirs younger than this are presumed to belong to a live concurrent
 # publish and are left alone; older ones are crash debris. Directory mtimes
@@ -157,9 +159,10 @@ def stage_and_publish(
         written = obs.get["rows"]
         if written == 0:
             raise AuditError(f"staged {staging} is empty")
-        # footer-metadata count of the staged copy — cheap (no column reads),
-        # and proves the bytes on disk agree with what the scan produced
-        audited = spark.read.parquet(staging).count()
+        # the staged copy's footer record counts, summed on the driver (no
+        # job, no column reads): proves the bytes on disk agree with what
+        # the scan produced
+        audited = footers(spark, staging)[1]
         if audited != written:
             raise AuditError(
                 f"staged {staging} has {audited} rows but the write observed "
@@ -412,7 +415,7 @@ def publish_versioned(
             written = obs.get["rows"]
             if written == 0:
                 raise AuditError(f"staged version {version} is empty")
-            audited = spark.read.parquet(version).count()
+            audited = footers(spark, version)[1]
             if audited != written:
                 raise AuditError(
                     f"version {version} has {audited} rows but the write observed "
@@ -561,7 +564,7 @@ def read_current(spark: SparkSession, target: str) -> DataFrame:
     name = _read_pointer(fs, jvm, target)
     if name is None:
         raise FileNotFoundError(f"no committed version for {target}")
-    return spark.read.parquet(os.path.join(os.path.dirname(target) or ".", name))
+    return read_parquet(spark, os.path.join(os.path.dirname(target) or ".", name))
 
 
 def version_history(spark: SparkSession, target: str) -> list[dict]:
@@ -610,8 +613,8 @@ def read_version(spark: SparkSession, target: str, n: int = 0) -> DataFrame:
         raise IndexError(
             f"{target} retains {len(history)} versions; cannot travel back {n}"
         )
-    return spark.read.parquet(
-        os.path.join(os.path.dirname(target) or ".", history[n]["name"])
+    return read_parquet(
+        spark, os.path.join(os.path.dirname(target) or ".", history[n]["name"])
     )
 
 
@@ -621,13 +624,14 @@ def should_reload(spark: SparkSession, memo_path: str, current_len: int) -> bool
     fs, jmemo, _ = _fs(spark, memo_path)
     if not fs.exists(jmemo):
         return True
-    row = spark.read.parquet(memo_path).select("length").first()
+    # the value needs a job; the schema comes from the footer
+    row = read_parquet(spark, memo_path).select("length").first()
     return row is None or row["length"] != current_len
 
 
 def record_loaded(spark: SparkSession, memo_path: str, length: int) -> None:
     """Overwrite the memo with the just-loaded length (ufload/db.py:709-711)."""
-    spark.createDataFrame([(length,)], "length long").coalesce(1).write.mode(
+    local_frame(spark, [(length,)], "length long").coalesce(1).write.mode(
         "overwrite"
     ).parquet(memo_path)
 
@@ -671,7 +675,7 @@ def publish_read(
 ) -> DataFrame:
     """:func:`publish_scratch`, then read the published copy back — the
     write-then-read every persisted-index tier runs once per invocation."""
-    return spark.read.parquet(publish_scratch(spark, df, name, sf_dir))
+    return read_parquet(spark, publish_scratch(spark, df, name, sf_dir))
 
 
 def memo_publish(spark: SparkSession, name: str, sf_dir: str, build) -> str:
@@ -689,7 +693,7 @@ def memo_publish(spark: SparkSession, name: str, sf_dir: str, build) -> str:
 
 def memo_read(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
     """The :func:`memo_publish` copy of ``build()``, read back."""
-    return spark.read.parquet(memo_publish(spark, name, sf_dir, build))
+    return read_parquet(spark, memo_publish(spark, name, sf_dir, build))
 
 
 def restore_first_viable(
@@ -935,7 +939,7 @@ def compact_published(
     ]
     total_bytes = sum(st.getLen() for st in files)
     n_out = max(1, math.ceil(total_bytes / target_bytes))
-    df = spark.read.parquet(version_dir)
+    df = read_parquet(spark, version_dir)
     rows = publish_versioned(
         spark, df.repartition(n_out), target, keep_versions=keep_versions
     )

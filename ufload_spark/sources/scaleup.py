@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ufload_spark.session import tune
-from ufload_spark.sources.tables import TABLES
+from ufload_spark.sources.tables import TABLES, read_parquet
 
 #: key shift per copy — far above any fixture key, far below int64 overflow
 STRIDE = 1_000_000_000_000
@@ -71,7 +71,7 @@ def _replicate(df: DataFrame, factor: int) -> DataFrame:
 
 
 def _scale_table(spark: SparkSession, src: str, name: str, factor: int) -> DataFrame:
-    df = spark.read.parquet(f"{src}/{name}.parquet")
+    df = read_parquet(spark, f"{src}/{name}.parquet")
     if name in _FIXED:
         return df
     out = _replicate(df, factor)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ufload_spark.session import tune
 
@@ -74,18 +75,153 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     to Catalyst — callers select/filter on the returned DataFrame."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    # spark.read.parquet re-reads footers for schema inference on every
-    # call — pure driver-side latency — so each session resolves a table
-    # once, the way a catalog would
+    # a read's schema is one driver-side footer read (:func:`read_parquet`,
+    # no job), but each call still lists the path and opens the footer, so
+    # each session resolves a table once, the way a catalog would
     tables = _session_memo(spark, "tables")
     df = tables.get((sf_dir, name))
     if df is None:
         tune(spark)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if name == "events":
             df = normalize_ts(df)
         tables[(sf_dir, name)] = df
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in field order, or
+    dicts keyed by field name) — the one place the engine builds a frame
+    from Python values.
+
+    The rows become a ``pyarrow.Table`` with the exact Spark types
+    (``to_arrow_schema``), which Spark plans as a ``LocalRelation``: no job
+    and no Python worker. ``createDataFrame(<list>)`` instead pickles the
+    rows, parallelizes them into ``defaultParallelism`` slices and runs an
+    identity map in Python workers, a fixed cost that grows with cores."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = [
+        tuple(r[f.name] for f in schema) if isinstance(r, dict) else tuple(r)
+        for r in rows
+    ]
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    data = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(data, schema)
+
+
+def _data_files(spark: SparkSession, paths) -> list:
+    """The parquet data files under ``paths`` (globs expanded, directories
+    walked), skipping what Spark's file index hides: names starting with
+    ``_`` (except ``key=value`` partition dirs) or ``.``, and in-flight
+    ``._COPYING_`` copies. Each root's files in name order."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+
+    def hidden(name: str) -> bool:
+        return (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+        )
+
+    def walk(fs, st) -> list:
+        if not st.isDirectory():
+            return [st]
+        children = sorted(
+            fs.listStatus(st.getPath()), key=lambda c: c.getPath().getName()
+        )
+        return [
+            f
+            for c in children
+            if not hidden(c.getPath().getName())
+            for f in walk(fs, c)
+        ]
+
+    files = []
+    for p in paths:
+        jpath = jvm.org.apache.hadoop.fs.Path(p)
+        fs = jpath.getFileSystem(conf)
+        for st in fs.globStatus(jpath) or []:
+            files += walk(fs, st)
+    return files
+
+
+def _open_footer(spark: SparkSession, status):
+    jvm = spark._jvm
+    return jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        )
+    )
+
+
+def _footer_schema(spark: SparkSession, reader) -> StructType:
+    """The schema Spark's parquet inference derives from one footer: the
+    Spark row metadata a Spark writer stores, else the parquet schema
+    converted under the session's SQL conf (so ``nanosAsLong`` and the
+    binary/INT96/NTZ rules apply), then made nullable as a file relation
+    makes it."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    jvm = spark._jvm
+    meta = reader.getFooter().getFileMetaData()
+    stored = meta.getKeyValueMetaData().get("org.apache.spark.sql.parquet.row.metadata")
+    struct = None
+    if stored is not None:
+        try:
+            struct = jvm.org.apache.spark.sql.types.DataType.fromJson(stored)
+        except Exception:
+            struct = None  # unreadable metadata: Spark falls back to the converter too
+    if struct is None:
+        conv = jvm.org.apache.spark.sql.execution.datasources.parquet
+        struct = conv.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()
+        ).convert(meta.getSchema())
+    return _parse_datatype_json_string(struct.asNullable().json())
+
+
+def footers(spark: SparkSession, *paths: str) -> tuple[StructType, int]:
+    """``(schema, rows)`` of the parquet data under ``paths``, read from the
+    footers on the driver: no job. The schema is the one inference gives
+    (first data file, :func:`_footer_schema`); the rows are the sum of
+    every data file's footer record count, the figure Spark's aggregate
+    pushdown computes for ``count()``. With no data file at all, Spark's
+    own inference decides: it raises on an empty or missing path."""
+    files = _data_files(spark, paths)
+    if not files:
+        return spark.read.parquet(*paths).schema, 0
+    schema, rows = None, 0
+    for st in files:
+        reader = _open_footer(spark, st)
+        try:
+            rows += reader.getRecordCount()
+            if schema is None:
+                schema = _footer_schema(spark, reader)
+        finally:
+            reader.close()
+    return schema, rows
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from the first
+    data file's footer on the driver instead of a schema-inference job.
+    The plan is the same (a user schema equal to the inferred one; key=value
+    partition columns are still discovered by the file index)."""
+    files = _data_files(spark, paths)
+    if not files:
+        return spark.read.parquet(*paths)  # Spark raises, as inference does
+    reader = _open_footer(spark, files[0])
+    try:
+        schema = _footer_schema(spark, reader)
+    finally:
+        reader.close()
+    return spark.read.schema(schema).parquet(*paths)
 
 
 #: The incremental tiers' stand-in for "a new batch against the published
@@ -158,9 +294,10 @@ def spread(
 #: (sf_dir, name) → row count. Corpus counts parameterize the
 #: self-bounding density knobs (LSH bits-per-band, record-linkage block
 #: fan-out, quantile-sample threshold, winnowing df cap): fixtures are
-#: immutable within a session, and a parquet count is a metadata-only
-#: footer scan, so one count per (dir, table) is the whole cost of making
-#: every knob scale-aware instead of a constant that is wrong at 100x.
+#: immutable within a session, and the count is the table's footer record
+#: counts summed on the driver (:func:`footers`, no job), so one footer read
+#: per (dir, table) is the whole cost of making every knob scale-aware
+#: instead of a constant that is wrong at 100x.
 _COUNT_CACHE: dict[tuple[str, str], int] = {}
 
 
@@ -172,9 +309,12 @@ def corpus_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     agree at any scale factor)."""
     import os as _os
 
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; have {TABLES}")
     key = (_os.path.abspath(sf_dir), name)
     if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = table(spark, sf_dir, name).count()
+        tune(spark)
+        _COUNT_CACHE[key] = footers(spark, f"{sf_dir}/{name}.parquet")[1]
     return _COUNT_CACHE[key]
 
 

@@ -50,19 +50,25 @@ from ufload_spark.operators.events import (
 )
 from ufload_spark.plans.registry import register
 from ufload_spark.session import tune
-from ufload_spark.sources.tables import in_batch, normalize_ts
+from ufload_spark.sources.tables import (
+    footers,
+    in_batch,
+    local_frame,
+    normalize_ts,
+    read_parquet,
+)
 
 _SINK_SEQ = itertools.count()
 
 
 def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the events parquet. The schema is taken from a
-    batch read (file sources need it declared up front); the ns-timestamp
+    """``readStream`` over the events parquet. The schema is taken from the
+    file's footer (file sources need it declared up front); the ns-timestamp
     conversion mirrors sources.tables (nanosAsLong, integer div — double
     division corrupts ns epochs beyond 2^53)."""
     tune(spark)
     path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = footers(spark, path)[0]
     # the file source wants a directory (or glob) — the fixture is a single
     # file, so address it through a trivial glob whose non-wildcard prefix
     # (the directory) becomes the basePath; a real deployment streams a
@@ -400,9 +406,9 @@ def streaming_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = batch.sparkSession
         bfs, bjtarget, _ = _fs(s, target)
         existing = (
-            s.read.parquet(target)
+            read_parquet(s, target)
             if bfs.exists(bjtarget)
-            else s.createDataFrame([], batch.schema)
+            else local_frame(s, [], batch.schema)
         )
         merged = merge_upsert(existing, batch, ["event_id"], on_duplicate="raise")
         stage_and_publish(s, merged, target)
@@ -410,7 +416,7 @@ def streaming_upsert_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="ufload-ckpt-upsert-")
     run_with_notify(sdf, upsert_batch, checkpoint_dir=ckpt)
     return (
-        spark.read.parquet(target)
+        read_parquet(spark, target)
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -770,12 +776,12 @@ def streaming_changepoint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def documents_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the documents parquet (schema from a batch
-    read, the file-source requirement; same trivial-glob device as
+    """``readStream`` over the documents parquet (schema from the file's
+    footer, the file-source requirement; same trivial-glob device as
     :func:`events_readstream`)."""
     tune(spark)
     path = f"{sf_dir}/documents.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = footers(spark, path)[0]
     return spark.readStream.schema(raw_schema).parquet(
         f"{sf_dir}/documents.[p]arquet"
     )
@@ -860,7 +866,7 @@ def _epoch_segments(spark: SparkSession, target: str, schema: str) -> DataFrame:
         if fs.exists(jtarget)
         else []
     )
-    return spark.read.parquet(*segs) if segs else spark.createDataFrame([], schema)
+    return read_parquet(spark, *segs) if segs else local_frame(spark, [], schema)
 
 
 def read_ingest_admitted(spark: SparkSession, target: str) -> DataFrame:
